@@ -8,15 +8,21 @@ order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 Implementation lives in ``mapreduce_implementation_grpc_spark``;
 this module is a thin adapter over its registry.
 
-Eager-query note: most queries build a lazy DataFrame (no Spark jobs
-until the driver acts on it; enforced by
-tests/test_contract.py::test_lazy_queries_build_cheaply). The
+Eager-query note: most queries build their DataFrame cheaply (a
+wall-time budget enforced by
+tests/test_contract.py::test_lazy_queries_build_cheaply), but cheap
+is not jobless. Loading a table runs no job (sources/catalog.py reads
+the schema from the parquet footer), yet a query that pins a shared
+materialization with ``materialize()`` runs its upstream stages at
+build time under AQE: ``purchase_pagerank`` fires 6 build jobs. The
 iterative algorithms -- ``dedup_clusters``, ``dedup_clusters_jaccard``,
-``curate_documents``, ``kmeans_cells``, ``ann_ivf_kmeans``,
-``ann_recall_ivf_kmeans``, ``ann_clustered_ivf_kmeans_recall``,
-``pq_codes``, ``pq_search``, ``ann_ivfpq``, ``ann_ivfpq_residual``,
-``semantic_dedup``, ``bpe_merges``, ``bpe_encode``,
-``cluster_topics`` --
+``curate_documents``, ``leakage_safe_split``, ``kmeans_cells``,
+``ann_ivf_kmeans``, ``ann_recall_ivf_kmeans``,
+``ann_clustered_ivf_kmeans_recall``, ``cluster_topics``, ``pq_codes``,
+``pq_search``, ``ann_ivfpq``, ``semantic_dedup``,
+``ann_ivfpq_residual``, ``bpe_merges``, ``bpe_encode``,
+``bpe_compression_by_lang``, ``pack_sequences_bpe``,
+``cosupply_kcore`` --
 run their training/propagation rounds at DataFrame-CONSTRUCTION time
 (inherent to iteration: each round's result feeds the next plan);
 the returned DataFrame is then cheap to act on.

@@ -14,8 +14,35 @@ the query side, LSH bucketing to kill the cross join).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def double_array_sql(values) -> str:
+    """SQL text of an array<double> literal of `values`.
+
+    Python's repr is the shortest string that round-trips, and Spark
+    parses ``D`` literals with Double.parseDouble, so every value
+    (-0.0 and subnormals included) arrives bit-exact. NaN and inf have
+    no SQL literal form and raise ValueError."""
+    parts = []
+    for v in values:
+        x = float(v)
+        if not math.isfinite(x):
+            raise ValueError(f"array literal: non-finite value {x!r}")
+        parts.append(f"{x!r}D")
+    return f"array({', '.join(parts)})"
+
+
+def lit_array(values) -> Column:
+    """array<double> literal of `values`, built in one JVM call.
+
+    ``F.array(*[F.lit(x) ...])`` makes py4j round trips per element;
+    this parses one ``array(<repr>D, ...)`` expression to the same
+    CreateArray of double literals (see double_array_sql)."""
+    return F.expr(double_array_sql(values))
 
 
 def dot_col(a: Column | str, b: Column | str) -> Column:

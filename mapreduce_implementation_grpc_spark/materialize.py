@@ -53,8 +53,11 @@ def materialize(df: DataFrame, reliable: bool | None = None) -> DataFrame:
     """Pin one shared materialization of `df` for multiple consumers.
 
     `reliable=None` reads the SPARK_GRAFT_RELIABLE_MATERIALIZE env
-    default ("1" -> True). Both paths are lazy: nothing runs until the
-    first consumer acts. Results are identical either way -- only the
+    default ("1" -> True). Only the persist path is lazy. Under AQE
+    (on in this engine's sessions), ``localCheckpoint(eager=False)``
+    runs the upstream stages when it is CALLED: the query build, not
+    the first consumer, pays those jobs (purchase_pagerank fires 6 of
+    them at build time). Results are identical either way -- only the
     executor-loss behavior differs (see module docstring).
     """
     if _resolve(reliable):

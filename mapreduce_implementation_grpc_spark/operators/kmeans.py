@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vectors import lit_array
+
 
 def _centroid_literal(cent_rows: list[tuple[int, list[float], float]]) -> Column:
     """Array-of-structs literal [(cell, cvec, cnorm2), ...] from the
@@ -39,7 +41,7 @@ def _centroid_literal(cent_rows: list[tuple[int, list[float], float]]) -> Column
         *[
             F.struct(
                 F.lit(int(cell)).cast("long").alias("cell"),
-                F.array(*[F.lit(float(x)) for x in cvec]).alias("cvec"),
+                lit_array(cvec).alias("cvec"),
                 F.lit(float(cnorm2)).alias("cnorm2"),
             )
             for cell, cvec, cnorm2 in cent_rows

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vectors import lit_array
 from .similarity import _mix64
 
 # offset the flat index so projection planes differ from LSH planes
@@ -59,7 +60,7 @@ def project_embeddings(
             F.aggregate(
                 F.zip_with(
                     F.col(vec_col),
-                    F.array(*[F.lit(w) for w in plane]),
+                    lit_array(plane),
                     lambda x, y: x.cast("double") * y,
                 ),
                 F.lit(0.0),

@@ -24,10 +24,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import dot_col, l2_norm_col
+from ..functions.vectors import double_array_sql, dot_col, l2_norm_col, lit_array
 from ..materialize import materialize
 
 DEFAULT_NUM_PLANES = 8
@@ -118,7 +118,7 @@ def synthetic_clustered_embeddings(
     center literal): no Python crossing, codegen-friendly, and at
     100 TB the generation is a narrow map over the id column."""
     centers = clustered_centers(n_clusters, dim)
-    flat = F.array(*[F.lit(float(x)) for row in centers for x in row])
+    flat = lit_array([x for row in centers for x in row])
     vid = F.col(id_col)
 
     def _dim_val(d):
@@ -146,7 +146,7 @@ def synthetic_clustered_embeddings(
     )
 
 
-def _bucket_col(vec, planes: list[list[float]]):
+def _bucket_col(vec_col: str, planes: list[list[float]]) -> Column:
     """LSH bucket id = integer of sign bits of plane dot products.
 
     Deliberately num_planes separate flat scalar-literal arrays: a
@@ -155,22 +155,30 @@ def _bucket_col(vec, planes: list[list[float]]):
     -- the subarray extraction happens per row instead of being
     constant-folded. ~80% of this query's sf0.1 latency is Catalyst
     planning of the wide literal tree, a fixed driver-side cost that
-    amortizes at scale."""
-    bucket = F.lit(0).cast("long")
+    amortizes at scale.
+
+    Written as one SQL expression, so building it is one JVM call;
+    through the Column API every plane costs dozens of py4j round
+    trips (~300 ms per 8-plane column on a 4-core host). The
+    expression is the Column-API form's: per plane
+    ``CASE WHEN aggregate(zip_with(v, <plane>, (x, y) -> CAST(x AS
+    DOUBLE) * y), 0.0D, (acc, v) -> acc + v) >= 0 THEN CAST(2^p AS
+    BIGINT) ELSE CAST(0 AS BIGINT) END``, summed from CAST(0 AS
+    BIGINT) (tests/test_similarity.py compares the two)."""
+    bucket = "CAST(0 AS BIGINT)"
     for p, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(w) for w in plane]), lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+        dot = (
+            f"aggregate(zip_with(`{vec_col}`, {double_array_sql(plane)}, "
+            "(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, v) -> acc + v)"
         )
-        bucket = bucket + F.when(dot >= 0, F.lit(2**p).cast("long")).otherwise(F.lit(0).cast("long"))
-    return bucket
+        bucket = f"({bucket} + CASE WHEN {dot} >= 0 THEN CAST({2**p} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
+    return F.expr(bucket)
 
 
 def with_lsh_bucket(
     emb: DataFrame, vec_col: str = "embedding", num_planes: int = DEFAULT_NUM_PLANES, dim: int = 64
 ) -> DataFrame:
-    return emb.withColumn("bucket", _bucket_col(F.col(vec_col), lsh_planes(num_planes, dim)))
+    return emb.withColumn("bucket", _bucket_col(vec_col, lsh_planes(num_planes, dim)))
 
 
 LSH_BANDS = 24
@@ -306,7 +314,7 @@ def ann_lsh_topk(
     corpus = with_lsh_bucket(emb, vec_col, num_planes, dim).select(
         "vec_id", F.col(vec_col).alias("vec"), "bucket", l2_norm_col(vec_col).alias("vnorm")
     )
-    q = queries.withColumn("bucket", _bucket_col(F.col("qvec"), planes)).withColumn(
+    q = queries.withColumn("bucket", _bucket_col("qvec", planes)).withColumn(
         "qnorm", l2_norm_col("qvec")
     )
     scored = (
@@ -355,7 +363,7 @@ def ann_lsh_multiprobe_topk(
         l2_norm_col(vec_col).alias("vnorm"),
     )
     q = queries.withColumn(
-        "qbucket", _bucket_col(F.col("qvec"), planes)
+        "qbucket", _bucket_col("qvec", planes)
     ).withColumn("qnorm", l2_norm_col("qvec"))
     probes = q.withColumn(
         "bucket",

@@ -63,11 +63,12 @@ def get_spark(
             # scalars pass as their JSON text (json.dumps keeps
             # true/false lowercase, which Spark parses; str() would
             # yield Python 'True'); nested values are rejected loudly
-            # instead of being set as Python reprs (ADVICE r10)
-            if isinstance(v, (dict, list)):
+            # instead of being set as Python reprs (ADVICE r10), and
+            # JSON null is rejected instead of becoming the string "null"
+            if v is None or isinstance(v, (dict, list)):
                 raise ValueError(
                     f"SPARK_GRAFT_CONF_JSON[{k!r}]: conf values must be "
-                    f"scalars, got {type(v).__name__}"
+                    f"non-null scalars, got {type(v).__name__}"
                 )
             builder = builder.config(
                 k, v if isinstance(v, str) else json.dumps(v)

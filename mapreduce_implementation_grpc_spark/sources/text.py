@@ -13,10 +13,10 @@ Reference surface covered (SURVEY.md section 2a):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .catalog import load_table
 
 
 def read_text_corpus(spark: SparkSession, path: str, min_partitions: int | None = None) -> DataFrame:
@@ -58,8 +58,7 @@ def corpus_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Column-pruned scan: only doc_id/text are read from parquet.
     """
-    path = os.path.join(sf_dir, "documents.parquet")
-    return spark.read.parquet(path).select("doc_id", F.col("text").alias("line"))
+    return load_table(spark, sf_dir, "documents").select("doc_id", F.col("text").alias("line"))
 
 
 def task_id_col(key: Column, num_tasks: int = 4) -> Column:

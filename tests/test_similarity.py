@@ -294,3 +294,49 @@ def test_mmr_rerank_oracle_parity(spark, sf_check):
         registry.ORACLES["mmr_rerank"],
         sf_check,
     )
+
+
+def test_lit_array_round_trips_bit_exact(spark):
+    import struct
+
+    from mapreduce_implementation_grpc_spark.functions.vectors import lit_array
+
+    values = [0.1, -2.75, -0.0, 1e-300, 5e-324, 1e16, 123456.789]
+    got = spark.range(1).select(lit_array(values).alias("a")).first().a
+    bits = lambda xs: [struct.pack(">d", x) for x in xs]  # noqa: E731
+    assert bits(got) == bits(values)
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError, match="non-finite"):
+            lit_array([1.0, bad])
+
+
+def test_bucket_col_matches_per_element_literals(spark, sf_check):
+    """The one-expression LSH bucket column has the plan and the
+    buckets of the Column-API form with one F.lit per element."""
+    from mapreduce_implementation_grpc_spark.operators.similarity import (
+        DEFAULT_NUM_PLANES,
+        _bucket_col,
+        lsh_planes,
+    )
+    from mapreduce_implementation_grpc_spark.sources import load_table
+
+    planes = lsh_planes(DEFAULT_NUM_PLANES, 64)
+
+    def per_element(vec):
+        bucket = F.lit(0).cast("long")
+        for p, plane in enumerate(planes):
+            dot = F.aggregate(
+                F.zip_with(vec, F.array(*[F.lit(w) for w in plane]), lambda x, y: x.cast("double") * y),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            )
+            bucket = bucket + F.when(dot >= 0, F.lit(2**p).cast("long")).otherwise(F.lit(0).cast("long"))
+        return bucket
+
+    emb = load_table(spark, sf_check, "embeddings")
+    new, old = _bucket_col("embedding", planes), per_element(F.col("embedding"))
+    plans = [emb.select(c.alias("bucket"))._jdf.queryExecution().optimizedPlan() for c in (new, old)]
+    assert plans[0].sameResult(plans[1])
+    rows = emb.select(new.alias("new"), old.alias("old")).collect()
+    assert len(rows) == 500
+    assert [r.new for r in rows] == [r.old for r in rows]
