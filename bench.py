@@ -121,6 +121,12 @@ FINAL_REPORT_QUERIES = [
     "nation_rank_spearman",
 ]
 
+FINAL_LINE_BUDGET = 1880  # chars; the harness keeps the last ~2000 of stdout
+
+
+class FinalLineBudgetError(ValueError):
+    """The pinned FINAL_REPORT_QUERIES alone overflow the final line."""
+
 
 def _run(df) -> None:
     """Fully evaluate the plan (all columns, all rows) without
@@ -238,6 +244,49 @@ def _run_tier(tier: str, names: list[str], runs: int, workdir: str,
     return frag["timings"]
 
 
+def final_line(
+    out: dict,
+    runs: int,
+    pinned: list[str] = FINAL_REPORT_QUERIES,
+    budget: int = FINAL_LINE_BUDGET,
+) -> str:
+    """The final stdout line: the totals of the document ``out``, the
+    timings of the ``pinned`` queries, then the slowest other timings
+    while the line stays within ``budget`` characters. Raises
+    FinalLineBudgetError when the pinned timings alone overflow it."""
+    timings = out["queries"]
+    final = {
+        "metric": "total_query_seconds",
+        "value": out["value"],
+        "unit": "sec",
+        "queries": {name: timings[name] for name in pinned if name in timings},
+        "sf": out["sf"],
+        "method": f"median_of_{runs};fresh_jvm_tiers",
+        "n_queries": len(timings),
+        "canary_total_sec": out["canary_total_sec"],
+        "eager_total_sec": out["eager_total_sec"],
+        "extended_total_sec": out["extended_total_sec"],
+        "n_queries_all": out["n_queries_all"],
+        "queries_omitted": 0,
+        "full": "BENCH.json",
+    }
+    size = len(json.dumps(final, separators=(",", ":")))
+    if size > budget:
+        raise FinalLineBudgetError(
+            f"the {len(final['queries'])} pinned timings make a {size}-char "
+            f"final line, over the {budget}-char budget"
+        )
+    for name in sorted(timings, key=timings.get, reverse=True):
+        if name in final["queries"]:
+            continue
+        final["queries"][name] = timings[name]
+        if len(json.dumps(final, separators=(",", ":"))) > budget:
+            del final["queries"][name]
+            break
+    final["queries_omitted"] = len(timings) - len(final["queries"])
+    return json.dumps(final, separators=(",", ":"))
+
+
 def main() -> None:
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     ext_runs = int(os.environ.get("SPARK_GRAFT_BENCH_EXT_RUNS", "1"))
@@ -341,34 +390,7 @@ def main() -> None:
     # whatever slowest extras still fit the budget. Timings and their
     # methodology are unchanged; only the reporting window membership
     # is deterministic now.
-    budget = 1880  # chars; driver tail window is ~2000
-    final = {
-        "metric": "total_query_seconds",
-        "value": total,
-        "unit": "sec",
-        "queries": {},
-        "sf": float(sf),
-        "method": f"median_of_{runs};fresh_jvm_tiers",
-        "n_queries": len(timings),
-        "canary_total_sec": out["canary_total_sec"],
-        "eager_total_sec": out["eager_total_sec"],
-        "extended_total_sec": out["extended_total_sec"],
-        "n_queries_all": out["n_queries_all"],
-        "queries_omitted": 0,
-        "full": "BENCH.json",
-    }
-    for name in FINAL_REPORT_QUERIES:
-        if name in timings:
-            final["queries"][name] = timings[name]
-    for name in sorted(timings, key=timings.get, reverse=True):
-        if name in final["queries"]:
-            continue
-        final["queries"][name] = timings[name]
-        if len(json.dumps(final, separators=(",", ":"))) > budget:
-            del final["queries"][name]
-            break
-    final["queries_omitted"] = len(timings) - len(final["queries"])
-    print(json.dumps(final, separators=(",", ":")))
+    print(final_line(out, runs))
 
 
 if __name__ == "__main__":

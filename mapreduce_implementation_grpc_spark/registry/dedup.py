@@ -1,4 +1,6 @@
-"""registry part 04: dedup (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""Registry queries for deduplication (exact, MinHash, SimHash, Jaccard,
+clusters), each with its DuckDB oracle.
+"""
 
 from __future__ import annotations
 
@@ -7,6 +9,8 @@ from .shared import (
     F,
     SparkSession,
     Window,
+    _SQL_SHINGLES,
+    _SQL_TOKS,
     analytics,
     dedup_clusters,
     exact_dedup,
@@ -19,13 +23,42 @@ from .shared import (
     simhash_near_dup_pairs,
     with_token_array,
 )
+from .oracle_builders import (
+    _dedup_clusters_sql,
+    _minhash_pairs_sql,
+    _simhash_pairs_sql,
+    _simhash_sql,
+)
+from .declare import query
 
 
-
+@query("dedup_exact", oracle="""
+      SELECT md5(trim(lower(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))) AS fp_md5,
+             min(doc_id) AS keep_doc_id, count(*) AS n_dups
+      FROM documents GROUP BY 1
+    """)
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup(load_table(spark, sf_dir, "documents"))
 
 
+@query("dedup_keep_best", oracle=f"""
+      WITH s AS (
+        SELECT doc_id,
+               md5(trim(lower(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))) AS fp_md5,
+               round(
+                 least(len(toks) / 50.0, 1.0) * 0.35
+                 + (1.0 - (length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))
+                          / greatest(length(text), 1)) * 0.25
+                 + (len(list_distinct(toks)) / greatest(len(toks), 1)) * 0.2
+                 + least(len(list_filter(toks, t -> t IN ('the','a','and','of','is'))) / 5.0, 1.0) * 0.2
+               , 6) AS quality
+        FROM ({_SQL_TOKS})),
+      r AS (SELECT fp_md5, doc_id, quality,
+                   row_number() OVER (PARTITION BY fp_md5 ORDER BY quality DESC, doc_id ASC) AS rn,
+                   count(*) OVER (PARTITION BY fp_md5) AS n_dups
+            FROM s)
+      SELECT fp_md5, doc_id AS keep_doc_id, quality, n_dups FROM r WHERE rn = 1
+    """)
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-ranked exact dedup (operators/dedup.keep_best_dedup):
     among exact duplicates keep the cleanest raw copy, not the
@@ -35,10 +68,41 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keep_best_dedup(load_table(spark, sf_dir, "documents"))
 
 
+@query("events_unpivot", oracle="""
+      WITH p AS (
+        SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+               CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
+               CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error,
+               CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
+               CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
+               CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view
+        FROM events GROUP BY 1)
+      UNPIVOT p ON click, error, purchase, signup, view INTO NAME event_type VALUE n
+    """)
 def q_events_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.events_unpivot(spark, sf_dir)
 
 
+@query("weighted_doc_sample", oracle=f"""
+      WITH q AS (
+        SELECT doc_id, lang,
+               round(
+                 least(len(toks) / 50.0, 1.0) * 0.35
+                 + (1.0 - (length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))
+                          / greatest(length(text), 1)) * 0.25
+                 + (len(list_distinct(toks)) / greatest(len(toks), 1)) * 0.2
+                 + least(len(list_filter(toks, t -> t IN ('the','a','and','of','is'))) / 5.0, 1.0) * 0.2
+               , 6) AS quality,
+               round(ln((CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) + 1)
+                        / 4294967297.0), 9) AS lnu
+        FROM ({_SQL_TOKS})),
+      r AS (SELECT doc_id, lang, quality,
+                   row_number() OVER (PARTITION BY lang
+                     ORDER BY lnu / quality DESC, doc_id ASC) AS rn
+            FROM q WHERE quality > 0)
+      SELECT doc_id, lang, quality, CAST(rn AS BIGINT) AS "rank"
+      FROM r WHERE rn <= 20
+    """)
 def q_weighted_doc_sample(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
     """Deterministic weighted sampling without replacement, per
     stratum (Efraimidis-Spirakis A-ES): each doc draws u from a
@@ -79,6 +143,26 @@ def q_weighted_doc_sample(spark: SparkSession, sf_dir: str, k: int = 20) -> Data
     )
 
 
+@query("events_profile", oracle="""
+      SELECT 'event_id' AS "column", count(*) AS n_rows,
+             count(*) - count(event_id) AS n_nulls,
+             count(DISTINCT event_id) AS n_distinct FROM events
+      UNION ALL SELECT 'ts' AS "column", count(*) AS n_rows,
+             count(*) - count(ts) AS n_nulls,
+             count(DISTINCT ts) AS n_distinct FROM events
+      UNION ALL SELECT 'user_id' AS "column", count(*) AS n_rows,
+             count(*) - count(user_id) AS n_nulls,
+             count(DISTINCT user_id) AS n_distinct FROM events
+      UNION ALL SELECT 'event_type' AS "column", count(*) AS n_rows,
+             count(*) - count(event_type) AS n_nulls,
+             count(DISTINCT event_type) AS n_distinct FROM events
+      UNION ALL SELECT 'value' AS "column", count(*) AS n_rows,
+             count(*) - count(value) AS n_nulls,
+             count(DISTINCT value) AS n_distinct FROM events
+      UNION ALL SELECT 'props' AS "column", count(*) AS n_rows,
+             count(*) - count(props) AS n_nulls,
+             count(DISTINCT props) AS n_distinct FROM events
+    """)
 def q_events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table profiling (the Deequ-style data-quality report): per
     column, row count, null count, and EXACT distinct count -- the
@@ -103,18 +187,71 @@ def q_events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
+@query("user_activity_decay", oracle="""
+      WITH r AS (
+        SELECT user_id, CAST(value AS DOUBLE) AS v,
+               row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+        FROM events)
+      SELECT user_id, count(*) AS n_events,
+             round(CAST(CAST(sum(CAST(round(v * power(0.5, rn), 9) AS DECIMAL(20,9)))
+                        AS VARCHAR) AS DOUBLE), 6) AS decayed_value
+      FROM r GROUP BY 1
+    """)
 def q_user_activity_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.user_activity_decay(spark, sf_dir)
 
 
+@query("user_activity_decay_fold", oracle="""
+      SELECT user_id, count(*) AS n_events,
+             round(list_reduce(
+               list_prepend(CAST(0.0 AS DOUBLE),
+                            list(CAST(value AS DOUBLE) ORDER BY ts, event_id)),
+               (acc, v) -> (acc + v) * 0.5), 6) AS decayed_value
+      FROM events GROUP BY 1
+    """)
 def q_user_activity_decay_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.user_activity_decay_fold(spark, sf_dir)
 
 
+@query("ngram_jaccard", oracle=f"""
+      WITH sh AS ({_SQL_SHINGLES}),
+      e AS (SELECT doc_id, unnest(shset) AS s FROM sh),
+      rare AS (SELECT s FROM e GROUP BY s HAVING count(*) BETWEEN 2 AND 3),
+      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+               FROM e a JOIN rare USING (s) JOIN e b USING (s)
+               WHERE a.doc_id < b.doc_id),
+      j AS (SELECT doc_a, doc_b,
+                   round(len(list_intersect(sa.shset, sb.shset))
+                         / len(list_distinct(list_concat(sa.shset, sb.shset))), 6) AS jaccard
+            FROM cand
+            JOIN sh sa ON sa.doc_id = cand.doc_a
+            JOIN sh sb ON sb.doc_id = cand.doc_b)
+      SELECT * FROM j WHERE jaccard >= 0.05
+    """)
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"))
 
 
+# oracle = all-pairs scan, restricted ONLY by the size lemma
+# (J >= t  =>  t*|b| <= |a| <= |b|/t: intersect <= min size,
+# union >= max size, so J <= min/max), which is independent of
+# the prefix filter under test -- the hash match still proves the
+# prefix candidate generation lossless, and the 4x pair cut keeps
+# the quadratic oracle runnable at sweep SFs.
+@query("jaccard_prefix_pairs", oracle=f"""
+      WITH g AS (SELECT doc_id, shset AS st FROM ({_SQL_SHINGLES})
+                 WHERE len(shset) > 0),
+      p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+              CAST(len(list_intersect(a.st, b.st)) AS BIGINT) AS inter,
+              CAST(len(a.st) + len(b.st) - len(list_intersect(a.st, b.st)) AS BIGINT)
+                AS union_sz
+            FROM g a JOIN g b ON a.doc_id < b.doc_id
+            WHERE len(a.st) * 5 >= len(b.st) * 4
+              AND len(b.st) * 5 >= len(a.st) * 4)
+      SELECT doc_a, doc_b, inter, union_sz,
+             round(CAST(inter AS DOUBLE) / union_sz, 6) AS jaccard
+      FROM p WHERE 5 * inter >= 4 * union_sz
+    """)
 def q_jaccard_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact set-similarity join at Jaccard >= 0.8 via lossless
     prefix filtering (operators/setjoin.py); oracle is the naive
@@ -124,10 +261,12 @@ def q_jaccard_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_prefix_pairs(load_table(spark, sf_dir, "documents"))
 
 
+@query("minhash_near_dup", oracle=_minhash_pairs_sql())
 def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_near_dup_pairs(load_table(spark, sf_dir, "documents"))
 
 
+@query("dedup_clusters", oracle=_dedup_clusters_sql())
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative connected components over the MinHash near-dup
     graph. max_iter=20 so min-label propagation provably reaches the
@@ -137,6 +276,18 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(load_table(spark, sf_dir, "documents"), max_iter=20)
 
 
+# connected components over the SQL-reproducible ngram-Jaccard
+# edges: recursive CTE = transitive min-label closure
+@query("leakage_safe_split", oracle=f"""
+      WITH cl AS ({_dedup_clusters_sql()}),
+      assigned AS (
+        SELECT d.doc_id, coalesce(cl.cluster, d.doc_id) AS cluster
+        FROM documents d LEFT JOIN cl ON d.doc_id = cl.doc_id)
+      SELECT doc_id, cluster,
+             CASE WHEN substring(md5(CAST(cluster AS VARCHAR)), 1, 1) = '0'
+                  THEN 'val' ELSE 'train' END AS split
+      FROM assigned
+    """)
 def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/val split: membership is decided per
     NEAR-DUP CLUSTER, not per document, so two near-duplicates can
@@ -161,6 +312,32 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("dedup_clusters_jaccard", oracle=f"""
+      WITH RECURSIVE base AS (
+        WITH sh AS ({_SQL_SHINGLES}),
+        e AS (SELECT doc_id, unnest(shset) AS s FROM sh),
+        rare AS (SELECT s FROM e GROUP BY s HAVING count(*) BETWEEN 2 AND 3),
+        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                 FROM e a JOIN rare USING (s) JOIN e b USING (s)
+                 WHERE a.doc_id < b.doc_id),
+        j AS (SELECT doc_a, doc_b,
+                     round(len(list_intersect(sa.shset, sb.shset))
+                           / len(list_distinct(list_concat(sa.shset, sb.shset))), 6) AS jaccard
+              FROM cand
+              JOIN sh sa ON sa.doc_id = cand.doc_a
+              JOIN sh sb ON sb.doc_id = cand.doc_b)
+        SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.05
+      ),
+      ee AS (SELECT doc_a, doc_b FROM base
+             UNION ALL
+             SELECT doc_b AS doc_a, doc_a AS doc_b FROM base),
+      cc AS (
+        SELECT doc_a AS doc_id, doc_a AS label FROM ee
+        UNION
+        SELECT ee.doc_a AS doc_id, cc.label FROM ee JOIN cc ON cc.doc_id = ee.doc_b
+      )
+      SELECT doc_id, min(label) AS cluster FROM cc GROUP BY doc_id
+    """)
 def q_dedup_clusters_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the EXACT ngram-Jaccard pair graph:
     the same iterative min-label propagation as dedup_clusters, but
@@ -174,6 +351,15 @@ def q_dedup_clusters_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return label_propagation(pairs, max_iter=20)
 
 
+@query("incremental_dedup", oracle="""
+      WITH fp AS (
+        SELECT doc_id,
+               md5(trim(lower(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))) AS fp_md5
+        FROM documents)
+      SELECT doc_id, fp_md5 FROM fp
+      WHERE doc_id % 10 = 0
+        AND fp_md5 NOT IN (SELECT fp_md5 FROM fp WHERE doc_id % 10 <> 0)
+    """)
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ingest dedup: treat doc_id % 10 == 0 as today's
     new batch and the rest as the existing corpus; return the novel
@@ -188,10 +374,12 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_dedup_exact(new_docs, corpus)
 
 
+@query("simhash", oracle=_simhash_sql())
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_fp(load_table(spark, sf_dir, "documents"))
 
 
+@query("simhash_pairs", oracle=_simhash_pairs_sql())
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming <= 8 of 60 bits: close fingerprints only (16+ admits
     vocabulary-level noise on this small-vocab corpus). Recall is

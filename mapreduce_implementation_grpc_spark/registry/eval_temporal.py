@@ -1,4 +1,6 @@
-"""registry part 10: eval_temporal (split from the monolithic registry.py in round 8; pre-split again in round 9 -- see tools/split_eval_temporal.py)."""
+"""Registry queries for evaluation statistics, record linkage and temporal
+analytics, each with its DuckDB oracle.
+"""
 
 from __future__ import annotations
 
@@ -7,15 +9,108 @@ from .shared import (
     F,
     SparkSession,
     Window,
+    _SQL_TOKS,
     embedding_dup_pairs,
     load_table,
     materialize,
     top_k,
     with_token_array,
 )
+from .oracle_builders import _banded_pairs_sql
+from .declare import query
 
 
+def _linkage_ctes() -> str:
+    """Shared WITH-body (master, corrupted contacts, blocked pairs,
+    FS scores) for the linkage report and golden-record oracles --
+    GENERATED from operators/linkage.fs_weights so the weight
+    literals can never drift from the Spark expression (the
+    pii_redact pattern); repr() of a Python double round-trips
+    exactly in both engines."""
+    from ..operators.linkage import fs_weights
 
+    w = fs_weights()
+    # CAST each literal: DuckDB types a bare decimal literal as
+    # DECIMAL, not DOUBLE -- the sum would be exact-decimal while
+    # Spark sums doubles
+    score = " + ".join(
+        f"CASE WHEN {f}_agree THEN CAST({wa!r} AS DOUBLE) "
+        f"ELSE CAST({wd!r} AS DOUBLE) END"
+        for f, (wa, wd) in w.items()
+    )
+    return f"""
+  WITH m AS (
+    SELECT c_custkey AS custkey, lower(c_name) AS nm, c_acctbal AS bal,
+           c_mktsegment AS seg, c_nationkey AS nat,
+           CAST(floor(c_acctbal) AS BIGINT) AS blk
+    FROM customer),
+  c AS (
+    SELECT c_custkey + 10000000 AS contact_id,
+           CASE WHEN c_custkey % 5 = 0
+                THEN substr(lower(c_name), 1, length(c_name) - 3)
+                ELSE lower(c_name) END AS nm,
+           CASE WHEN c_custkey % 3 = 0 THEN c_acctbal + 0.01
+                ELSE c_acctbal END AS bal,
+           c_mktsegment AS seg, c_nationkey AS nat
+    FROM customer),
+  p AS (
+    SELECT m.custkey, c.contact_id,
+           m.nm = c.nm AS nm_agree,
+           m.bal = c.bal AS bal_agree,
+           m.seg = c.seg AS seg_agree
+    FROM m JOIN c
+      ON m.nat = c.nat AND m.blk = CAST(floor(c.bal) AS BIGINT)),
+  s AS (SELECT custkey, contact_id, nm_agree, bal_agree, seg_agree,
+               ({score}) AS score
+        FROM p)"""
+
+
+def _sorted_neighborhood_oracle(window: int = 10) -> str:
+    """Oracle for q_linkage_sorted_neighborhood: reuses the m/c
+    record CTEs of _linkage_ctes (its blocked-pair CTEs go unused)
+    and mirrors the global rank + banded neighborhood + FS scoring.
+    Weight literals generated from fs_weights (never drift)."""
+    from ..operators.linkage import fs_weights
+
+    w = fs_weights()
+    score = " + ".join(
+        f"CASE WHEN {f}_agree THEN CAST({wa!r} AS DOUBLE) "
+        f"ELSE CAST({wd!r} AS DOUBLE) END"
+        for f, (wa, wd) in w.items()
+    )
+    return (
+        _linkage_ctes()
+        + f""",
+  u AS (
+    SELECT 0 AS role, custkey AS rid, nm, bal, seg, blk FROM m
+    UNION ALL
+    SELECT 1, contact_id, nm, bal, seg, CAST(floor(bal) AS BIGINT)
+    FROM c),
+  r AS (SELECT role, rid, nm, bal, seg, blk,
+               row_number() OVER (ORDER BY bal, role, rid) AS rn
+        FROM u),
+  pr AS (
+    SELECT a.rid AS custkey, b.rid AS contact_id,
+           abs(a.rn - b.rn) AS rank_gap,
+           a.blk <> b.blk AS cross_block,
+           a.nm = b.nm AS nm_agree,
+           a.bal = b.bal AS bal_agree,
+           a.seg = b.seg AS seg_agree
+    FROM r a JOIN r b
+      ON a.role = 0 AND b.role = 1 AND abs(a.rn - b.rn) <= {window}),
+  sn AS (SELECT custkey, contact_id, rank_gap, cross_block,
+                nm_agree, bal_agree, seg_agree, ({score}) AS score
+         FROM pr)
+  SELECT custkey, contact_id, CAST(rank_gap AS BIGINT) AS rank_gap,
+         cross_block, nm_agree, bal_agree, seg_agree, score,
+         score > 0.0 AS is_match
+  FROM sn ORDER BY (score > 0.0 AND cross_block) DESC, score DESC,
+                   custkey, contact_id
+  LIMIT 100"""
+    )
+
+
+@query("linkage_sorted_neighborhood", oracle=_sorted_neighborhood_oracle())
 def q_linkage_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood linkage
     (operators/linkage.sorted_neighborhood_pairs) over the SAME
@@ -31,6 +126,51 @@ def q_linkage_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame
     return sorted_neighborhood_pairs(master, contacts)
 
 
+# Holt smoothing as a recursive CTE stepping the identical exact
+# arithmetic (0.5 multiplies of thousand-micros-rounded states --
+# every intermediate an exact-integer double; both engines round
+# half-away-from-zero at negative digits, probed 2026-08-16).
+@query("nation_revenue_holt", oracle="""
+  WITH RECURSIVE monthly AS (
+    SELECT n_name AS nation,
+           CAST((year(o_orderdate) * 12 + month(o_orderdate))
+                - (1992 * 12 + 1) AS BIGINT) AS x,
+           CAST(CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
+                    * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))
+                    * 1000000 AS HUGEINT)) AS VARCHAR) AS DOUBLE) AS yd
+    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         JOIN nation ON c_nationkey = n_nationkey
+    GROUP BY 1, 2),
+  series AS (
+    SELECT nation, x, yd,
+           row_number() OVER (PARTITION BY nation ORDER BY x) AS i
+    FROM monthly),
+  mcount AS (SELECT nation, CAST(count(*) AS BIGINT) AS n_months
+             FROM monthly GROUP BY 1),
+  rec AS (
+    SELECT s2.nation, CAST(2 AS BIGINT) AS i, s2.yd AS l,
+           s2.yd - s1.yd AS b
+    FROM series s1 JOIN series s2
+      ON s1.nation = s2.nation AND s1.i = 1 AND s2.i = 2
+    UNION ALL
+    SELECT rec.nation, rec.i + 1,
+           round(CAST(0.5 AS DOUBLE) * s.yd
+                 + CAST(0.5 AS DOUBLE) * (rec.l + rec.b), -3) AS l,
+           round(CAST(0.5 AS DOUBLE)
+                 * (round(CAST(0.5 AS DOUBLE) * s.yd
+                          + CAST(0.5 AS DOUBLE) * (rec.l + rec.b), -3)
+                    - rec.l)
+                 + CAST(0.5 AS DOUBLE) * rec.b, -3) AS b
+    FROM rec JOIN series s
+      ON s.nation = rec.nation AND s.i = rec.i + 1),
+  last AS (SELECT nation, max(i) AS mi FROM rec GROUP BY 1)
+  SELECT rec.nation, n_months, l AS level, b AS trend,
+         l + b AS forecast_next
+  FROM rec JOIN last ON rec.nation = last.nation AND rec.i = last.mi
+       JOIN mcount ON mcount.nation = rec.nation
+  ORDER BY rec.nation
+""")
 def q_nation_revenue_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt linear (double) exponential smoothing per nation over the
     SAME exact monthly integer-micros revenue series as the OLS and
@@ -120,6 +260,52 @@ def q_nation_revenue_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Information gain: every entropy term from exact integer counts,
+# 9dp-rounded into order-independent decimal sums.
+@query("feature_information_gain", oracle="""
+  WITH f AS (
+    SELECT 'has_digit' AS feature,
+           CASE WHEN regexp_matches(text, '[0-9]') THEN 'y' ELSE 'n' END AS val,
+           CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
+    FROM documents
+    UNION ALL
+    SELECT 'len_bucket', CAST(least(9, n_chars // 200) AS VARCHAR),
+           CASE WHEN lang = 'en' THEN 1 ELSE 0 END
+    FROM documents
+    UNION ALL
+    SELECT 'source', source, CASE WHEN lang = 'en' THEN 1 ELSE 0 END
+    FROM documents),
+  cells AS (SELECT feature, val, y, CAST(count(*) AS BIGINT) AS nxy
+            FROM f GROUP BY 1, 2, 3),
+  nx AS (SELECT feature, val, CAST(sum(nxy) AS BIGINT) AS nx
+         FROM cells GROUP BY 1, 2),
+  nf AS (SELECT feature, CAST(sum(nxy) AS BIGINT) AS n
+         FROM cells GROUP BY 1),
+  hyx AS (
+    SELECT cells.feature,
+           sum(CAST(round(
+             -(CAST(nxy AS DOUBLE) / CAST(n AS DOUBLE))
+               * ln(CAST(nxy AS DOUBLE) / CAST(nx AS DOUBLE)), 9)
+             AS DECIMAL(12,9))) AS s
+    FROM cells JOIN nx USING (feature, val) JOIN nf USING (feature)
+    GROUP BY 1),
+  lab AS (SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
+                 CAST(count(*) AS BIGINT) AS ny
+          FROM documents GROUP BY 1),
+  nt AS (SELECT CAST(sum(ny) AS BIGINT) AS n FROM lab),
+  hy AS (
+    SELECT sum(CAST(round(
+             -(CAST(ny AS DOUBLE) / CAST(n AS DOUBLE))
+               * ln(CAST(ny AS DOUBLE) / CAST(n AS DOUBLE)), 9)
+             AS DECIMAL(12,9))) AS s
+    FROM lab, nt)
+  SELECT feature,
+         CAST(CAST(hy.s AS VARCHAR) AS DOUBLE) AS h_y,
+         CAST(CAST(hyx.s AS VARCHAR) AS DOUBLE) AS h_y_given_x,
+         CAST(CAST(hy.s AS VARCHAR) AS DOUBLE)
+           - CAST(CAST(hyx.s AS VARCHAR) AS DOUBLE) AS ig_nats
+  FROM hyx, hy ORDER BY feature
+""")
 def q_feature_information_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Information gain (mutual information, nats) of three document
     features for predicting lang='en' -- the feature-selection
@@ -186,6 +372,58 @@ def q_feature_information_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Dunning G2 keyness: four O ln(O/E) terms each 9dp-rounded to
+# DECIMAL, summed exactly; the per-lang ranking happens ON the exact
+# decimal so the order is ulp-identical cross-engine.
+@query("term_keyness_g2", oracle="""
+  WITH t AS ({TOKS}),
+  tk AS (SELECT lang, unnest(toks) AS w FROM t),
+  cnt AS (SELECT lang, w, CAST(count(*) AS BIGINT) AS a
+          FROM tk GROUP BY 1, 2),
+  ltot AS (SELECT lang, CAST(sum(a) AS BIGINT) AS lt FROM cnt GROUP BY 1),
+  wtot AS (SELECT w, CAST(sum(a) AS BIGINT) AS wt FROM cnt GROUP BY 1),
+  ntot AS (SELECT CAST(sum(lt) AS BIGINT) AS nn FROM ltot),
+  j AS (
+    SELECT cnt.lang, cnt.w, a, lt, wt, nn,
+           wt - a AS b, lt - a AS c, nn - lt - (wt - a) AS d
+    FROM cnt JOIN ltot USING (lang) JOIN wtot USING (w), ntot
+    WHERE a >= 5),
+  g AS (
+    SELECT lang, w, a,
+           CAST(CASE WHEN a > 0 THEN round(
+               2.0 * CAST(a AS DOUBLE)
+               * ln(CAST(a AS DOUBLE)
+                    / ((CAST(lt AS DOUBLE) * CAST(wt AS DOUBLE))
+                       / CAST(nn AS DOUBLE))), 9)
+             ELSE 0.0 END AS DECIMAL(20,9))
+           + CAST(CASE WHEN b > 0 THEN round(
+               2.0 * CAST(b AS DOUBLE)
+               * ln(CAST(b AS DOUBLE)
+                    / ((CAST(nn - lt AS DOUBLE) * CAST(wt AS DOUBLE))
+                       / CAST(nn AS DOUBLE))), 9)
+             ELSE 0.0 END AS DECIMAL(20,9))
+           + CAST(CASE WHEN c > 0 THEN round(
+               2.0 * CAST(c AS DOUBLE)
+               * ln(CAST(c AS DOUBLE)
+                    / ((CAST(lt AS DOUBLE) * CAST(nn - wt AS DOUBLE))
+                       / CAST(nn AS DOUBLE))), 9)
+             ELSE 0.0 END AS DECIMAL(20,9))
+           + CAST(CASE WHEN d > 0 THEN round(
+               2.0 * CAST(d AS DOUBLE)
+               * ln(CAST(d AS DOUBLE)
+                    / ((CAST(nn - lt AS DOUBLE) * CAST(nn - wt AS DOUBLE))
+                       / CAST(nn AS DOUBLE))), 9)
+             ELSE 0.0 END AS DECIMAL(20,9)) AS g2d
+    FROM j),
+  ranked AS (
+    SELECT lang, w, a, g2d,
+           row_number() OVER (PARTITION BY lang
+                              ORDER BY g2d DESC, w ASC) AS rank
+    FROM g)
+  SELECT lang, CAST(rank AS BIGINT) AS rank, w AS word,
+         a AS n_in_lang, CAST(CAST(g2d AS VARCHAR) AS DOUBLE) AS g2
+  FROM ranked WHERE rank <= 10 ORDER BY lang, rank
+""".replace("{TOKS}", _SQL_TOKS))
 def q_term_keyness_g2(
     spark: SparkSession, sf_dir: str, top_k: int = 10, min_count: int = 5
 ) -> DataFrame:
@@ -257,6 +495,41 @@ def q_term_keyness_g2(
     )
 
 
+# Theil-Sen: same monthly-micros series as the OLS trend oracle; the
+# median pair slope by lower-median integer-rank selection.
+@query("nation_theilsen_trend", oracle="""
+  WITH monthly AS (
+    SELECT n_name AS nation,
+           CAST((year(o_orderdate) * 12 + month(o_orderdate))
+                - (1992 * 12 + 1) AS BIGINT) AS x,
+           sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
+                    * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))
+                    * 1000000 AS HUGEINT)) AS y
+    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         JOIN nation ON c_nationkey = n_nationkey
+    GROUP BY 1, 2),
+  slopes AS (
+    SELECT a.nation,
+           CAST(CAST(b.y - a.y AS VARCHAR) AS DOUBLE)
+             / CAST(b.x - a.x AS DOUBLE) AS slope
+    FROM monthly a JOIN monthly b
+      ON a.nation = b.nation AND a.x < b.x),
+  sc AS (SELECT nation, slope, count(*) AS cnt FROM slopes GROUP BY 1, 2),
+  tot AS (SELECT nation, CAST(sum(cnt) AS BIGINT) AS np FROM sc GROUP BY 1),
+  cum AS (SELECT nation, slope, cnt,
+                 sum(cnt) OVER (PARTITION BY nation ORDER BY slope
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm
+          FROM sc),
+  med AS (SELECT cum.nation, min(slope) AS theil_sen_slope
+          FROM cum JOIN tot USING (nation)
+          WHERE cm >= CAST(floor((np + 1) / 2.0) AS BIGINT) GROUP BY 1),
+  months AS (SELECT nation, CAST(count(*) AS BIGINT) AS n_months
+             FROM monthly GROUP BY 1)
+  SELECT months.nation, n_months, np AS n_pairs, theil_sen_slope
+  FROM months JOIN tot USING (nation) JOIN med USING (nation)
+  ORDER BY 1
+""")
 def q_nation_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen robust trend per nation over the SAME monthly
     revenue series as nation_revenue_trend's OLS: the median of all
@@ -350,6 +623,29 @@ def q_nation_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Unbiased Simpson: exact-integer c(c-1) sums (HUGEINT twin), one
+# final IEEE division chain, no rounding convention needed.
+@query("lang_simpson_diversity", oracle="""
+  WITH t AS ({TOKS}),
+  tk AS (SELECT lang, unnest(toks) AS w FROM t),
+  cnt AS (SELECT lang, w, count(*) AS c FROM tk GROUP BY 1, 2),
+  g AS (SELECT lang, CAST(sum(c) AS BIGINT) AS n_tokens,
+               CAST(count(*) AS BIGINT) AS vocab,
+               sum(CAST(c AS HUGEINT) * CAST(c - 1 AS HUGEINT)) AS s2
+        FROM cnt GROUP BY 1)
+  SELECT lang, n_tokens, vocab,
+         CASE WHEN n_tokens > 1
+              THEN CAST(CAST(s2 AS VARCHAR) AS DOUBLE)
+                   / (CAST(n_tokens AS DOUBLE)
+                      * CAST(n_tokens - 1 AS DOUBLE)) END AS simpson,
+         CASE WHEN n_tokens > 1 AND s2 > 0
+              THEN CAST(1.0 AS DOUBLE)
+                   / (CAST(CAST(s2 AS VARCHAR) AS DOUBLE)
+                      / (CAST(n_tokens AS DOUBLE)
+                         * CAST(n_tokens - 1 AS DOUBLE))) END
+           AS inv_simpson
+  FROM g ORDER BY lang
+""".replace("{TOKS}", _SQL_TOKS))
 def q_lang_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unbiased Simpson concentration per language: D = sum c(c-1) /
     (n(n-1)) -- the probability two tokens drawn WITHOUT replacement
@@ -396,6 +692,36 @@ def q_lang_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lang")
 
 
+# HHI/CR4: exact micro squares as HUGEINT; the only IEEE work is the
+# final fixed division chains; CR4 pick by deterministic window rank.
+@query("brand_revenue_hhi", oracle="""
+  WITH nb AS (
+    SELECT n_name AS nation, p_brand AS brand,
+           sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
+                    * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))
+                    * 1000000 AS HUGEINT)) AS rev
+    FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+         JOIN part ON l_partkey = p_partkey
+         JOIN nation ON s_nationkey = n_nationkey
+    GROUP BY 1, 2),
+  ranked AS (
+    SELECT nation, brand, rev,
+           row_number() OVER (PARTITION BY nation
+                              ORDER BY rev DESC, brand ASC) AS rk
+    FROM nb),
+  g AS (
+    SELECT nation, CAST(count(*) AS BIGINT) AS n_brands,
+           sum(rev) AS s1, sum(rev * rev) AS s2,
+           sum(CASE WHEN rk <= 4 THEN rev ELSE 0 END) AS t4
+    FROM ranked GROUP BY 1)
+  SELECT nation, n_brands,
+         CAST(CAST(s2 AS VARCHAR) AS DOUBLE)
+           / (CAST(CAST(s1 AS VARCHAR) AS DOUBLE)
+              * CAST(CAST(s1 AS VARCHAR) AS DOUBLE)) AS hhi,
+         CAST(CAST(t4 AS VARCHAR) AS DOUBLE)
+           / CAST(CAST(s1 AS VARCHAR) AS DOUBLE) AS cr4
+  FROM g ORDER BY nation
+""")
 def q_brand_revenue_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-concentration audit per supplier nation: the Herfindahl
     -Hirschman index over part-brand revenue shares (HHI = sum
@@ -470,6 +796,30 @@ def q_brand_revenue_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("nation")
 
 
+# Gaps-and-islands on the type axis: lag boundary + running count.
+@query("events_run_length", oracle="""
+  WITH b AS (
+    SELECT user_id, event_type,
+           CASE WHEN lag(event_type) OVER w IS NULL
+                  OR lag(event_type) OVER w <> event_type
+                THEN 1 ELSE 0 END AS bnd,
+           ts, event_id
+    FROM events
+    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+  r AS (
+    SELECT user_id, event_type,
+           sum(bnd) OVER (PARTITION BY user_id ORDER BY ts, event_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
+    FROM b),
+  runs AS (SELECT user_id, run, event_type,
+                  CAST(count(*) AS BIGINT) AS len
+           FROM r GROUP BY 1, 2, 3)
+  SELECT event_type, CAST(count(*) AS BIGINT) AS n_runs,
+         max(len) AS longest_run,
+         CAST(sum(len) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+           AS mean_run_len
+  FROM runs GROUP BY 1 ORDER BY 1
+""")
 def q_events_run_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run-length profile of each event type: consecutive same-type
     runs inside each user's stream (the gaps-and-islands pattern at
@@ -513,6 +863,41 @@ def q_events_run_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# EWMA: recursive CTE stepping the identical exact-integer-micros
+# arithmetic (alpha = 0.5 exact binary; tie rounding probed equal).
+@query("events_ewma_control", oracle="""
+  WITH RECURSIVE daily AS (
+    SELECT event_type, CAST(ts AS DATE) AS day,
+           CAST(CAST(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6)))
+                          AS DECIMAL(20,6))
+                     * CAST(1000000 AS DECIMAL(7,0)) AS BIGINT)
+                AS DOUBLE) AS x
+    FROM events GROUP BY 1, 2),
+  series AS (
+    SELECT event_type, day, x,
+           row_number() OVER (PARTITION BY event_type ORDER BY day) AS i
+    FROM daily),
+  dcount AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days
+             FROM daily GROUP BY 1),
+  rec AS (
+    SELECT event_type, CAST(1 AS BIGINT) AS i, x AS z,
+           CAST(0.0 AS DOUBLE) AS md
+    FROM series WHERE i = 1
+    UNION ALL
+    SELECT rec.event_type, rec.i + 1,
+           round(CAST(0.5 AS DOUBLE) * s.x
+                 + CAST(0.5 AS DOUBLE) * rec.z, 0) AS z,
+           greatest(rec.md, abs(s.x - rec.z)) AS md
+    FROM rec JOIN series s
+      ON s.event_type = rec.event_type AND s.i = rec.i + 1),
+  last AS (SELECT event_type, max(i) AS mi FROM rec GROUP BY 1)
+  SELECT rec.event_type, n_days, z AS ewma_last_micros,
+         md AS max_abs_dev_micros
+  FROM rec JOIN last ON rec.event_type = last.event_type
+                    AND rec.i = last.mi
+       JOIN dcount ON dcount.event_type = rec.event_type
+  ORDER BY rec.event_type
+""")
 def q_events_ewma_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EWMA control chart (Roberts 1959) over each event type's
     daily value volume: z_t = round(0.5 x_t + 0.5 z_{t-1}) with x_t
@@ -572,6 +957,41 @@ def q_events_ewma_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Cadence profile: lag gaps on the custkey total order; percentile
+# selection at the (segment, distinct-gap) grain.
+@query("segment_order_gap_profile", oracle="""
+  WITH g AS (
+    SELECT o_custkey,
+           CAST(date_diff('day',
+                CAST(lag(o_orderdate) OVER w AS DATE),
+                CAST(o_orderdate AS DATE)) AS BIGINT) AS gap
+    FROM orders
+    WINDOW w AS (PARTITION BY o_custkey
+                 ORDER BY o_orderdate ASC, o_orderkey ASC)),
+  gg AS (
+    SELECT c_mktsegment AS segment, gap, count(*) AS cnt
+    FROM g JOIN customer ON o_custkey = c_custkey
+    WHERE gap IS NOT NULL GROUP BY 1, 2),
+  tot AS (SELECT segment, CAST(sum(cnt) AS BIGINT) AS n_gaps,
+                 CAST(sum(gap * cnt) AS BIGINT) AS sg
+          FROM gg GROUP BY 1),
+  cum AS (SELECT segment, gap, cnt,
+                 sum(cnt) OVER (PARTITION BY segment ORDER BY gap
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm
+          FROM gg),
+  p50 AS (SELECT cum.segment, min(gap) AS median_gap_days
+          FROM cum JOIN tot USING (segment)
+          WHERE cm >= CAST(floor((n_gaps + 1) / 2.0) AS BIGINT)
+          GROUP BY 1),
+  p90 AS (SELECT cum.segment, min(gap) AS p90_gap_days
+          FROM cum JOIN tot USING (segment)
+          WHERE cm * 10 >= n_gaps * 9 GROUP BY 1)
+  SELECT tot.segment, n_gaps,
+         CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE) AS mean_gap_days,
+         median_gap_days, p90_gap_days
+  FROM tot JOIN p50 USING (segment) JOIN p90 USING (segment)
+  ORDER BY tot.segment
+""")
 def q_segment_order_gap_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Purchase-cadence profile per market segment: the distribution
     of days between a customer's consecutive orders -- median and p90
@@ -648,6 +1068,30 @@ def q_segment_order_gap_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Quintile migration: integer 5*(rn-1) DIV n boundaries (no ntile,
+# no float), rank by exact cents desc with custkey tie-break.
+@query("customer_value_migration", oracle="""
+  WITH spend AS (
+    SELECT o_custkey AS custkey, CAST(year(o_orderdate) AS BIGINT) AS yr,
+           CAST(CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                              AS HUGEINT)) AS VARCHAR) AS DOUBLE) AS cents
+    FROM orders WHERE year(o_orderdate) IN (1995, 1996)
+    GROUP BY 1, 2),
+  r AS (
+    SELECT custkey, yr,
+           row_number() OVER (PARTITION BY yr
+                              ORDER BY cents DESC, custkey) AS rn,
+           count(*) OVER (PARTITION BY yr) AS n
+    FROM spend),
+  q AS (SELECT custkey, yr,
+               CAST(least(4, 5 * (rn - 1) // n) AS BIGINT) AS q
+        FROM r)
+  SELECT a.q AS q_1995, b.q AS q_1996,
+         CAST(count(*) AS BIGINT) AS n_customers
+  FROM q a JOIN q b ON a.custkey = b.custkey
+       AND a.yr = 1995 AND b.yr = 1996
+  GROUP BY 1, 2 ORDER BY 1, 2
+""")
 def q_customer_value_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Year-over-year value-quintile migration matrix: customers
     ranked into spend quintiles within 1995 and within 1996 (exact
@@ -715,6 +1159,37 @@ def q_customer_value_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Cohort LTV triangle: exact integer cents, window cumsum at the
+# (cohort, age) grain, one IEEE division per row.
+@query("customer_cohort_ltv", oracle="""
+  WITH om AS (
+    SELECT o_custkey,
+           CAST((year(o_orderdate) * 12 + month(o_orderdate))
+                - (1992 * 12 + 1) AS BIGINT) AS m,
+           CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             AS cents
+    FROM orders),
+  firsts AS (SELECT o_custkey, min(m) AS cohort FROM om GROUP BY 1),
+  sizes AS (SELECT cohort, CAST(count(*) AS BIGINT) AS cohort_size
+            FROM firsts GROUP BY 1),
+  cells AS (
+    SELECT cohort, om.m - cohort AS age_months,
+           CAST(count(DISTINCT om.o_custkey) AS BIGINT) AS n_active,
+           sum(CAST(cents AS HUGEINT)) AS rev
+    FROM om JOIN firsts ON om.o_custkey = firsts.o_custkey
+    GROUP BY 1, 2),
+  cum AS (
+    SELECT cohort, age_months, n_active, rev,
+           sum(rev) OVER (PARTITION BY cohort ORDER BY age_months
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS crev
+    FROM cells)
+  SELECT cohort AS cohort_month, age_months, n_active, cohort_size,
+         CAST(CAST(rev AS VARCHAR) AS DOUBLE) AS rev_cents,
+         CAST(CAST(crev AS VARCHAR) AS DOUBLE)
+           / CAST(cohort_size AS DOUBLE) AS cum_ltv_cents_per_customer
+  FROM cum JOIN sizes USING (cohort)
+  ORDER BY cohort_month, age_months
+""")
 def q_customer_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort lifetime-value triangle: customers grouped by
     first-order month, cumulative revenue per cohort member tracked
@@ -778,6 +1253,40 @@ def q_customer_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Bounce profile: the events_sessionize epoch-floor gap convention;
+# entry pick via rn = 1 on the session-keyed total order.
+@query("session_bounce_rate", oracle="""
+  WITH g AS (
+    SELECT user_id, ts, event_id, event_type,
+           CAST(floor(epoch(ts)) AS BIGINT)
+           - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) AS gap
+    FROM events
+    WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
+  s AS (
+    SELECT user_id, ts, event_id, event_type,
+           sum(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END)
+             OVER (PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+             AS sid
+    FROM g),
+  e2 AS (
+    SELECT user_id, sid, event_type,
+           row_number() OVER (PARTITION BY user_id, sid
+                              ORDER BY ts, event_id) AS rn,
+           count(*) OVER (PARTITION BY user_id, sid) AS n
+    FROM s),
+  sess AS (SELECT user_id, sid, event_type AS entry_type,
+                  CAST(n AS BIGINT) AS n
+           FROM e2 WHERE rn = 1)
+  SELECT entry_type, CAST(count(*) AS BIGINT) AS n_sessions,
+         CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_bounces,
+         CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS DOUBLE)
+           / CAST(count(*) AS DOUBLE) AS bounce_rate,
+         CAST(sum(n) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+           AS mean_events_per_session
+  FROM sess GROUP BY 1 ORDER BY 1
+""")
 def q_session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounce-rate profile by session ENTRY event type: sessionize
     each user's stream on the repo's 30-minute gap convention (the
@@ -832,6 +1341,38 @@ def q_session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Delay profile: integer-rank percentile selection (the MAD oracle
+# convention), exact integer day sums for the mean.
+@query("shipping_delay_profile", oracle="""
+  WITH d AS (
+    SELECT CAST((year(o_orderdate) * 12 + month(o_orderdate))
+                - (1992 * 12 + 1) AS BIGINT) AS month,
+           CAST(date_diff('day', CAST(o_orderdate AS DATE),
+                          CAST(l_shipdate AS DATE)) AS BIGINT) AS dd,
+           count(*) AS cnt
+    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    GROUP BY 1, 2),
+  tot AS (SELECT month, CAST(sum(cnt) AS BIGINT) AS n_items,
+                 CAST(sum(dd * cnt) AS BIGINT) AS sdd
+          FROM d GROUP BY 1),
+  cum AS (SELECT month, dd, cnt,
+                 sum(cnt) OVER (PARTITION BY month ORDER BY dd
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm
+          FROM d),
+  p50 AS (SELECT cum.month, min(dd) AS p50_delay_days
+          FROM cum JOIN tot USING (month)
+          WHERE cm >= CAST(floor((n_items + 1) / 2.0) AS BIGINT)
+          GROUP BY 1),
+  p90 AS (SELECT cum.month, min(dd) AS p90_delay_days
+          FROM cum JOIN tot USING (month)
+          WHERE cm * 10 >= n_items * 9 GROUP BY 1)
+  SELECT tot.month, n_items,
+         CAST(sdd AS DOUBLE) / CAST(n_items AS DOUBLE)
+           AS mean_delay_days,
+         p50_delay_days, p90_delay_days
+  FROM tot JOIN p50 USING (month) JOIN p90 USING (month)
+  ORDER BY tot.month
+""")
 def q_shipping_delay_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-to-ship delay distribution per order month: exact mean
     plus p50/p90 by INTEGER-RANK SELECTION over the (month, distinct
@@ -906,6 +1447,26 @@ def q_shipping_delay_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("embedding_mutual_nn", oracle="""
+  WITH pairs AS (
+    SELECT * FROM (
+      SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+             round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                                          CAST(b.embedding AS DOUBLE[])), 6)
+               AS cosine
+      FROM embeddings a, embeddings b WHERE a.vec_id < b.vec_id
+    ) WHERE cosine >= 0.35),
+  sym AS (SELECT vec_a AS v, vec_b AS nb, cosine FROM pairs
+          UNION ALL SELECT vec_b, vec_a, cosine FROM pairs),
+  best AS (SELECT v, nb, cosine,
+                  row_number() OVER (PARTITION BY v
+                                     ORDER BY cosine DESC, nb) AS rn
+           FROM sym),
+  b1 AS (SELECT v, nb, cosine FROM best WHERE rn = 1)
+  SELECT a.v AS vec_a, a.nb AS vec_b, a.cosine
+  FROM b1 a JOIN b1 b ON a.nb = b.v AND b.nb = a.v AND a.v < a.nb
+  ORDER BY vec_a
+""")
 def q_embedding_mutual_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal nearest-neighbor pairs over the embedding corpus
     (similarity.mutual_nearest_pairs): candidates come from the
@@ -920,6 +1481,24 @@ def q_embedding_mutual_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mutual_nearest_pairs(pairs)
 
 
+# Mutual-NN over BANDED-LSH candidates (round 8): identical
+# reciprocity filter, candidates from the OR-of-ANDs band tables (the
+# embedding_dup_pairs_lsh CTEs with the deterministic splitmix64 planes).
+# NOTE the sym CTE rebinds `v` -- the banded CTE names its vector CTE
+# `v` too, so the pairs body must come first and stand alone.
+@query("embedding_mutual_nn_lsh", oracle=f"""
+  {_banded_pairs_sql()},
+  sym AS (SELECT vec_a AS v, vec_b AS nb, cosine FROM pairs
+          UNION ALL SELECT vec_b, vec_a, cosine FROM pairs),
+  best AS (SELECT v, nb, cosine,
+                  row_number() OVER (PARTITION BY v
+                                     ORDER BY cosine DESC, nb) AS rn
+           FROM sym),
+  b1 AS (SELECT v, nb, cosine FROM best WHERE rn = 1)
+  SELECT a.v AS vec_a, a.nb AS vec_b, a.cosine
+  FROM b1 a JOIN b1 b ON a.nb = b.v AND b.nb = a.v AND a.v < a.nb
+  ORDER BY vec_a
+""")
 def q_embedding_mutual_nn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB wiring of mutual-NN (VERDICT r6 #4): candidates come
     from the LSH-bucketed pair scan (pairs only form inside a
@@ -1013,6 +1592,41 @@ def _absorb_p(
     return p
 
 
+def _absorption_ctes(steps: int = 8) -> str:
+    """Unrolled value-iteration oracle for q_event_conversion_absorption."""
+    parts = ["""nxt AS (
+    SELECT event_type,
+           lead(event_type) OVER (PARTITION BY user_id
+                                  ORDER BY ts, event_id) AS next_type
+    FROM events),
+  c AS (SELECT event_type, next_type, CAST(count(*) AS BIGINT) AS nn
+        FROM nxt WHERE next_type IS NOT NULL GROUP BY 1, 2),
+  tot AS (SELECT event_type, CAST(sum(nn) AS BIGINT) AS t
+          FROM c GROUP BY 1),
+  tr AS (SELECT c.event_type AS s, next_type AS t2, nn / t AS T
+         FROM c JOIN tot ON c.event_type = tot.event_type),
+  st AS (SELECT s AS node FROM tr UNION SELECT t2 FROM tr),
+  p0 AS (SELECT node,
+                CASE WHEN node = 'purchase' THEN CAST(1.0 AS DOUBLE)
+                     ELSE CAST(0.0 AS DOUBLE) END AS p
+         FROM st)"""]
+    for k in range(1, steps + 1):
+        parts.append(f"""p{k} AS (
+    SELECT st.node,
+           CASE WHEN st.node = 'purchase' THEN CAST(1.0 AS DOUBLE)
+                ELSE coalesce(x.sm, CAST(0.0 AS DOUBLE)) END AS p
+    FROM st LEFT JOIN (
+      SELECT s AS node,
+             CAST(CAST(sum(CAST(round(T * p, 12) AS DECIMAL(24,12)))
+                       AS VARCHAR) AS DOUBLE) AS sm
+      FROM tr JOIN p{k - 1} ON tr.t2 = p{k - 1}.node GROUP BY 1) x
+    USING (node))""")
+    return ",\n  ".join(parts) + f"""
+  SELECT node AS event_type, p AS p_convert FROM p{steps} ORDER BY node"""
+
+
+# Unrolled absorbing-chain value iteration at event-type grain.
+@query("event_conversion_absorption", oracle="WITH " + _absorption_ctes(8))
 def q_event_conversion_absorption(
     spark: SparkSession, sf_dir: str, steps: int = 8
 ) -> DataFrame:
@@ -1042,6 +1656,91 @@ def q_event_conversion_absorption(
 MARKOV_ORACLE_CHANNELS = ("click", "error", "signup", "view")
 
 
+def _markov_removal_sql(channels: tuple[str, ...], steps: int = 8) -> str:
+    """Generated oracle for q_attribution_markov_removal: the shared
+    transition/pi CTEs, one unrolled value-iteration chain for the
+    base matrix and one per removed channel (edges INTO the channel
+    filtered out), then the effect/share arithmetic on exact
+    decimals. The channel universe is the generator's fixed
+    event-type set (verified identical at all three SFs); the Spark
+    side derives it from the data."""
+    head = """WITH nxt AS (
+    SELECT event_type,
+           lead(event_type) OVER (PARTITION BY user_id
+                                  ORDER BY ts, event_id) AS next_type
+    FROM events),
+  c AS (SELECT event_type, next_type, CAST(count(*) AS BIGINT) AS nn
+        FROM nxt WHERE next_type IS NOT NULL GROUP BY 1, 2),
+  tot AS (SELECT event_type, CAST(sum(nn) AS BIGINT) AS t
+          FROM c GROUP BY 1),
+  tr AS (SELECT c.event_type AS s, next_type AS t2, nn / t AS T
+         FROM c JOIN tot ON c.event_type = tot.event_type),
+  st AS (SELECT s AS node FROM tr UNION SELECT t2 FROM tr),
+  fe AS (SELECT user_id, event_type,
+                row_number() OVER (PARTITION BY user_id
+                                   ORDER BY ts, event_id) AS rn
+         FROM events),
+  pi0 AS (SELECT event_type AS node, CAST(count(*) AS BIGINT) AS cu
+          FROM fe WHERE rn = 1 GROUP BY 1),
+  ut AS (SELECT CAST(sum(cu) AS BIGINT) AS u FROM pi0),
+  pi AS (SELECT node, cu / u AS pi FROM pi0, ut)"""
+
+    def chain(prefix: str, tr_filter: str) -> list[str]:
+        parts = [f"""{prefix}p0 AS (
+    SELECT node, CASE WHEN node = 'purchase' THEN CAST(1.0 AS DOUBLE)
+                      ELSE CAST(0.0 AS DOUBLE) END AS p
+    FROM st)"""]
+        for k in range(1, steps + 1):
+            parts.append(f"""{prefix}p{k} AS (
+    SELECT st.node,
+           CASE WHEN st.node = 'purchase' THEN CAST(1.0 AS DOUBLE)
+                ELSE coalesce(x.sm, CAST(0.0 AS DOUBLE)) END AS p
+    FROM st LEFT JOIN (
+      SELECT s AS node,
+             CAST(CAST(sum(CAST(round(T * p, 12) AS DECIMAL(24,12)))
+                       AS VARCHAR) AS DOUBLE) AS sm
+      FROM tr JOIN {prefix}p{k - 1} ON tr.t2 = {prefix}p{k - 1}.node
+      {tr_filter} GROUP BY 1) x
+    USING (node))""")
+        return parts
+
+    parts = [head]
+    parts.extend(chain("b", ""))
+    parts.append(f"""bval AS (
+    SELECT CAST(CAST(sum(CAST(round(pi * p, 12) AS DECIMAL(24,12)))
+                     AS VARCHAR) AS DOUBLE) AS v
+    FROM pi JOIN bp{steps} USING (node))""")
+    for i, ch in enumerate(channels):
+        parts.extend(chain(f"r{i}", f"WHERE tr.t2 <> '{ch}'"))
+        parts.append(f"""r{i}val AS (
+    SELECT CAST(CAST(sum(CAST(round(pi * p, 12) AS DECIMAL(24,12)))
+                     AS VARCHAR) AS DOUBLE) AS v
+    FROM pi JOIN r{i}p{steps} USING (node)
+    WHERE pi.node <> '{ch}')""")
+    union = "\n    UNION ALL ".join(
+        f"SELECT '{ch}' AS channel, bval.v AS p_base, r{i}val.v AS p_removed"
+        f" FROM bval, r{i}val"
+        for i, ch in enumerate(channels)
+    )
+    parts.append(f"""eff AS (
+    SELECT channel, p_base, p_removed,
+           CAST(round(CAST(1 AS DOUBLE) - p_removed / p_base, 12)
+                AS DECIMAL(24,12)) AS e
+    FROM ({union}))""")
+    parts.append("""te AS (SELECT sum(e) AS t FROM eff)""")
+    return (
+        ",\n  ".join(parts)
+        + """
+  SELECT channel, p_base, p_removed,
+         CAST(CAST(e AS VARCHAR) AS DOUBLE) AS removal_effect,
+         CASE WHEN t <> 0 THEN CAST(CAST(e AS VARCHAR) AS DOUBLE)
+              / CAST(CAST(t AS VARCHAR) AS DOUBLE) END
+           AS attribution_share
+  FROM eff, te ORDER BY channel"""
+    )
+
+
+@query("attribution_markov_removal", oracle=_markov_removal_sql(MARKOV_ORACLE_CHANNELS))
 def q_attribution_markov_removal(
     spark: SparkSession, sf_dir: str, steps: int = 8
 ) -> DataFrame:
@@ -1209,39 +1908,45 @@ def q_attribution_markov_removal(
     ).orderBy("channel")
 
 
-def _absorption_ctes(steps: int = 8) -> str:
-    """Unrolled value-iteration oracle for q_event_conversion_absorption."""
-    parts = ["""nxt AS (
-    SELECT event_type,
-           lead(event_type) OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS next_type
-    FROM events),
-  c AS (SELECT event_type, next_type, CAST(count(*) AS BIGINT) AS nn
-        FROM nxt WHERE next_type IS NOT NULL GROUP BY 1, 2),
-  tot AS (SELECT event_type, CAST(sum(nn) AS BIGINT) AS t
-          FROM c GROUP BY 1),
-  tr AS (SELECT c.event_type AS s, next_type AS t2, nn / t AS T
-         FROM c JOIN tot ON c.event_type = tot.event_type),
-  st AS (SELECT s AS node FROM tr UNION SELECT t2 FROM tr),
-  p0 AS (SELECT node,
-                CASE WHEN node = 'purchase' THEN CAST(1.0 AS DOUBLE)
-                     ELSE CAST(0.0 AS DOUBLE) END AS p
-         FROM st)"""]
-    for k in range(1, steps + 1):
-        parts.append(f"""p{k} AS (
-    SELECT st.node,
-           CASE WHEN st.node = 'purchase' THEN CAST(1.0 AS DOUBLE)
-                ELSE coalesce(x.sm, CAST(0.0 AS DOUBLE)) END AS p
-    FROM st LEFT JOIN (
-      SELECT s AS node,
-             CAST(CAST(sum(CAST(round(T * p, 12) AS DECIMAL(24,12)))
-                       AS VARCHAR) AS DOUBLE) AS sm
-      FROM tr JOIN p{k - 1} ON tr.t2 = p{k - 1}.node GROUP BY 1) x
-    USING (node))""")
-    return ",\n  ".join(parts) + f"""
-  SELECT node AS event_type, p AS p_convert FROM p{steps} ORDER BY node"""
-
-
+# Simplified silhouette: squared distances from the decimal-exact
+# dot/norm aggregates of the confusion oracle; per-term 9dp rounding.
+@query("label_silhouette", oracle="""
+  WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS dvec
+             FROM embeddings),
+  i AS (SELECT vec_id, label, dvec,
+               unnest(range(1, len(dvec) + 1)) AS idx FROM e),
+  f AS (SELECT vec_id, label, idx AS pos, dvec[idx] AS v FROM i),
+  cent AS (SELECT label AS clabel, pos,
+                  round(CAST(CAST(sum(CAST(v AS DECIMAL(27,12)))
+                                  AS VARCHAR) AS DOUBLE) / count(*), 6) AS c
+           FROM f GROUP BY 1, 2),
+  cn AS (SELECT clabel,
+                CAST(CAST(sum(CAST(c * c AS DECIMAL(24,12))) AS VARCHAR)
+                     AS DOUBLE) AS cnorm2
+         FROM cent GROUP BY 1),
+  vn AS (SELECT vec_id,
+                CAST(CAST(sum(CAST(v * v AS DECIMAL(24,12))) AS VARCHAR)
+                     AS DOUBLE) AS vnorm2
+         FROM f GROUP BY 1),
+  d AS (SELECT f.vec_id, f.label, cent.clabel,
+               CAST(CAST(sum(CAST(f.v * cent.c AS DECIMAL(24,12)))
+                         AS VARCHAR) AS DOUBLE) AS dot
+        FROM f JOIN cent USING (pos) GROUP BY 1, 2, 3),
+  dd AS (SELECT d.vec_id, d.label, d.clabel,
+                vnorm2 - 2.0 * dot + cnorm2 AS d2
+         FROM d JOIN vn USING (vec_id) JOIN cn USING (clabel)),
+  a AS (SELECT vec_id, label, d2 AS av FROM dd WHERE label = clabel),
+  b AS (SELECT vec_id, min(d2) AS bv FROM dd WHERE label <> clabel
+        GROUP BY 1),
+  s AS (SELECT a.label,
+               CAST(round((bv - av) / greatest(av, bv), 9)
+                    AS DECIMAL(12,9)) AS sil
+        FROM a JOIN b USING (vec_id))
+  SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
+         CAST(CAST(sum(sil) AS VARCHAR) AS DOUBLE) / count(*)
+           AS mean_silhouette
+  FROM s GROUP BY 1 ORDER BY 1
+""")
 def q_label_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simplified (centroid-based) silhouette per label over the
     embedding corpus: s_i = (b_i - a_i) / max(a_i, b_i) with a_i the
@@ -1321,6 +2026,34 @@ def q_label_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Newman modularity of the nation partition over the co-supply graph:
+# all-integer counts into one fixed IEEE chain per nation.
+@query("cosupply_nation_modularity", oracle="""
+  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
+  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
+        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
+  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+  e AS MATERIALIZED (SELECT s1, s2 FROM w, t WHERE c >= thr),
+  sn AS (SELECT s_suppkey AS sk, n_name AS nation
+         FROM supplier JOIN nation ON s_nationkey = n_nationkey),
+  m1 AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e),
+  und AS (SELECT s1 AS node FROM e UNION ALL SELECT s2 FROM e),
+  dnat AS (SELECT sn.nation,
+                  CAST(count(*) AS BIGINT) AS degree_sum,
+                  CAST(count(DISTINCT node) AS BIGINT) AS n_suppliers
+           FROM und JOIN sn ON und.node = sn.sk GROUP BY 1),
+  intra AS (SELECT a.nation, CAST(count(*) AS BIGINT) AS intra_edges
+            FROM e JOIN sn a ON e.s1 = a.sk JOIN sn b ON e.s2 = b.sk
+            WHERE a.nation = b.nation GROUP BY 1)
+  SELECT dnat.nation, n_suppliers, degree_sum,
+         coalesce(intra.intra_edges, 0) AS intra_edges,
+         CAST(coalesce(intra.intra_edges, 0) AS DOUBLE) / CAST(m AS DOUBLE)
+           - (CAST(degree_sum AS DOUBLE) / CAST(2 * m AS DOUBLE))
+             * (CAST(degree_sum AS DOUBLE) / CAST(2 * m AS DOUBLE))
+           AS modularity_term
+  FROM dnat LEFT JOIN intra USING (nation) CROSS JOIN m1
+  ORDER BY nation
+""")
 def q_cosupply_nation_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman modularity of the NATION partition over the thresholded
     co-supply graph: per nation, Q_c = intra_c/m - (d_c/(2m))^2 --
@@ -1391,6 +2124,38 @@ def q_cosupply_nation_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Degree assortativity: exact decimal edge-moment accumulation, one
+# IEEE chain (sum_j == sum_k by both-orientation symmetry).
+@query("cosupply_degree_assortativity", oracle="""
+  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
+  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
+        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
+  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+  e AS MATERIALIZED (SELECT s1, s2 FROM w, t WHERE c >= thr),
+  und AS (SELECT s1 AS src, s2 AS dst FROM e
+          UNION ALL SELECT s2, s1 FROM e),
+  deg AS (SELECT src AS n_, count(*) AS d FROM und GROUP BY 1),
+  ed AS (SELECT dj.d AS j, dk.d AS k
+         FROM und JOIN deg dj ON und.src = dj.n_
+                  JOIN deg dk ON und.dst = dk.n_),
+  agg AS (
+    SELECT CAST(count(*) AS BIGINT) AS m_directed,
+           CAST(sum(j) AS BIGINT) AS sum_j,
+           CAST(sum(CAST(j AS DECIMAL(18,0)) * CAST(k AS DECIMAL(19,0)))
+                AS DECIMAL(38,0)) AS sjk,
+           CAST(sum(CAST(j AS DECIMAL(18,0)) * CAST(j AS DECIMAL(19,0)))
+                AS DECIMAL(38,0)) AS sjj
+    FROM ed)
+  SELECT m_directed, sum_j,
+         CAST(CAST(CAST(m_directed AS DECIMAL(8,0)) * CAST(sjk AS DECIMAL(30,0))
+                   - CAST(sum_j AS DECIMAL(18,0)) * CAST(sum_j AS DECIMAL(19,0))
+                   AS VARCHAR) AS DOUBLE)
+           / CAST(CAST(CAST(m_directed AS DECIMAL(8,0)) * CAST(sjj AS DECIMAL(30,0))
+                   - CAST(sum_j AS DECIMAL(18,0)) * CAST(sum_j AS DECIMAL(19,0))
+                   AS VARCHAR) AS DOUBLE)
+           AS assortativity
+  FROM agg
+""")
 def q_cosupply_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity (Newman) of the co-supply graph: Pearson
     correlation of endpoint degrees across all directed edge
@@ -1440,6 +2205,36 @@ def q_cosupply_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
+# Goh-Barabasi burstiness of same-type interarrival gaps per user:
+# exact microsecond gaps, decimal moment accumulation, IEEE tail.
+@query("events_interarrival_burstiness", oracle="""
+  WITH g AS (
+    SELECT event_type,
+           epoch_us(ts) - lag(epoch_us(ts)) OVER (
+             PARTITION BY user_id, event_type
+             ORDER BY ts, event_id) AS gap
+    FROM events),
+  agg AS (
+    SELECT event_type,
+           CAST(count(*) AS BIGINT) AS n_gaps,
+           CAST(sum(gap) AS BIGINT) AS s,
+           CAST(sum(CAST(gap AS DECIMAL(18,0)) * CAST(gap AS DECIMAL(19,0)))
+                AS DECIMAL(38,0)) AS s2
+    FROM g WHERE gap IS NOT NULL GROUP BY 1),
+  f AS (
+    SELECT event_type, n_gaps,
+           CAST(s AS DOUBLE) / CAST(n_gaps AS DOUBLE) AS mean_gap_us,
+           CAST(CAST(CAST(n_gaps AS DECIMAL(8,0)) * CAST(s2 AS DECIMAL(30,0))
+                     - CAST(s AS DECIMAL(18,0)) * CAST(s AS DECIMAL(19,0))
+                     AS VARCHAR) AS DOUBLE)
+             / CAST(n_gaps * (n_gaps - 1) AS DOUBLE) AS var_gap_us
+    FROM agg WHERE n_gaps >= 2)
+  SELECT event_type, n_gaps, mean_gap_us, var_gap_us,
+         sqrt(var_gap_us) / mean_gap_us AS cv,
+         (sqrt(var_gap_us) - mean_gap_us) / (sqrt(var_gap_us) + mean_gap_us)
+           AS burstiness
+  FROM f ORDER BY event_type
+""")
 def q_events_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interarrival-time burstiness per event type: gaps between a
     user's consecutive events of the same type (exact microseconds
@@ -1495,6 +2290,41 @@ def q_events_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
+# Rocchio nearest-centroid confusion: centroids via the
+# label_centroids decimal recipe; dots/norms as 12dp-decimal sums
+# string-routed to double; argmax tie-break on label asc.
+@query("nearest_centroid_confusion", oracle="""
+  WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS dvec
+             FROM embeddings),
+  i AS (SELECT vec_id, label, dvec,
+               unnest(range(1, len(dvec) + 1)) AS idx FROM e),
+  f AS (SELECT vec_id, label, idx AS pos, dvec[idx] AS v FROM i),
+  cent AS (SELECT label AS clabel, pos,
+                  round(CAST(CAST(sum(CAST(v AS DECIMAL(27,12)))
+                                  AS VARCHAR) AS DOUBLE) / count(*), 6) AS c
+           FROM f GROUP BY 1, 2),
+  cn AS (SELECT clabel,
+                CAST(CAST(sum(CAST(c * c AS DECIMAL(24,12))) AS VARCHAR)
+                     AS DOUBLE) AS cnorm2
+         FROM cent GROUP BY 1),
+  vn AS (SELECT vec_id,
+                CAST(CAST(sum(CAST(v * v AS DECIMAL(24,12))) AS VARCHAR)
+                     AS DOUBLE) AS vnorm2
+         FROM f GROUP BY 1),
+  d AS (SELECT f.vec_id, f.label, cent.clabel,
+               CAST(CAST(sum(CAST(f.v * cent.c AS DECIMAL(24,12)))
+                         AS VARCHAR) AS DOUBLE) AS dot
+        FROM f JOIN cent USING (pos) GROUP BY 1, 2, 3),
+  s AS (SELECT d.vec_id, d.label, d.clabel,
+               dot / (sqrt(vnorm2) * sqrt(cnorm2)) AS csim
+        FROM d JOIN vn USING (vec_id) JOIN cn USING (clabel)),
+  p AS (SELECT vec_id, label, clabel,
+               row_number() OVER (PARTITION BY vec_id
+                                  ORDER BY csim DESC, clabel) AS rn
+        FROM s)
+  SELECT label, clabel AS pred_label, CAST(count(*) AS BIGINT) AS n_vecs
+  FROM p WHERE rn = 1 GROUP BY 1, 2 ORDER BY 1, 2
+""")
 def q_nearest_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-centroid classification of the embedding corpus against
     its own per-label centroids, reported as a confusion matrix
@@ -1563,6 +2393,30 @@ def q_nearest_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("nation_rank_movers", oracle="""
+  WITH yearly AS (
+    SELECT n_name AS nation, year(o_orderdate) AS yr,
+           sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
+                    * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))
+                    * 1000000 AS HUGEINT)) AS rev
+    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         JOIN nation ON c_nationkey = n_nationkey
+    WHERE year(o_orderdate) IN (1995, 1996)
+    GROUP BY 1, 2),
+  ranked AS (
+    SELECT nation, yr,
+           CAST(row_number() OVER (PARTITION BY yr
+                                   ORDER BY rev DESC, nation) AS BIGINT) AS rnk,
+           CAST(CAST(rev AS VARCHAR) AS DOUBLE) AS revd
+    FROM yearly)
+  SELECT a.nation, a.rnk AS rank_1995, b.rnk AS rank_1996,
+         a.rnk - b.rnk AS rank_delta,
+         a.revd AS rev_1995, b.revd AS rev_1996
+  FROM ranked a JOIN ranked b ON a.nation = b.nation
+  WHERE a.yr = 1995 AND b.yr = 1996
+  ORDER BY rank_delta DESC, a.nation
+""")
 def q_nation_rank_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Period-over-period league table: each nation's revenue rank in
     1995 vs 1996 and the rank delta (positive = climbed). Ranks are
@@ -1616,6 +2470,48 @@ def q_nation_rank_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Spearman rho + Kendall tau between the 1995/1996 nation revenue
+# rankings: all pair math at the 25-row nation grain.
+@query("nation_rank_spearman", oracle="""
+  WITH yearly AS (
+    SELECT n_name AS nation, year(o_orderdate) AS yr,
+           sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
+                    * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))
+                    * 1000000 AS HUGEINT)) AS rev
+    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         JOIN nation ON c_nationkey = n_nationkey
+    WHERE year(o_orderdate) IN (1995, 1996)
+    GROUP BY 1, 2),
+  ranked AS (
+    SELECT nation, yr,
+           CAST(row_number() OVER (PARTITION BY yr
+                                   ORDER BY rev DESC, nation) AS BIGINT) AS rnk
+    FROM yearly),
+  p AS (SELECT a.nation, a.rnk AS r95, b.rnk AS r96
+        FROM ranked a JOIN ranked b ON a.nation = b.nation
+        WHERE a.yr = 1995 AND b.yr = 1996),
+  s AS (SELECT CAST(count(*) AS BIGINT) AS n_nations,
+               CAST(sum((r95 - r96) * (r95 - r96)) AS BIGINT) AS sum_d2
+        FROM p),
+  pr AS (SELECT
+           CAST(coalesce(sum(CASE WHEN (a.r95 - b.r95) * (a.r96 - b.r96) > 0
+                                  THEN 1 ELSE 0 END), 0) AS BIGINT)
+             AS n_concordant,
+           CAST(coalesce(sum(CASE WHEN (a.r95 - b.r95) * (a.r96 - b.r96) < 0
+                                  THEN 1 ELSE 0 END), 0) AS BIGINT)
+             AS n_discordant
+         FROM p a JOIN p b ON a.nation < b.nation)
+  SELECT n_nations, sum_d2,
+         1.0 - (6.0 * CAST(sum_d2 AS DOUBLE))
+           / CAST(n_nations * (n_nations * n_nations - 1) AS DOUBLE)
+           AS spearman,
+         n_concordant, n_discordant,
+         CAST(n_concordant - n_discordant AS DOUBLE)
+           / CAST((n_nations * (n_nations - 1)) // 2 AS DOUBLE)
+           AS kendall_tau
+  FROM s CROSS JOIN pr
+""")
 def q_nation_rank_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-agreement between the 1995 and 1996 nation revenue league
     tables: one row [n_nations, sum_d2, spearman, n_concordant,
@@ -1706,6 +2602,25 @@ def q_nation_rank_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Lindley reflection in closed form: B = S - min(0, running min S).
+@query("user_wallet_balance", oracle="""
+  WITH base AS (
+    SELECT user_id, event_id, ts,
+           (CASE WHEN event_type = 'purchase' THEN 1 ELSE -1 END)
+             * CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS flow_cents
+    FROM events WHERE event_type IN ('purchase', 'click')),
+  runs AS (
+    SELECT user_id, event_id, ts, flow_cents,
+           sum(flow_cents) OVER (PARTITION BY user_id ORDER BY ts, event_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
+    FROM base)
+  SELECT user_id, event_id, flow_cents,
+         CAST(run - least(0, min(run) OVER (PARTITION BY user_id
+           ORDER BY ts, event_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+              AS BIGINT) AS balance_cents
+  FROM runs
+""")
 def q_user_wallet_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Floor-at-zero running balance per user (credits on purchase,
     debits on click) WITHOUT iteration: the Lindley recursion
@@ -1736,6 +2651,11 @@ def q_user_wallet_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("user_id", "event_id", "flow_cents", "balance_cents")
 
 
+@query("record_linkage_fs", oracle=_linkage_ctes()
+    + """
+  SELECT *, score > 0.0 AS is_match FROM s
+  ORDER BY score DESC, custkey, contact_id LIMIT 100
+""")
 def q_record_linkage_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fellegi-Sunter record linkage (operators/linkage.py) between
     customers and a deterministically-corrupted contacts copy (the
@@ -1780,6 +2700,44 @@ def _linkage_frames(spark: SparkSession, sf_dir: str):
     return master, contacts
 
 
+# Survivorship as explicit window argmax (row_number rn=1), the
+# engine-independent mirror of Spark's min(struct) picks.
+@query("linkage_golden_record", oracle=_linkage_ctes()
+    + """,
+  mt AS (SELECT custkey, contact_id FROM s WHERE score > 0.0),
+  members AS (
+    SELECT custkey, nm,
+           CAST(CAST(bal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents, seg
+    FROM m
+    UNION ALL
+    SELECT mt.custkey, c.nm,
+           CAST(CAST(c.bal AS DECIMAL(18,2)) * 100 AS BIGINT), c.seg
+    FROM mt JOIN c ON c.contact_id = mt.contact_id),
+  np AS (SELECT custkey, nm, n_sources FROM (
+      SELECT custkey, nm,
+             count(*) OVER (PARTITION BY custkey) AS n_sources,
+             row_number() OVER (PARTITION BY custkey
+                                ORDER BY length(nm) DESC, nm) AS rn
+      FROM members) WHERE rn = 1),
+  bp AS (SELECT custkey, cents FROM (
+      SELECT custkey, cents,
+             row_number() OVER (PARTITION BY custkey
+                                ORDER BY cnt DESC, cents) AS rn
+      FROM (SELECT custkey, cents, count(*) AS cnt
+            FROM members GROUP BY 1, 2)) WHERE rn = 1),
+  sp AS (SELECT custkey, seg FROM (
+      SELECT custkey, seg,
+             row_number() OVER (PARTITION BY custkey
+                                ORDER BY cnt DESC, seg) AS rn
+      FROM (SELECT custkey, seg, count(*) AS cnt
+            FROM members GROUP BY 1, 2)) WHERE rn = 1)
+  SELECT np.custkey, CAST(np.n_sources AS BIGINT) AS n_sources,
+         np.nm AS golden_name, bp.cents AS golden_bal_cents,
+         sp.seg AS golden_seg, np.nm <> m.nm AS name_repaired
+  FROM np JOIN bp USING (custkey) JOIN sp USING (custkey)
+       JOIN m USING (custkey)
+  ORDER BY custkey
+""")
 def q_linkage_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golden-record survivorship over the FS linkage matches
     (operators/linkage.golden_records): master-anchored clusters,

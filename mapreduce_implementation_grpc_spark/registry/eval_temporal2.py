@@ -1,4 +1,6 @@
-"""registry part 10b: eval_temporal2 (round-9 pre-split of eval_temporal before it crossed the 3,000-line ceiling; see tools/split_eval_temporal.py). New temporal/eval queries go HERE."""
+"""More registry queries for drift, anomaly, basket and robust statistics,
+each with its DuckDB oracle.
+"""
 
 from __future__ import annotations
 
@@ -7,14 +9,30 @@ from .shared import (
     F,
     SparkSession,
     Window,
+    _SQL_TOKS,
     load_table,
     materialize,
     with_token_array,
 )
+from .declare import query
 
 
-
-
+@query("corpus_drift_psi", oracle="""
+  WITH a AS (SELECT lang AS cat, count(*) AS n_base FROM documents
+             WHERE doc_id % 2 = 0 GROUP BY 1),
+  b AS (SELECT lang AS cat, count(*) AS n_curr FROM documents
+        WHERE doc_id % 2 = 1 GROUP BY 1),
+  ta AS (SELECT CAST(sum(n_base) AS BIGINT) AS t FROM a),
+  tb AS (SELECT CAST(sum(n_curr) AS BIGINT) AS t FROM b),
+  j AS (SELECT cat, n_base, n_curr,
+          CAST(n_base AS DOUBLE) / CAST(ta.t AS DOUBLE) AS p_base,
+          CAST(n_curr AS DOUBLE) / CAST(tb.t AS DOUBLE) AS p_curr
+        FROM a JOIN b USING (cat), ta, tb)
+  SELECT cat, n_base, n_curr, p_base, p_curr,
+         (p_curr - p_base) * round(ln(p_curr / p_base), 9) AS psi_term,
+         p_curr * round(ln(p_curr / p_base), 9) AS kl_term
+  FROM j ORDER BY cat
+""")
 def q_corpus_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-mixture drift between two corpus halves
     (operators/drift.categorical_drift): even doc_ids are the frozen
@@ -32,6 +50,30 @@ def q_corpus_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Right-continuous empirical CDFs over the union of distinct values;
+# the hash match proves the bucketed cumsum + argmax tie-break exact.
+@query("value_drift_ks", oracle="""
+  WITH ca AS (SELECT value AS v, count(*) AS ca FROM events
+              WHERE event_type = 'purchase' GROUP BY 1),
+  cb AS (SELECT value AS v, count(*) AS cb FROM events
+         WHERE event_type = 'click' GROUP BY 1),
+  u AS (SELECT coalesce(ca.v, cb.v) AS v,
+               coalesce(ca.ca, 0) AS ca, coalesce(cb.cb, 0) AS cb
+        FROM ca FULL OUTER JOIN cb ON ca.v = cb.v),
+  t AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
+               CAST(sum(cb) AS BIGINT) AS nb FROM u),
+  cum AS (SELECT v,
+                 sum(ca) OVER (ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS la,
+                 sum(cb) OVER (ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lb
+          FROM u)
+  SELECT t.na AS n_a, t.nb AS n_b,
+         abs(CAST(la AS DOUBLE) / CAST(t.na AS DOUBLE)
+             - CAST(lb AS DOUBLE) / CAST(t.nb AS DOUBLE)) AS ks_d,
+         v AS at_value
+  FROM cum, t ORDER BY ks_d DESC, v LIMIT 1
+""")
 def q_value_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov statistic
     (operators/drift.ks_test) between purchase and click value
@@ -52,6 +94,40 @@ def q_value_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Lower medians by integer-rank selection: cm >= (n+1) div 2 picks
+# the smallest value reaching the ceil(n/2) position -- no midpoint
+# interpolation, so there is no float association to diverge.
+@query("events_anomaly_mad", oracle="""
+  WITH c AS (SELECT event_type AS g, value AS v, count(*) AS cnt
+             FROM events GROUP BY 1, 2),
+  tot AS (SELECT g, CAST(sum(cnt) AS BIGINT) AS n FROM c GROUP BY 1),
+  cum AS (SELECT g, v, cnt,
+                 sum(cnt) OVER (PARTITION BY g ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm
+          FROM c),
+  med AS (SELECT cum.g, min(v) AS med
+          FROM cum JOIN tot USING (g)
+          WHERE cm >= CAST(floor((n + 1) / 2.0) AS BIGINT) GROUP BY 1),
+  dv AS (SELECT c.g, med, abs(v - med) AS dev,
+                CAST(sum(cnt) AS BIGINT) AS cnt
+         FROM c JOIN med ON c.g = med.g GROUP BY 1, 2, 3),
+  cum2 AS (SELECT g, dev, cnt,
+                  sum(cnt) OVER (PARTITION BY g ORDER BY dev
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm
+           FROM dv),
+  mad AS (SELECT cum2.g, min(dev) AS mad
+          FROM cum2 JOIN tot USING (g)
+          WHERE cm >= CAST(floor((n + 1) / 2.0) AS BIGINT) GROUP BY 1)
+  SELECT dv.g AS event_type,
+         CAST(sum(dv.cnt) AS BIGINT) AS n,
+         dv.med AS med, mad.mad AS mad,
+         mad.mad * 3.0 * 1.4826 AS hampel_cut,
+         CAST(sum(CASE WHEN dev > mad.mad * 3.0 * 1.4826
+                       THEN dv.cnt ELSE 0 END) AS BIGINT) AS n_outliers,
+         max(dev) AS max_dev
+  FROM dv JOIN mad ON dv.g = mad.g
+  GROUP BY 1, 3, 4 ORDER BY 1
+""")
 def q_events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-type outlier report (operators/robust.mad_outliers):
     exact lower-median + MAD + Hampel cut (k=3, sigma scale 1.4826).
@@ -64,6 +140,25 @@ def q_events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mad_outliers(load_table(spark, sf_dir, "events"))
 
 
+@query("events_dow_seasonality", oracle="""
+  WITH per AS (
+    SELECT event_type, CAST(date_part('dow', ts) AS INT) AS dow,
+           count(*) AS n,
+           CAST(CAST(sum(CAST(round(value, 9) AS DECIMAL(20,9)))
+                     AS VARCHAR) AS DOUBLE) AS sv
+    FROM events GROUP BY 1, 2),
+  tot AS (
+    SELECT event_type, count(*) AS nt,
+           CAST(CAST(sum(CAST(round(value, 9) AS DECIMAL(20,9)))
+                     AS VARCHAR) AS DOUBLE) AS st
+    FROM events GROUP BY 1)
+  SELECT per.event_type, dow, n,
+         sv / CAST(n AS DOUBLE) AS mean_value,
+         (sv / CAST(n AS DOUBLE)) / (st / CAST(nt AS DOUBLE))
+           AS seasonal_index
+  FROM per JOIN tot USING (event_type)
+  ORDER BY 1, 2
+""")
 def q_events_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week seasonal profile per event type: [event_type, dow
     (0=Sunday), n, mean_value, seasonal_index = dow mean / overall
@@ -100,6 +195,24 @@ def q_events_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("frequent_event_trigrams", oracle="""
+  WITH g AS (
+    SELECT user_id,
+           event_type AS step_1,
+           lead(event_type, 1) OVER w AS step_2,
+           lead(event_type, 2) OVER w AS step_3
+    FROM events
+    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+  pu AS (
+    SELECT user_id, step_1, step_2, step_3, count(*) AS occ
+    FROM g WHERE step_3 IS NOT NULL GROUP BY 1, 2, 3, 4)
+  SELECT step_1, step_2, step_3,
+         count(*) AS support,
+         CAST(sum(occ) AS BIGINT) AS occurrences
+  FROM pu GROUP BY 1, 2, 3
+  ORDER BY support DESC, occurrences DESC, step_1, step_2, step_3
+  LIMIT 20
+""")
 def q_frequent_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential-pattern mining (operators/seqmine.py): top-20
     contiguous event-type trigrams by distinct-user support. One
@@ -113,6 +226,35 @@ def q_frequent_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("user_day_snapshot_diff", oracle="""
+  WITH o AS (SELECT user_id, date_trunc('day', ts) AS day,
+               count(*) AS n_events,
+               round(CAST(CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE), 6) AS sum_value,
+               TRUE AS o_present
+             FROM events WHERE event_id % 10 <> 0 GROUP BY 1, 2),
+  n AS (SELECT user_id, date_trunc('day', ts) AS day,
+               count(*) AS n_events,
+               round(CAST(CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE), 6) AS sum_value,
+               TRUE AS n_present
+        FROM events WHERE ts >= TIMESTAMP '2024-01-05 00:00:00' GROUP BY 1, 2),
+  j AS (SELECT user_id, day,
+               o.n_events AS old_n_events, n.n_events AS new_n_events,
+               o.sum_value AS old_sum_value, n.sum_value AS new_sum_value,
+               o_present, n_present,
+               concat_ws(',',
+                 CASE WHEN o.n_events IS DISTINCT FROM n.n_events THEN 'n_events' END,
+                 CASE WHEN o.sum_value IS DISTINCT FROM n.sum_value THEN 'sum_value' END) AS chg
+        FROM o FULL OUTER JOIN n USING (user_id, day)),
+  c AS (SELECT *,
+          CASE WHEN n_present IS NULL THEN 'delete'
+               WHEN o_present IS NULL THEN 'insert'
+               WHEN chg <> '' THEN 'update' END AS change
+        FROM j)
+  SELECT user_id, strftime(day, '%Y-%m-%d') AS day_s, change,
+         CASE WHEN change = 'update' THEN chg ELSE '' END AS changed_cols,
+         old_n_events, new_n_events, old_sum_value, new_sum_value
+  FROM c WHERE change IS NOT NULL
+""")
 def q_user_day_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reload reconciliation via operators/diffing.snapshot_diff: the
     OLD per-(user, day) rollup was built from a load that missed every
@@ -157,6 +299,32 @@ def q_user_day_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# NAIVE all-triples enumeration: the hash match proves the A-priori
+# candidate pruning in operators/basket.market_basket_triples lossless
+@query("market_basket_triples", oracle="""
+  WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+  nn AS (SELECT count(DISTINCT o) AS n FROM b),
+  item AS (SELECT p, count(*) AS item_n FROM b GROUP BY 1),
+  pairs AS (SELECT a.p AS p1, c.p AS p2, count(*) AS pair_n
+            FROM b a JOIN b c ON a.o = c.o AND a.p < c.p
+            GROUP BY 1, 2 HAVING count(*) >= 2),
+  tri AS (SELECT a.p AS p1, c.p AS p2, d.p AS p3, count(*) AS tri_n
+          FROM b a JOIN b c ON a.o = c.o AND a.p < c.p
+                   JOIN b d ON a.o = d.o AND c.p < d.p
+          GROUP BY 1, 2, 3 HAVING count(*) >= 2)
+  SELECT p1, p2, p3, tri_n,
+         tri_n / n AS support,
+         tri_n / pair_n AS confidence,
+         (tri_n * n * n) / (i1.item_n * i2.item_n * i3.item_n) AS lift
+  FROM tri
+  JOIN pairs USING (p1, p2)
+  JOIN item i1 ON i1.p = p1
+  JOIN item i2 ON i2.p = p2
+  JOIN item i3 ON i3.p = p3
+  CROSS JOIN nn
+  ORDER BY lift DESC, p1, p2, p3
+  LIMIT 30
+""")
 def q_market_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A-priori level-3 triple mining (operators/basket.py): frequent
     pairs extended per order, downward-closure pruned; naive
@@ -174,6 +342,38 @@ def q_market_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 RAKE_STOPWORDS = ("the", "a", "join", "merge", "small", "fast", "slow", "big")
 
 
+@query("rake_keyphrases", oracle=f"""
+  WITH t AS ({_SQL_TOKS}),
+  w AS (SELECT doc_id,
+               unnest(generate_series(1, len(toks))) AS pos,
+               unnest(toks) AS word
+        FROM t),
+  m AS (SELECT doc_id, pos, word,
+               CASE WHEN word IN ('the', 'a', 'join', 'merge', 'small', 'fast', 'slow', 'big') THEN 1 ELSE 0 END AS is_stop
+        FROM w),
+  isl AS (SELECT doc_id, pos, word,
+                 sum(is_stop) OVER (PARTITION BY doc_id ORDER BY pos
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS phrase_id,
+                 is_stop
+          FROM m),
+  members AS (SELECT doc_id, phrase_id, pos, word FROM isl WHERE is_stop = 0),
+  phr AS (SELECT doc_id, phrase_id,
+                 string_agg(word, ' ' ORDER BY pos) AS phrase,
+                 count(*) AS plen
+          FROM members GROUP BY 1, 2 HAVING count(*) <= 4),
+  wstat AS (SELECT word, sum(plen) / count(*) AS wscore
+            FROM members JOIN phr USING (doc_id, phrase_id) GROUP BY 1),
+  pscore AS (SELECT doc_id, phrase_id,
+                    CAST(CAST(sum(CAST(round(wscore, 9) AS DECIMAL(20,9)))
+                         AS VARCHAR) AS DOUBLE) AS score
+             FROM members JOIN phr USING (doc_id, phrase_id)
+                          JOIN wstat USING (word)
+             GROUP BY 1, 2)
+  SELECT phrase, count(*) AS n, round(max(score), 6) AS score
+  FROM phr JOIN pscore USING (doc_id, phrase_id)
+  GROUP BY phrase
+  ORDER BY score DESC, phrase ASC LIMIT 20
+""")
 def q_rake_keyphrases(spark: SparkSession, sf_dir: str, max_len: int = 4,
                       topn: int = 20) -> DataFrame:
     """RAKE keyphrase extraction (Rose et al. 2010): candidate phrases
@@ -251,6 +451,22 @@ def q_rake_keyphrases(spark: SparkSession, sf_dir: str, max_len: int = 4,
     )
 
 
+@query("training_negatives", oracle="""
+  WITH pos AS (SELECT DISTINCT o_custkey AS custkey, l_partkey AS part
+               FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+  np AS (SELECT count(*) AS n_parts FROM part),
+  cand AS (SELECT custkey, part AS pos_part, slot,
+                  CAST(concat('0x', substr(md5(concat_ws(':', 'neg1',
+                        CAST(custkey AS VARCHAR), CAST(part AS VARCHAR),
+                        CAST(slot AS VARCHAR))), 1, 8)) AS BIGINT)
+                  % n_parts AS neg_part
+           FROM pos CROSS JOIN np
+           CROSS JOIN (SELECT unnest(range(1, 4)) AS slot))
+  SELECT custkey, pos_part, CAST(slot AS BIGINT) AS slot, neg_part
+  FROM cand c
+  WHERE NOT EXISTS (SELECT 1 FROM pos p
+                    WHERE p.custkey = c.custkey AND p.part = c.neg_part)
+""")
 def q_training_negatives(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     """Deterministic negative sampling for (customer, part) training
     pairs -- the contrastive-training data op: every positive
@@ -310,6 +526,25 @@ def q_training_negatives(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFr
     ).select("custkey", "pos_part", F.col("slot").cast("long").alias("slot"), "neg_part")
 
 
+@query("item_item_cf", oracle="""
+  WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+  item AS (SELECT p, count(*) AS item_n FROM b GROUP BY 1),
+  pairs AS (SELECT a.p AS p1, c.p AS p2, count(*) AS c12
+            FROM b a JOIN b c ON a.o = c.o AND a.p < c.p
+            GROUP BY 1, 2 HAVING count(*) >= 2),
+  sym AS (SELECT p1, p2, c12 FROM pairs
+          UNION ALL SELECT p2, p1, c12 FROM pairs),
+  scored AS (SELECT sym.p1 AS part, sym.p2 AS neighbor, c12,
+                    round(c12 / sqrt(CAST(i1.item_n * i2.item_n AS DOUBLE)), 6)
+                      AS cosine
+             FROM sym
+             JOIN item i1 ON i1.p = sym.p1
+             JOIN item i2 ON i2.p = sym.p2)
+  SELECT part, neighbor, c12, cosine, rank FROM (
+    SELECT *, CAST(row_number() OVER (PARTITION BY part
+              ORDER BY cosine DESC, neighbor ASC) AS BIGINT) AS rank
+    FROM scored) WHERE rank <= 5
+""")
 def q_item_item_cf(spark: SparkSession, sf_dir: str, min_pair: int = 2,
                    topn: int = 5) -> DataFrame:
     """Item-item collaborative filtering (Sarwar et al., WWW'01) over
@@ -366,6 +601,80 @@ def q_item_item_cf(spark: SparkSession, sf_dir: str, min_pair: int = 2,
     )
 
 
+@query("dq_audit", oracle="""
+  WITH lt AS (
+    SELECT l_orderkey,
+           round(sum(CAST(l_extendedprice AS DECIMAL(18,2))
+                     * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))
+                     * (CAST(1 AS DECIMAL(8,4)) + CAST(l_tax AS DECIMAL(8,4)))), 2) AS tot
+    FROM lineitem GROUP BY 1)
+  SELECT 'lineitem_qty_in_1_50' AS check_name, count(*) AS n_checked,
+         CAST(count(*) FILTER (l_quantity < 1 OR l_quantity > 50) AS BIGINT) AS n_violations
+  FROM lineitem
+  UNION ALL
+  SELECT 'lineitem_discount_in_0_01', count(*),
+         count(*) FILTER (l_discount < 0 OR l_discount > CAST(0.1 AS DOUBLE))
+  FROM lineitem
+  UNION ALL
+  SELECT 'lineitem_returnflag_domain', count(*),
+         count(*) FILTER (l_returnflag NOT IN ('A', 'N', 'R'))
+  FROM lineitem
+  UNION ALL
+  SELECT 'lineitem_pk_nonnull', count(*),
+         count(*) FILTER (l_orderkey IS NULL OR l_linenumber IS NULL)
+  FROM lineitem
+  UNION ALL
+  SELECT 'orders_totalprice_positive', count(*),
+         count(*) FILTER (o_totalprice <= 0)
+  FROM orders
+  UNION ALL
+  SELECT 'events_value_nonnull', count(*),
+         count(*) FILTER (value IS NULL)
+  FROM events
+  UNION ALL
+  SELECT 'events_props_json_valid', count(*),
+         count(*) FILTER (NOT json_valid(props))
+  FROM events
+  UNION ALL
+  SELECT 'events_event_id_nonnull', count(*),
+         count(*) FILTER (event_id IS NULL)
+  FROM events
+  UNION ALL
+  SELECT 'documents_nchars_consistent', count(*),
+         count(*) FILTER (n_chars <> length(text))
+  FROM documents
+  UNION ALL
+  SELECT 'documents_text_nonempty', count(*),
+         count(*) FILTER (text IS NULL OR length(text) = 0)
+  FROM documents
+  UNION ALL
+  SELECT 'orders_pk_unique', count(*), count(*) - count(DISTINCT o_orderkey)
+  FROM orders
+  UNION ALL
+  SELECT 'events_pk_unique', count(*), count(*) - count(DISTINCT event_id)
+  FROM events
+  UNION ALL
+  SELECT 'lineitem_pk_unique', count(*),
+         count(*) - count(DISTINCT (l_orderkey, l_linenumber))
+  FROM lineitem
+  UNION ALL
+  SELECT 'orders_fk_customer', count(*),
+         count(*) FILTER (o_custkey NOT IN (SELECT c_custkey FROM customer))
+  FROM orders
+  UNION ALL
+  SELECT 'lineitem_fk_orders', count(*),
+         count(*) FILTER (l_orderkey NOT IN (SELECT o_orderkey FROM orders))
+  FROM lineitem
+  UNION ALL
+  SELECT 'orders_have_lineitems', count(*),
+         count(*) FILTER (o_orderkey NOT IN (SELECT l_orderkey FROM lineitem))
+  FROM orders
+  UNION ALL
+  SELECT 'orders_totalprice_reconciles', count(*),
+         count(*) FILTER (abs(CAST(o_totalprice AS DECIMAL(18,2)) - tot)
+                          > CAST(0.01 AS DECIMAL(18,2)))
+  FROM orders JOIN lt ON o_orderkey = l_orderkey
+""")
 def q_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Warehouse-wide data-quality audit (operators/dq.py): 17
     checks — domain, PK uniqueness, referential integrity, decimal
@@ -378,6 +687,31 @@ def q_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dq_audit(spark, sf_dir)
 
 
+# Weighted median: SELECTION by exact integer-cent comparisons --
+# the picked quantity is a value present in the data, so neither
+# engine interpolates. DuckDB's HUGEINT window sums cast back to
+# BIGINT to match Spark's long.
+@query("brand_weighted_median", oracle="""
+  WITH j AS (
+    SELECT p_brand,
+           CAST(CAST(l_quantity AS DECIMAL(12,2)) AS BIGINT) AS qty,
+           CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
+                AS BIGINT) AS cents
+    FROM lineitem JOIN part ON l_partkey = p_partkey),
+  grain AS (
+    SELECT p_brand, qty, CAST(sum(cents) AS BIGINT) AS w
+    FROM j GROUP BY 1, 2),
+  cum AS (
+    SELECT p_brand, qty, w,
+           sum(w) OVER (PARTITION BY p_brand ORDER BY qty
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
+           sum(w) OVER (PARTITION BY p_brand) AS tw
+    FROM grain)
+  SELECT p_brand, CAST(min(qty) AS BIGINT) AS weighted_median,
+         CAST(max(tw) AS BIGINT) AS total_weight
+  FROM cum WHERE tw > 0 AND 2 * cw >= tw
+  GROUP BY 1 ORDER BY 1
+""")
 def q_brand_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue-weighted median quantity per part brand
     (operators/robust.weighted_median): the quantity level below
@@ -408,6 +742,45 @@ def q_brand_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     return weighted_median(j, "p_brand", "qty", "cents")
 
 
+# Chi-square cells: (o*n - r*c)^2 / (r*c*n) on exact integers,
+# HUGEINT here / DECIMAL(38,0) in Spark, string-routed to double on
+# both sides before the one square-and-divide; terms 9dp-decimal
+# summed exactly, string-routed out.
+@query("segment_nation_chisq", oracle="""
+  WITH cells AS (
+    SELECT c_mktsegment AS r_cat, n_name AS c_cat,
+           count(*) AS o
+    FROM customer JOIN nation ON c_nationkey = n_nationkey
+    GROUP BY 1, 2),
+  tot AS (
+    SELECT r_cat, c_cat, o,
+           CAST(sum(o) OVER (PARTITION BY r_cat) AS HUGEINT) AS r,
+           CAST(sum(o) OVER (PARTITION BY c_cat) AS HUGEINT) AS c,
+           CAST(sum(o) OVER () AS HUGEINT) AS n
+    FROM cells),
+  dims AS (
+    SELECT CAST(count(DISTINCT r_cat) AS BIGINT) AS nr,
+           CAST(count(DISTINCT c_cat) AS BIGINT) AS nc
+    FROM cells),
+  scored AS (
+    SELECT r_cat, c_cat, o, r, c, n, nr, nc,
+           CAST(CAST(CAST(o AS HUGEINT) * n - r * c AS VARCHAR)
+                AS DOUBLE) AS numd,
+           CAST(CAST(r * c * n AS VARCHAR) AS DOUBLE) AS dend,
+           CAST(CAST(r * c AS VARCHAR) AS DOUBLE) AS rcd
+    FROM tot CROSS JOIN dims),
+  t9 AS (
+    SELECT r_cat, c_cat, o, nr, nc,
+           rcd / CAST(n AS DOUBLE) AS expected,
+           CAST(round(numd * numd / dend, 9) AS DECIMAL(20,9)) AS term9
+    FROM scored)
+  SELECT r_cat AS c_mktsegment, c_cat AS n_name,
+         CAST(o AS BIGINT) AS observed, expected,
+         CAST(CAST(term9 AS VARCHAR) AS DOUBLE) AS term,
+         CAST(CAST(sum(term9) OVER () AS VARCHAR) AS DOUBLE) AS chi2,
+         CAST((nr - 1) * (nc - 1) AS BIGINT) AS dof
+  FROM t9 ORDER BY 1, 2
+""")
 def q_segment_nation_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square test of independence between market segment and
     nation (operators/evalmetrics.chi_square_cells): per observed
@@ -431,6 +804,48 @@ def q_segment_nation_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chi_square_cells(j, "c_mktsegment", "n_name")
 
 
+# Benford: digit by string head; the transcendental benford_p frozen
+# at 9dp as DECIMAL(10,9) BEFORE expected = n*p (exact decimal
+# product, string-routed), so both engines square/divide identical
+# doubles; 9dp-decimal terms summed exactly into chi2.
+@query("orders_benford", oracle="""
+  WITH c AS (
+    SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                AS BIGINT) AS cents
+    FROM orders),
+  d AS (
+    SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS BIGINT) AS digit,
+           count(*) AS o
+    FROM c GROUP BY 1),
+  spine AS (SELECT CAST(range AS BIGINT) AS digit FROM range(1, 10)),
+  f AS (
+    SELECT s.digit, CAST(COALESCE(o, 0) AS BIGINT) AS observed
+    FROM spine s LEFT JOIN d USING (digit)),
+  t AS (
+    SELECT digit, observed,
+           CAST(sum(observed) OVER () AS BIGINT) AS total_n,
+           CAST(round(log10(1.0 + 1.0 / CAST(digit AS DOUBLE)), 9)
+                AS DECIMAL(10,9)) AS p9
+    FROM f),
+  s2 AS (
+    SELECT digit, observed, total_n, p9,
+           CAST(CAST(CAST(CAST(total_n AS DECIMAL(19,0)) * p9
+                          AS DECIMAL(30,9)) AS VARCHAR) AS DOUBLE) AS e
+    FROM t),
+  s3 AS (
+    SELECT *, CAST(round((CAST(observed AS DOUBLE) - e)
+                         * (CAST(observed AS DOUBLE) - e) / e, 9)
+                   AS DECIMAL(20,9)) AS term9
+    FROM s2)
+  SELECT digit, observed, total_n,
+         CAST(observed AS DOUBLE) / CAST(total_n AS DOUBLE)
+           AS observed_share,
+         CAST(CAST(p9 AS VARCHAR) AS DOUBLE) AS benford_p,
+         e AS expected,
+         CAST(CAST(term9 AS VARCHAR) AS DOUBLE) AS term,
+         CAST(CAST(sum(term9) OVER () AS VARCHAR) AS DOUBLE) AS chi2
+  FROM s3 ORDER BY digit
+""")
 def q_orders_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law audit of order totals
     (operators/drift.benford_first_digit): first-digit distribution
@@ -451,6 +866,35 @@ def q_orders_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Lorenz deciles: exact integer cents, integer decile boundaries
+# ((rn-1)*10 // n), shares divide exact longs.
+@query("customer_spend_lorenz", oracle="""
+  WITH spend AS (
+    SELECT o_custkey AS custkey,
+           CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                         AS BIGINT)) AS BIGINT) AS cents
+    FROM orders GROUP BY 1),
+  ranked AS (
+    SELECT custkey, cents,
+           row_number() OVER (ORDER BY cents, custkey) AS rn,
+           count(*) OVER () AS n
+    FROM spend),
+  per AS (
+    SELECT CAST(((rn - 1) * 10) // n AS BIGINT) AS decile,
+           count(*) AS n_customers,
+           CAST(sum(cents) AS BIGINT) AS cents
+    FROM ranked GROUP BY 1)
+  SELECT decile, n_customers, cents,
+         CAST(cents AS DOUBLE)
+           / CAST(CAST(sum(cents) OVER () AS BIGINT) AS DOUBLE)
+           AS share_of_total,
+         CAST(CAST(sum(cents) OVER (ORDER BY decile
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+              AS BIGINT) AS DOUBLE)
+           / CAST(CAST(sum(cents) OVER () AS BIGINT) AS DOUBLE)
+           AS cum_share
+  FROM per ORDER BY decile
+""")
 def q_customer_spend_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lorenz curve by customer decile: rank customers by lifetime
     spend ascending, split into 10 equal-population deciles, report
@@ -499,6 +943,38 @@ def q_customer_spend_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("decile")
 
 
+# Trimmed mean: integer rank boundaries (k = n*5 div 100), clamp
+# arithmetic on exact cumulative counts, two final long/long
+# divisions -- no interpolation.
+@query("events_trimmed_mean", oracle="""
+  WITH grain AS (
+    SELECT event_type AS g,
+           CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
+           count(*) AS cnt
+    FROM events GROUP BY 1, 2),
+  cum AS (
+    SELECT g, v, cnt,
+           CAST(sum(cnt) OVER (PARTITION BY g ORDER BY v
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+             AS BIGINT) AS cum,
+           CAST(sum(cnt) OVER (PARTITION BY g) AS BIGINT) AS n
+    FROM grain),
+  k AS (
+    SELECT *, (n * 5) // 100 AS k FROM cum),
+  kept AS (
+    SELECT g, v, cnt, n, k,
+           greatest(CAST(0 AS BIGINT),
+                    least(cum, n - k) - greatest(cum - cnt, k)) AS kp
+    FROM k)
+  SELECT g AS event_type,
+         CAST(max(n) AS BIGINT) AS n,
+         CAST(max(k) AS BIGINT) AS n_trimmed_each_side,
+         CAST(CAST(sum(kp * v) AS BIGINT) AS DOUBLE)
+           / CAST(max(n) - 2 * max(k) AS DOUBLE) AS trimmed_mean_cents,
+         CAST(CAST(sum(cnt * v) AS BIGINT) AS DOUBLE)
+           / CAST(max(n) AS DOUBLE) AS mean_cents
+  FROM kept GROUP BY 1 ORDER BY 1
+""")
 def q_events_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5% two-sided trimmed mean of event value per type
     (operators/robust.trimmed_mean): the robust location estimate
@@ -517,6 +993,45 @@ def q_events_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Winsorized mean: the trimmed-mean machinery with the tails CLAMPED
+# to the rank-(k+1)/(n-k) fences instead of dropped; fences selected
+# by cumulative count, winsorized sum in exact BIGINTs.
+@query("events_winsorized_mean", oracle="""
+  WITH grain AS (
+    SELECT event_type AS g,
+           CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
+           count(*) AS cnt
+    FROM events GROUP BY 1, 2),
+  cum AS (
+    SELECT g, v, cnt,
+           CAST(sum(cnt) OVER (PARTITION BY g ORDER BY v
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+             AS BIGINT) AS cum,
+           CAST(sum(cnt) OVER (PARTITION BY g) AS BIGINT) AS n
+    FROM grain),
+  kk AS (
+    SELECT *, (n * 5) // 100 AS k FROM cum),
+  kept AS (
+    SELECT g, v, cnt, cum, n, k,
+           greatest(CAST(0 AS BIGINT),
+                    least(cum, n - k) - greatest(cum - cnt, k)) AS kp
+    FROM kk),
+  agg AS (
+    SELECT g,
+           CAST(max(n) AS BIGINT) AS n,
+           CAST(max(k) AS BIGINT) AS k,
+           CAST(sum(kp * v) AS BIGINT) AS ks,
+           CAST(sum(cnt * v) AS BIGINT) AS ts,
+           min(CASE WHEN cum >= k + 1 THEN v END) AS lo,
+           min(CASE WHEN cum >= n - k THEN v END) AS hi
+    FROM kept GROUP BY g)
+  SELECT g AS event_type, n, k AS n_clamped_each_side,
+         lo AS lo_cents, hi AS hi_cents,
+         CAST(ks + k * lo + k * hi AS DOUBLE) / CAST(n AS DOUBLE)
+           AS winsorized_mean_cents,
+         CAST(ts AS DOUBLE) / CAST(n AS DOUBLE) AS mean_cents
+  FROM agg ORDER BY 1
+""")
 def q_events_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5% two-sided winsorized mean of event value per type
     (operators/robust.winsorized_mean): trimmed_mean's sibling that
@@ -534,6 +1049,42 @@ def q_events_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# z-test: all inputs exact integer counts; identical float
+# expression shape on both sides; sqrt is IEEE-correctly-rounded.
+@query("ab_conversion_ztest", oracle="""
+  WITH s AS (
+    SELECT user_id, min(ts) AS s0 FROM events
+    WHERE event_type = 'signup' GROUP BY 1),
+  pu AS (
+    SELECT s.user_id,
+           max(CASE WHEN e.event_type = 'purchase'
+                     AND e.ts >= s.s0
+                     AND e.ts < s.s0 + INTERVAL 24 HOURS
+                    THEN 1 ELSE 0 END) AS conv
+    FROM s JOIN events e USING (user_id) GROUP BY 1),
+  v AS (
+    SELECT user_id % 2 AS variant, count(*) AS n,
+           CAST(sum(conv) AS BIGINT) AS c
+    FROM pu GROUP BY 1),
+  w AS (
+    SELECT max(CASE WHEN variant = 0 THEN n END) AS n_a,
+           max(CASE WHEN variant = 0 THEN c END) AS conv_a,
+           max(CASE WHEN variant = 1 THEN n END) AS n_b,
+           max(CASE WHEN variant = 1 THEN c END) AS conv_b
+    FROM v),
+  p AS (
+    SELECT *,
+           CAST(conv_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS p_a,
+           CAST(conv_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS p_b,
+           CAST(conv_a + conv_b AS DOUBLE)
+             / CAST(n_a + n_b AS DOUBLE) AS pool
+    FROM w)
+  SELECT n_a, conv_a, p_a, n_b, conv_b, p_b,
+         (p_a - p_b) / sqrt(pool * (1.0 - pool)
+           * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))
+           AS z_score
+  FROM p
+""")
 def q_ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion z-test on 24h activation between a
     deterministic 50/50 user split (variant = user_id % 2):
@@ -626,6 +1177,38 @@ def q_ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Trailing OLS: exact HUGEINT window statistics over the day grain,
+# RANGE frame (gaps shrink n), string-routed num/den, one division.
+@query("events_trailing_slope", oracle="""
+  WITH daily AS (
+    SELECT event_type, CAST(ts AS DATE) AS day,
+           CAST(sum(CAST(CAST(value AS DECIMAL(12,2)) * 100
+                         AS BIGINT)) AS BIGINT) AS cents
+    FROM events GROUP BY 1, 2),
+  xd AS (
+    SELECT event_type, day,
+           CAST(day - DATE '1970-01-01' AS BIGINT) AS x, cents
+    FROM daily),
+  wsum AS (
+    SELECT event_type, day, cents,
+           CAST(count(*) OVER wnd AS BIGINT) AS n,
+           CAST(sum(x) OVER wnd AS HUGEINT) AS sx,
+           CAST(sum(cents) OVER wnd AS HUGEINT) AS sy,
+           CAST(sum(x * cents) OVER wnd AS HUGEINT) AS sxy,
+           CAST(sum(x * x) OVER wnd AS HUGEINT) AS sxx
+    FROM xd
+    WINDOW wnd AS (PARTITION BY event_type ORDER BY x
+                   RANGE BETWEEN 6 PRECEDING AND CURRENT ROW))
+  SELECT event_type, strftime(day, '%Y-%m-%d') AS day, cents,
+         n AS n_points,
+         CASE WHEN CAST(n AS HUGEINT) * sxx - sx * sx <> 0 THEN
+           CAST(CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS VARCHAR)
+                AS DOUBLE)
+           / CAST(CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS VARCHAR)
+                  AS DOUBLE)
+         END AS slope
+  FROM wsum ORDER BY 1, 2
+""")
 def q_events_trailing_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day OLS revenue slope per event type
     (operators/regression.trailing_ols): for every (type, day), the
@@ -666,6 +1249,30 @@ def q_events_trailing_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Duplicate charges: adjacent same-(user, type, cents) repeats
+# within 7 days via lag -- integer cents/microsecond gaps decide
+# everything.
+@query("duplicate_charge_screen", oracle="""
+  WITH base AS (
+    SELECT user_id, event_type,
+           CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents,
+           event_id, epoch_us(ts) AS us
+    FROM events),
+  lagged AS (
+    SELECT user_id, event_type, cents,
+           lag(event_id) OVER w AS first_event_id,
+           event_id AS second_event_id,
+           us - lag(us) OVER w AS gap_us
+    FROM base
+    WINDOW w AS (PARTITION BY user_id, event_type, cents
+                 ORDER BY us, event_id))
+  SELECT user_id, event_type, cents, first_event_id, second_event_id,
+         CAST(gap_us AS BIGINT) AS gap_us
+  FROM lagged
+  WHERE first_event_id IS NOT NULL
+    AND gap_us <= CAST(604800 AS BIGINT) * 1000000
+  ORDER BY user_id, event_type, cents, second_event_id
+""")
 def q_duplicate_charge_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-charge detection: CONSECUTIVE events by the same
     user, same type, same EXACT cent amount within 7 days -- the
@@ -688,6 +1295,25 @@ def q_duplicate_charge_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicate_charge_pairs(load_table(spark, sf_dir, "events"))
 
 
+# Rolling WAU: contribute-forward expansion at the user-day grain
+# (sliding distinct counts don't decompose into window sums).
+@query("events_rolling_wau", oracle="""
+  WITH ud AS (
+    SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
+  days AS (SELECT DISTINCT d FROM ud),
+  expanded AS (
+    SELECT user_id, d + CAST(t.i AS INTEGER) AS dx
+    FROM ud CROSS JOIN (SELECT range AS i FROM range(0, 7)) t),
+  wau AS (
+    SELECT dx, count(DISTINCT user_id) AS wau
+    FROM expanded JOIN days ON dx = days.d GROUP BY 1),
+  dau AS (
+    SELECT d, count(DISTINCT user_id) AS dau FROM ud GROUP BY 1)
+  SELECT strftime(dau.d, '%Y-%m-%d') AS day, dau, wau,
+         CAST(dau AS DOUBLE) / CAST(wau AS DOUBLE) AS stickiness
+  FROM dau JOIN wau ON dau.d = wau.dx
+  ORDER BY 1
+""")
 def q_events_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day distinct active users per observed day, with
     same-day actives and the DAU/WAU stickiness ratio -- the product
@@ -733,6 +1359,40 @@ def q_events_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Hamilton-apportioned stratified sample: all-integer quota
+# arithmetic, md5-hex selection order (portable string compare).
+@query("stratified_sample_exact", oracle="""
+  WITH c AS (SELECT lang AS g, count(*) AS n_h FROM documents
+             GROUP BY 1),
+  t AS (
+    SELECT g, n_h,
+           CAST(sum(n_h) OVER () AS BIGINT) AS tot
+    FROM c),
+  q AS (
+    SELECT g, n_h, tot,
+           (tot // 10 * n_h) // tot AS q0,
+           (tot // 10 * n_h) % tot AS r,
+           tot // 10 AS n_samp
+    FROM t),
+  rk AS (
+    SELECT *, row_number() OVER (ORDER BY r DESC, g) AS rr,
+           n_samp - sum(q0) OVER () AS deficit
+    FROM q),
+  quota AS (
+    SELECT g, n_h,
+           CAST(q0 + CASE WHEN rr <= deficit THEN 1 ELSE 0 END
+                AS BIGINT) AS quota
+    FROM rk),
+  sel AS (
+    SELECT lang, doc_id,
+           row_number() OVER (PARTITION BY lang
+             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rnk
+    FROM documents)
+  SELECT sel.lang, doc_id, n_h, qt.quota AS quota
+  FROM sel JOIN quota qt ON sel.lang = qt.g
+  WHERE rnk <= qt.quota
+  ORDER BY lang, doc_id
+""")
 def q_stratified_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 10% stratified document sample with largest-remainder
     (Hamilton) apportionment (operators/curation.stratified_sample):
@@ -748,6 +1408,37 @@ def q_stratified_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stratified_sample(load_table(spark, sf_dir, "documents"))
 
 
+# Top-N + OTHERS: exact-micros rank with deterministic tie-break,
+# tail rolled into one row so shares sum to 1.
+@query("nation_top_brands_others", oracle="""
+  WITH base AS (
+    SELECT n_name, p_brand,
+           CAST(sum(CAST(
+             (CAST(l_extendedprice AS DECIMAL(12,2))
+              * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4))))
+             * 1000000 AS BIGINT)) AS BIGINT) AS micros
+    FROM lineitem
+    JOIN supplier ON l_suppkey = s_suppkey
+    JOIN nation ON s_nationkey = n_nationkey
+    JOIN part ON l_partkey = p_partkey
+    GROUP BY 1, 2),
+  rk AS (
+    SELECT *, row_number() OVER (PARTITION BY n_name
+              ORDER BY micros DESC, p_brand) AS rk
+    FROM base),
+  rolled AS (
+    SELECT n_name,
+           CASE WHEN rk <= 3 THEN p_brand ELSE 'OTHERS' END AS brand,
+           count(*) AS n_brands,
+           CAST(sum(micros) AS BIGINT) AS mi
+    FROM rk GROUP BY 1, 2)
+  SELECT n_name, brand, n_brands,
+         CAST(mi AS DOUBLE) / 1000000.0 AS revenue,
+         CAST(mi AS DOUBLE)
+           / CAST(CAST(sum(mi) OVER (PARTITION BY n_name) AS BIGINT)
+                  AS DOUBLE) AS share
+  FROM rolled ORDER BY 1, 5 DESC, 2
+""")
 def q_nation_top_brands_others(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-N-with-OTHERS report: per supplier nation, the 3 highest-
     revenue part brands by exact micros plus ONE 'OTHERS' row

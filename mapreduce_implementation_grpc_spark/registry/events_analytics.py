@@ -1,4 +1,7 @@
-"""registry part 07: events_analytics (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""Registry queries for event and relational analytics built in the
+registry (as-of joins, percentiles, windows, sessions), each with its
+DuckDB oracle.
+"""
 
 from __future__ import annotations
 
@@ -7,6 +10,8 @@ from .shared import (
     F,
     SparkSession,
     Window,
+    _SQL_TOKS,
+    _SQL_WORDCOUNT,
     analytics,
     corpus_from_documents,
     curate_documents,
@@ -14,50 +19,22 @@ from .shared import (
     materialize,
     word_count,
 )
-
-q_events_rollup = analytics.events_rollup
-q_repeat_customers = analytics.repeat_customers
-q_distinct_users = analytics.distinct_users_daily
-q_approx_distinct_users = analytics.approx_distinct_users
-q_orders_monthly = analytics.orders_monthly
-q_events_asof_error = analytics.events_asof_last_error
-q_events_pivot = analytics.events_pivot_daily
-q_customers_without_orders = analytics.customers_without_orders
-q_brands_shipped = analytics.brands_shipped
-q_events_quantiles = analytics.events_value_quantiles
-q_events_trailing_hour = analytics.events_trailing_hour
-q_events_type_trend = analytics.events_type_trend
-q_revenue_forecast = analytics.revenue_forecast
-q_events_cube = analytics.events_cube
-q_orders_price_deciles = analytics.orders_price_deciles
-q_stratified_sample = analytics.stratified_sample
-q_signup_funnel = analytics.signup_purchase_funnel
-q_shipping_priority = analytics.shipping_priority
-q_late_shipments = analytics.late_shipments
-q_events_anomaly_zscore = analytics.events_anomaly_zscore
-q_customer_spend_percentiles = analytics.customer_spend_percentiles
-q_orders_grouping_sets = analytics.orders_grouping_sets
-q_purchase_and_signup_users = analytics.purchase_and_signup_users
-q_large_orders = analytics.large_orders
-q_order_priority_backlog = analytics.order_priority_backlog
-q_returned_items = analytics.returned_items
-q_important_parts = analytics.important_parts
-q_promo_revenue = analytics.promo_revenue
-q_sales_opportunity = analytics.sales_opportunity
-q_volume_shipping = analytics.volume_shipping
-q_market_share = analytics.market_share
-q_large_volume_customers = analytics.large_volume_customers
-q_disjunctive_revenue = analytics.disjunctive_revenue
-q_customer_distribution = analytics.customer_distribution
-q_top_supplier = analytics.top_supplier
-q_small_qty_revenue = analytics.small_qty_revenue
-q_waiting_suppliers = analytics.waiting_suppliers
-q_product_profit = analytics.product_profit
-q_supplier_part_counts = analytics.supplier_part_counts
-q_dominant_suppliers = analytics.dominant_suppliers
-q_purchase_attribution = analytics.purchase_attribution
+from .oracle_builders import (
+    _curate_documents_sql,
+    _projection_sql,
+)
+from .analytics_plans import _SQL_PURCHASE_ATTRIBUTION
+from .declare import query
 
 
+@query("attribution_summary", oracle=f"""
+      WITH att AS ({_SQL_PURCHASE_ATTRIBUTION})
+      SELECT first_touch, count(*) AS n_purchases,
+             CAST(CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE)
+               AS total_revenue
+      FROM att GROUP BY first_touch
+      ORDER BY n_purchases DESC, first_touch
+    """)
 def q_attribution_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The attribution REPORT: purchases and revenue rolled up by the
     session's first-touch channel -- what a growth team actually
@@ -76,7 +53,20 @@ def q_attribution_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
+# two-table point-in-time join: DuckDB's native ASOF JOIN is the
+# oracle for the union+window implementation
+@query("events_asof_features", oracle="""
+      WITH h AS (
+        SELECT user_id, date_trunc('hour', ts) + INTERVAL 1 HOUR AS fts,
+               count(*) AS feat_n,
+               round(CAST(CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE), 6) AS feat_value
+        FROM events GROUP BY 1, 2)
+      SELECT e.event_id, e.user_id, e.event_type,
+             strftime(e.ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
+             h.feat_n, h.feat_value
+      FROM events e ASOF LEFT JOIN h
+        ON e.user_id = h.user_id AND e.ts >= h.fts
+    """)
 def q_events_asof_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time feature attach: each event joined (as-of) to the
     per-user stats of the latest fully COMPLETED hour before it --
@@ -109,6 +99,14 @@ def q_events_asof_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("events_range_join", oracle="""
+      SELECT l.user_id, l.event_id AS purchase_id, r.event_id AS click_id,
+             epoch_us(l.ts) - epoch_us(r.ts) AS gap_us
+      FROM events l JOIN events r ON l.user_id = r.user_id
+      WHERE l.event_type = 'purchase' AND r.event_type = 'click'
+        AND r.ts <= l.ts
+        AND epoch_us(r.ts) >= epoch_us(l.ts) - 86400000000
+    """)
 def q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attribution range join: every click within 24 h BEFORE a
     purchase by the same user. Bucketed equi-join plan
@@ -131,6 +129,27 @@ def q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# nearest in either direction within tolerance; tie (equal
+# distance past vs future) prefers the past row -> at equal
+# |gap_us| the NEGATIVE gap sorts first
+@query("events_asof_nearest", oracle="""
+      WITH p AS (SELECT user_id, ts, event_id AS purchase_id
+                 FROM events WHERE event_type = 'purchase'),
+      c AS (SELECT user_id, ts, min(event_id) AS click_id
+            FROM events WHERE event_type = 'click' GROUP BY 1, 2),
+      pairs AS (SELECT p.purchase_id, c.click_id,
+                       epoch_us(c.ts) - epoch_us(p.ts) AS gap_us
+                FROM p JOIN c ON p.user_id = c.user_id
+                 AND abs(epoch_us(c.ts) - epoch_us(p.ts)) <= 7200000000),
+      best AS (SELECT purchase_id, click_id, gap_us FROM (
+          SELECT *, row_number() OVER (PARTITION BY purchase_id
+                    ORDER BY abs(gap_us) ASC, gap_us ASC) AS rn
+          FROM pairs) WHERE rn = 1)
+      SELECT p.purchase_id, p.user_id,
+             strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
+             best.click_id, best.gap_us
+      FROM p LEFT JOIN best USING (purchase_id)
+    """)
 def q_events_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-event attach: each purchase joined to the CLOSEST click
     by the same user within +-2 h, in either direction (ties prefer
@@ -172,6 +191,7 @@ def q_events_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("embedding_project", oracle=_projection_sql())
 def q_embedding_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss random projection 64 -> 8 dims with
     deterministic splitmix64 directions (operators/projection.py): per-row
@@ -182,6 +202,17 @@ def q_embedding_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     return project_embeddings(load_table(spark, sf_dir, "embeddings"))
 
 
+@query("events_hopping", oracle="""
+      WITH e AS (SELECT epoch_us(ts) AS us, value FROM events),
+      h AS (
+        SELECT (us // 900000000) * 900 - i * 900 AS ws, value
+        FROM e, (SELECT unnest(range(4)) AS i)
+      )
+      SELECT strftime(make_timestamp(ws * 1000000), '%Y-%m-%d %H:%M:%S') AS win_start,
+             count(*) AS n_events,
+             CAST(CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_value
+      FROM h GROUP BY 1
+    """)
 def q_events_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping-window aggregate (1 h windows sliding every 15 min):
     each event lands in exactly 4 overlapping windows -- the batch
@@ -205,6 +236,17 @@ def q_events_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("word_skew_profile", oracle=f"""
+      WITH w AS ({_SQL_WORDCOUNT})
+      SELECT count(*) AS n_words,
+             CAST(sum(cnt) AS BIGINT) AS n_tokens,
+             CAST(max(cnt) AS BIGINT) AS max_cnt,
+             round(quantile_cont(cnt, 0.5), 6) AS p50,
+             round(quantile_cont(cnt, 0.9), 6) AS p90,
+             round(quantile_cont(cnt, 0.99), 6) AS p99,
+             round(max(cnt) / sum(cnt), 6) AS top1_share
+      FROM w
+    """)
 def q_word_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-skew diagnostic: the distribution of per-key row counts
     (here: the word-count keys, the reference's real skew -- stopword
@@ -226,6 +268,20 @@ def q_word_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("events_quantiles_binned", oracle="""
+      WITH b AS (SELECT event_type, CAST(floor(value / 10.0) AS BIGINT) AS bin,
+                        count(*) AS c
+                 FROM events GROUP BY 1, 2),
+      cum AS (SELECT *, sum(c) OVER (PARTITION BY event_type ORDER BY bin
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+              sum(c) OVER (PARTITION BY event_type) AS n FROM b)
+      SELECT event_type,
+             round(CAST(min(CASE WHEN cum >= ceil(0.5 * n) THEN bin END) AS DOUBLE) * CAST(10.0 AS DOUBLE), 6) AS p50_bin,
+             round(CAST(min(CASE WHEN cum >= ceil(0.9 * n) THEN bin END) AS DOUBLE) * CAST(10.0 AS DOUBLE), 6) AS p90_bin,
+             round(CAST(min(CASE WHEN cum >= ceil(0.99 * n) THEN bin END) AS DOUBLE) * CAST(10.0 AS DOUBLE), 6) AS p99_bin,
+             CAST(max(n) AS BIGINT) AS n_events
+      FROM cum GROUP BY event_type
+    """)
 def q_events_quantiles_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic mergeable quantile sketch: fixed-width
     histogram bins (the counts are exact integers, so unlike GK/KLL
@@ -262,6 +318,8 @@ def q_events_quantiles_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# no oracle: GK sketch quantiles are approximate by design (rows-only check)
+@query("events_quantiles_approx", oracle=None)
 def q_events_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-based percentiles (Greenwald-Khanna via
     approx_percentile, rank error <= n/accuracy): the single-pass,
@@ -279,6 +337,26 @@ def q_events_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("doc_perplexity", oracle=f"""
+      WITH t AS ({_SQL_TOKS}),
+      tk AS (SELECT doc_id, unnest(toks) AS w FROM t),
+      uni AS (SELECT w, count(*) AS c1 FROM tk GROUP BY 1),
+      v AS (SELECT CAST(count(*) AS DOUBLE) AS v FROM uni),
+      db AS (
+        SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2, count(*) AS m
+        FROM (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i FROM t)
+        GROUP BY 1, 2, 3),
+      big AS (SELECT w1, w2, sum(m) AS c12 FROM db GROUP BY 1, 2),
+      sc AS (
+        SELECT db.doc_id, CAST(db.m AS DECIMAL(10,0)) AS m,
+               CAST(round(ln((big.c12 + 1.0) / (uni.c1 + v.v)), 9)
+                    AS DECIMAL(12,9)) AS term
+        FROM db JOIN big USING (w1, w2) JOIN uni ON uni.w = db.w1, v)
+      SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_bigrams,
+             round(-(CAST(CAST(sum(m * term) AS VARCHAR) AS DOUBLE)) / sum(m), 6)
+               AS cross_entropy
+      FROM sc GROUP BY 1
+    """)
 def q_doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM cross-entropy per document (add-1 smoothing, model
     trained on the corpus itself) -- the perplexity quality filter of
@@ -289,6 +367,25 @@ def q_doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigram_cross_entropy(load_table(spark, sf_dir, "documents"))
 
 
+@query("doc_tf_cosine", oracle=f"""
+      WITH t AS ({_SQL_TOKS}),
+      tk AS (SELECT doc_id, unnest(toks) AS w FROM t),
+      tf AS (SELECT doc_id, w, count(*) AS tf FROM tk GROUP BY 1, 2),
+      dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1),
+      kept AS (SELECT tf.doc_id, tf.w, tf.tf
+               FROM tf JOIN dfq USING (w) WHERE df <= 100),
+      nrm AS (SELECT doc_id, sum(tf * tf) AS n2 FROM kept GROUP BY 1),
+      dots AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                      count(*) AS n_shared_terms, sum(a.tf * b.tf) AS dot
+               FROM kept a JOIN kept b USING (w)
+               WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
+      cos AS (SELECT doc_a, doc_b, CAST(n_shared_terms AS BIGINT) AS n_shared_terms,
+                     round(dot / (sqrt(CAST(na.n2 AS DOUBLE))
+                                  * sqrt(CAST(nb.n2 AS DOUBLE))), 6) AS cosine
+              FROM dots JOIN nrm na ON na.doc_id = dots.doc_a
+                        JOIN nrm nb ON nb.doc_id = dots.doc_b)
+      SELECT * FROM cos WHERE cosine >= 0.3
+    """)
 def q_doc_tf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse lexical all-pairs similarity: token-count cosine over
     the rare-term subspace (df <= 100) via an inverted-index
@@ -300,23 +397,12 @@ def q_doc_tf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tf_cosine_pairs(load_table(spark, sf_dir, "documents"))
 
 
+@query("curate_documents", oracle=_curate_documents_sql())
 def q_curate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed curation pipeline, oracle-checked end to end now
     that the MinHash cluster stage uses portable hashing. EAGER:
     cluster propagation rounds run at DataFrame-construction time."""
     return curate_documents(spark, sf_dir)
-q_orders_running_total = analytics.orders_running_total
-q_cheapest_supplier = analytics.cheapest_supplier
-q_nation_market_share = analytics.nation_market_share
-q_events_last_per_user = analytics.events_last_per_user
-q_segment_event_stats = analytics.segment_event_stats_salted
-q_label_centroids = analytics.label_centroids
-q_revenue_by_nation = analytics.revenue_by_nation
-q_top_customers = analytics.top_customers
-q_customer_order_ranks = analytics.customer_order_ranks
-q_events_hourly = analytics.events_hourly
-q_user_retention = analytics.user_retention
-q_events_sessionize = analytics.events_sessionize
 
 
 def _exact_ntile(rn, total, k: int):
@@ -334,6 +420,29 @@ def _exact_ntile(rn, total, k: int):
     )
 
 
+@query("customer_rfm", oracle="""
+      WITH ref AS (SELECT max(o_orderdate) AS ref_date FROM orders),
+      per AS (SELECT o_custkey AS custkey,
+                CAST(min(date_diff('day', CAST(o_orderdate AS DATE),
+                                   CAST(ref_date AS DATE))) AS BIGINT) AS recency_days,
+                count(*) AS frequency,
+                CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR)
+                     AS DOUBLE) AS monetary
+              FROM orders CROSS JOIN ref GROUP BY 1),
+      sc AS (SELECT *,
+              CAST(6 - ntile(5) OVER (ORDER BY recency_days ASC, custkey ASC) AS BIGINT) AS r_score,
+              CAST(6 - ntile(5) OVER (ORDER BY frequency DESC, custkey ASC) AS BIGINT) AS f_score,
+              CAST(6 - ntile(5) OVER (ORDER BY monetary DESC, custkey ASC) AS BIGINT) AS m_score
+             FROM per)
+      SELECT custkey, recency_days, frequency, round(monetary, 2) AS monetary,
+             r_score, f_score, m_score,
+             concat(r_score, f_score, m_score) AS rfm_cell,
+             CASE WHEN r_score >= 4 AND f_score >= 4 AND m_score >= 4 THEN 'champion'
+                  WHEN r_score >= 4 AND f_score >= 3 THEN 'loyal'
+                  WHEN r_score <= 2 AND f_score <= 2 THEN 'at_risk'
+                  ELSE 'regular' END AS segment
+      FROM sc
+    """)
 def q_customer_rfm(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     """RFM customer segmentation -- recency / frequency / monetary
     quintile scores (5 = best) plus a coarse segment label: the
@@ -407,6 +516,39 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     )
 
 
+@query("events_cusum", oracle="""
+      WITH daily AS (SELECT event_type, date_trunc('day', ts) AS day,
+                            count(*) AS cnt
+                     FROM events GROUP BY 1, 2),
+      st AS (SELECT event_type, count(*) AS n,
+                    sum(cnt) AS s1, sum(cnt * cnt) AS s2
+             FROM daily GROUP BY 1),
+      j AS (SELECT d.event_type, d.day, d.cnt,
+                   CAST(round((CAST(cnt AS DOUBLE)
+                          - CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
+                         / sqrt((CAST(s2 AS DOUBLE)
+                                 - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
+                                   / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE)), 9)
+                        AS DECIMAL(20,9))
+                   - CAST('0.5' AS DECIMAL(20,9)) AS y
+            FROM daily d JOIN st USING (event_type)),
+      pw AS (SELECT event_type, day, cnt,
+                    sum(y) OVER (PARTITION BY event_type ORDER BY day
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p
+             FROM j),
+      mw AS (SELECT event_type, day, cnt, p,
+                    -- CASE, not least(): DuckDB's least() promotes
+                    -- DECIMAL args to DOUBLE and reintroduces dust
+                    CASE WHEN mp < CAST('0' AS DECIMAL(38,9)) THEN mp
+                         ELSE CAST('0' AS DECIMAL(38,9)) END AS m
+             FROM (SELECT *, min(p) OVER (PARTITION BY event_type ORDER BY day
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mp
+                   FROM pw))
+      SELECT event_type, strftime(day, '%Y-%m-%d') AS day_s, cnt,
+             CAST(CAST(p - m AS VARCHAR) AS DOUBLE) AS cusum,
+             (p - m) > CAST('4.0' AS DECIMAL(20,9)) AS alert
+      FROM mw
+    """)
 def q_events_cusum(spark: SparkSession, sf_dir: str, slack: float = 0.5,
                    threshold: float = 4.0) -> DataFrame:
     """CUSUM change-point monitor (Page 1954) over the daily count
@@ -472,6 +614,19 @@ def q_events_cusum(spark: SparkSession, sf_dir: str, slack: float = 0.5,
     )
 
 
+@query("user_value_twap", oracle="""
+      WITH d AS (
+        SELECT user_id, value,
+               lead(epoch_us(ts)) OVER (PARTITION BY user_id
+                    ORDER BY ts ASC, event_id ASC) - epoch_us(ts) AS dur
+        FROM events)
+      SELECT user_id,
+             CAST(sum(dur) AS BIGINT) AS active_us,
+             round(CAST(CAST(sum(CAST(value AS DECIMAL(10,2))
+                                 * CAST(dur AS DECIMAL(16,0))) AS VARCHAR) AS DOUBLE)
+                   / CAST(sum(dur) AS DOUBLE), 6) AS twap
+      FROM d WHERE dur IS NOT NULL GROUP BY user_id
+    """)
 def q_user_value_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME-weighted average value per user (TWAP): each event's value
     holds until the user's next event (LOCF semantics, as the gap-fill
@@ -516,6 +671,44 @@ def q_user_value_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("session_concurrency", oracle="""
+      WITH g AS (
+        SELECT user_id, ts, event_id,
+               CASE WHEN CAST(floor(epoch(ts)) AS BIGINT)
+                    - CAST(floor(epoch(lag(ts) OVER (PARTITION BY user_id
+                          ORDER BY ts ASC, event_id ASC))) AS BIGINT)
+                    IS DISTINCT FROM NULL
+                AND CAST(floor(epoch(ts)) AS BIGINT)
+                    - CAST(floor(epoch(lag(ts) OVER (PARTITION BY user_id
+                          ORDER BY ts ASC, event_id ASC))) AS BIGINT) <= 1800
+               THEN 0 ELSE 1 END AS chg
+        FROM events),
+      i AS (SELECT user_id, ts, sum(chg) OVER (PARTITION BY user_id
+              ORDER BY ts ASC, event_id ASC
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+            FROM g),
+      sess AS (SELECT user_id, island, min(ts) AS s, max(ts) AS e
+               FROM i GROUP BY 1, 2),
+      seg AS (SELECT unnest(generate_series(date_trunc('day', s),
+                       date_trunc('day', e), INTERVAL 1 DAY)) AS day, s, e
+              FROM sess),
+      clip AS (SELECT day, greatest(s, day) AS a,
+                      least(e, day + INTERVAL 1 DAY - INTERVAL 1 MICROSECOND) AS b
+               FROM seg),
+      pts AS (SELECT day, ts, sum(cs) AS cs, sum(ce) AS ce FROM (
+                SELECT day, a AS ts, 1 AS cs, 0 AS ce FROM clip
+                UNION ALL
+                SELECT day, b, 0, 1 FROM clip)
+              GROUP BY 1, 2),
+      pk AS (SELECT day, cs,
+               coalesce(sum(cs - ce) OVER (PARTITION BY day ORDER BY ts ASC
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + cs AS peak
+             FROM pts)
+      SELECT strftime(day, '%Y-%m-%d') AS day_s,
+             CAST(sum(cs) AS BIGINT) AS n_sessions,
+             CAST(max(peak) AS BIGINT) AS max_concurrent
+      FROM pk GROUP BY day
+    """)
 def q_session_concurrency(spark: SparkSession, sf_dir: str,
                           gap_seconds: int = 1800) -> DataFrame:
     """Peak-load sweep line: per day, how many user sessions were
@@ -597,6 +790,30 @@ def q_session_concurrency(spark: SparkSession, sf_dir: str,
     )
 
 
+# gaps-and-islands rewrite of the native session_window operator:
+# new session when the per-user gap is >= 30 min (session_window's
+# half-open [start, last+gap) boundary); end = last event + gap
+@query("events_session_window", oracle="""
+      WITH g AS (
+        SELECT user_id, ts, event_id, event_type,
+               CASE WHEN lag(ts) OVER w IS NULL
+                    OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
+                    THEN 1 ELSE 0 END AS s
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
+      i AS (
+        SELECT user_id, ts, event_type,
+               sum(s) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+                            ROWS UNBOUNDED PRECEDING) AS island
+        FROM g)
+      SELECT user_id,
+             strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
+             strftime(max(ts) + INTERVAL 30 MINUTE,
+                      '%Y-%m-%d %H:%M:%S') AS session_end,
+             count(*) AS n_events,
+             CAST(count(DISTINCT event_type) AS BIGINT) AS n_types
+      FROM i GROUP BY user_id, island
+    """)
 def q_events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization via Spark's NATIVE session_window operator (the
     dynamic-gap merge inside the aggregation, the same operator the
@@ -622,4 +839,3 @@ def q_events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_types",
         )
     )
-q_events_json_stats = analytics.events_json_stats

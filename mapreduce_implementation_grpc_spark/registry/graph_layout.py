@@ -1,4 +1,7 @@
-"""registry part 09: graph_layout (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""Registry queries for data layout (Z-order, Hilbert), graphs (triangles,
+k-core, reachability, HITS), baskets and corpus statistics, each with
+its DuckDB oracle.
+"""
 
 from __future__ import annotations
 
@@ -7,68 +10,16 @@ from .shared import (
     F,
     SparkSession,
     Window,
+    _SQL_SHINGLES,
+    _SQL_TOKS,
+    _SQL_WORDCOUNT,
     load_table,
     normalized_col,
     top_k,
     with_token_array,
 )
 from .reference_surface import q_wordcount
-
-
-
-def q_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order layout cells: Morton-interleave (user_id, ts) bin
-    ranks and report each quadtree cell's row count + raw dimension
-    spans -- the footer min/max a 100 TB scan would prune with. The
-    multi-dimensional generalization of the reference's contiguous
-    range partitioner (greeter_client.cc:362-390); exact BIGINT
-    arithmetic end to end, so the layout itself is oracle-checked."""
-    from ..operators.zorder import zorder_cells
-
-    return zorder_cells(spark, sf_dir)
-
-
-def q_zorder_skipping_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measured file-skipping tradeoff: total per-chunk dimension
-    spans under a Z-curve layout vs a linear time sort (256 chunks
-    each). Z-order bounds BOTH dimensions; the linear layout leaves
-    every chunk spanning the full user range."""
-    from ..operators.zorder import zorder_skipping_summary
-
-    return zorder_skipping_summary(spark, sf_dir)
-
-
-def q_hilbert_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hilbert-curve layout cells (zorder_cells' twin): the xy2d
-    quadrant+rotate recurrence unrolled as a per-level column chain,
-    exact BIGINT arithmetic, generated from ONE text shared by the
-    Spark expression and the DuckDB oracle (operators/zorder.py
-    _hilbert_level_sql) so the curve itself is hash-checked."""
-    from ..operators.zorder import hilbert_cells
-
-    return hilbert_cells(spark, sf_dir)
-
-
-def q_hilbert_skipping_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hilbert vs Morton under the same oracle-checked skipping
-    metric (256 contiguous curve chunks, total per-dimension spans).
-    Oracle-pinned TIE by geometry: aligned power-of-4 chunks of
-    either curve are the same axis-aligned squares; the curves
-    separate on successor locality (see curve_locality_stats)."""
-    from ..operators.zorder import hilbert_skipping_summary
-
-    return hilbert_skipping_summary(spark, sf_dir)
-
-
-def q_curve_locality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Successor-locality comparison of the two space-filling curves
-    over occupied cells: total/max Manhattan step in bin space and
-    the count of perfectly-adjacent steps. Hilbert's total is the
-    measured win; the window runs over the distinct-reduced cell
-    table only."""
-    from ..operators.zorder import curve_locality_stats
-
-    return curve_locality_stats(spark, sf_dir)
+from .declare import query
 
 
 def _zorder_binned_sql() -> str:
@@ -88,6 +39,173 @@ def _zorder_binned_sql() -> str:
     """
 
 
+@query("zorder_cells", oracle=f"""
+  {_zorder_binned_sql()}
+  SELECT z >> 6 AS cell, count(*) AS cnt,
+         max(user_id) - min(user_id) AS u_span,
+         max(tus) - min(tus) AS t_span_us
+  FROM zz GROUP BY cell ORDER BY cell
+""")
+def q_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Z-order layout cells: Morton-interleave (user_id, ts) bin
+    ranks and report each quadtree cell's row count + raw dimension
+    spans -- the footer min/max a 100 TB scan would prune with. The
+    multi-dimensional generalization of the reference's contiguous
+    range partitioner (greeter_client.cc:362-390); exact BIGINT
+    arithmetic end to end, so the layout itself is oracle-checked."""
+    from ..operators.zorder import zorder_cells
+
+    return zorder_cells(spark, sf_dir)
+
+
+@query("zorder_skipping_summary", oracle=f"""
+  {_zorder_binned_sql()},
+  zc AS (SELECT z >> 8 AS chunk, count(*) AS cnt,
+                max(user_id) - min(user_id) AS u_span,
+                max(tus) - min(tus) AS t_span_us
+         FROM zz GROUP BY chunk),
+  lc AS (SELECT bt AS chunk, count(*) AS cnt,
+                max(user_id) - min(user_id) AS u_span,
+                max(tus) - min(tus) AS t_span_us
+         FROM zz GROUP BY chunk)
+  SELECT 'zorder' AS layout, count(*) AS n_chunks,
+         CAST(sum(cnt) AS BIGINT) AS rows_total,
+         CAST(sum(u_span) AS BIGINT) AS sum_u_span,
+         CAST(sum(t_span_us) AS BIGINT) AS sum_t_span_us
+  FROM zc
+  UNION ALL
+  SELECT 'linear_ts', count(*),
+         CAST(sum(cnt) AS BIGINT), CAST(sum(u_span) AS BIGINT),
+         CAST(sum(t_span_us) AS BIGINT)
+  FROM lc
+""")
+def q_zorder_skipping_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Measured file-skipping tradeoff: total per-chunk dimension
+    spans under a Z-curve layout vs a linear time sort (256 chunks
+    each). Z-order bounds BOTH dimensions; the linear layout leaves
+    every chunk spanning the full user range."""
+    from ..operators.zorder import zorder_skipping_summary
+
+    return zorder_skipping_summary(spark, sf_dir)
+
+
+def _hilbert_base_sql() -> str:
+    """Shared oracle CTE chain: zorder bins -> hx0/hy0/hd0 seed ->
+    the per-level Hilbert recurrence, generated from the same
+    _hilbert_level_sql loop as the Spark column chain."""
+    from ..operators.zorder import hilbert_ctes_sql, morton_sql
+
+    return f"""
+      {_zorder_binned_sql()},
+      hb0 AS (SELECT user_id, tus, bx AS hx0, bt AS hy0,
+                     CAST(0 AS BIGINT) AS hd0,
+                     {morton_sql("bx", "bt")} AS z
+              FROM b),
+      {hilbert_ctes_sql("hb0")}
+    """
+
+
+@query("hilbert_cells", oracle=f"""
+  {_hilbert_base_sql()}
+  SELECT hd8 >> 6 AS cell, count(*) AS cnt,
+         max(user_id) - min(user_id) AS u_span,
+         max(tus) - min(tus) AS t_span_us
+  FROM hb GROUP BY cell ORDER BY cell
+""")
+def q_hilbert_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hilbert-curve layout cells (zorder_cells' twin): the xy2d
+    quadrant+rotate recurrence unrolled as a per-level column chain,
+    exact BIGINT arithmetic, generated from ONE text shared by the
+    Spark expression and the DuckDB oracle (operators/zorder.py
+    _hilbert_level_sql) so the curve itself is hash-checked."""
+    from ..operators.zorder import hilbert_cells
+
+    return hilbert_cells(spark, sf_dir)
+
+
+@query("hilbert_skipping_summary", oracle=f"""
+  {_hilbert_base_sql()},
+  hc AS (SELECT hd8 >> 8 AS chunk, count(*) AS cnt,
+                max(user_id) - min(user_id) AS u_span,
+                max(tus) - min(tus) AS t_span_us
+         FROM hb GROUP BY chunk),
+  zc AS (SELECT z >> 8 AS chunk, count(*) AS cnt,
+                max(user_id) - min(user_id) AS u_span,
+                max(tus) - min(tus) AS t_span_us
+         FROM hb GROUP BY chunk)
+  SELECT 'hilbert' AS layout, count(*) AS n_chunks,
+         CAST(sum(cnt) AS BIGINT) AS rows_total,
+         CAST(sum(u_span) AS BIGINT) AS sum_u_span,
+         CAST(sum(t_span_us) AS BIGINT) AS sum_t_span_us
+  FROM hc
+  UNION ALL
+  SELECT 'zorder', count(*),
+         CAST(sum(cnt) AS BIGINT), CAST(sum(u_span) AS BIGINT),
+         CAST(sum(t_span_us) AS BIGINT)
+  FROM zc
+""")
+def q_hilbert_skipping_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hilbert vs Morton under the same oracle-checked skipping
+    metric (256 contiguous curve chunks, total per-dimension spans).
+    Oracle-pinned TIE by geometry: aligned power-of-4 chunks of
+    either curve are the same axis-aligned squares; the curves
+    separate on successor locality (see curve_locality_stats)."""
+    from ..operators.zorder import hilbert_skipping_summary
+
+    return hilbert_skipping_summary(spark, sf_dir)
+
+
+@query("curve_locality_stats", oracle=f"""
+  {_hilbert_base_sql()},
+  occ AS (SELECT DISTINCT hx0 AS bx, hy0 AS bt, z, hd8 AS h FROM hb),
+  hs AS (SELECT abs(bx - lag(bx) OVER (ORDER BY h))
+              + abs(bt - lag(bt) OVER (ORDER BY h)) AS step FROM occ),
+  zs AS (SELECT abs(bx - lag(bx) OVER (ORDER BY z))
+              + abs(bt - lag(bt) OVER (ORDER BY z)) AS step FROM occ)
+  SELECT 'hilbert' AS layout, count(*) AS n_steps,
+         CAST(sum(step) AS BIGINT) AS total_dist,
+         max(step) AS max_step,
+         CAST(sum(CASE WHEN step = 1 THEN 1 ELSE 0 END) AS BIGINT)
+           AS adjacent_steps
+  FROM hs WHERE step IS NOT NULL
+  UNION ALL
+  SELECT 'zorder', count(*), CAST(sum(step) AS BIGINT), max(step),
+         CAST(sum(CASE WHEN step = 1 THEN 1 ELSE 0 END) AS BIGINT)
+  FROM zs WHERE step IS NOT NULL
+""")
+def q_curve_locality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Successor-locality comparison of the two space-filling curves
+    over occupied cells: total/max Manhattan step in bin space and
+    the count of perfectly-adjacent steps. Hilbert's total is the
+    measured win; the window runs over the distinct-reduced cell
+    table only."""
+    from ..operators.zorder import curve_locality_stats
+
+    return curve_locality_stats(spark, sf_dir)
+
+
+@query("events_gap_fill", oracle="""
+  WITH r AS (
+    SELECT user_id, date_trunc('hour', ts) AS bucket, value,
+           row_number() OVER (PARTITION BY user_id, date_trunc('hour', ts)
+                              ORDER BY ts DESC, event_id DESC) AS rn
+    FROM events WHERE event_type = 'purchase'),
+  obs AS (SELECT user_id, bucket, value FROM r WHERE rn = 1),
+  span AS (SELECT user_id, min(bucket) AS lo, max(bucket) AS hi
+           FROM obs GROUP BY 1),
+  grid AS (SELECT user_id,
+                  unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS bucket
+           FROM span),
+  j AS (SELECT g.user_id, g.bucket, o.value
+        FROM grid g LEFT JOIN obs o USING (user_id, bucket))
+  SELECT user_id,
+         strftime(bucket, '%Y-%m-%d %H:%M:%S') AS hour_s,
+         last_value(value IGNORE NULLS) OVER (
+           PARTITION BY user_id ORDER BY bucket
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_value,
+         value IS NULL AS is_gap
+  FROM j
+""")
 def q_events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly gap-fill + forward fill (LOCF) of each user's last
     purchase value (operators/gapfill.py): one dense row per user per
@@ -111,6 +229,22 @@ def q_events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# NAIVE triple-join enumeration (a<b<c): the hash match proves the
+# degree-oriented wedge form exact.
+@query("cosupply_triangles", oracle="""
+  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
+  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
+        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
+  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+  e AS (SELECT s1, s2 FROM w, t WHERE c >= thr),
+  tri AS (SELECT e1.s1 AS a, e1.s2 AS b, e2.s2 AS c
+          FROM e e1 JOIN e e2 ON e1.s2 = e2.s1
+                    JOIN e e3 ON e1.s1 = e3.s1 AND e2.s2 = e3.s2),
+  corners AS (SELECT a AS suppkey FROM tri
+              UNION ALL SELECT b FROM tri
+              UNION ALL SELECT c FROM tri)
+  SELECT suppkey, count(*) AS n_triangles FROM corners GROUP BY 1
+""")
 def q_cosupply_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-supplier triangle counts in the thresholded
     co-supply graph via degree-ordered wedge enumeration
@@ -123,6 +257,22 @@ def q_cosupply_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosupply_triangles(spark, sf_dir)
 
 
+@query("embedding_dim_stats", oracle="""
+  WITH ex AS (
+    SELECT unnest(generate_series(1, len(embedding))) - 1 AS dim,
+           unnest(CAST(embedding AS DOUBLE[])) AS e
+    FROM embeddings),
+  st AS (
+    SELECT dim, count(*) AS n,
+           CAST(CAST(sum(CAST(round(e, 9) AS DECIMAL(20,9))) AS VARCHAR) AS DOUBLE) AS s,
+           CAST(CAST(sum(CAST(round(e * e, 9) AS DECIMAL(20,9))) AS VARCHAR) AS DOUBLE) AS sq,
+           min(e) AS min_v, max(e) AS max_v
+    FROM ex GROUP BY 1)
+  SELECT dim, round(s / n, 9) AS mean,
+         round(sqrt(greatest(CAST(0 AS DOUBLE), (sq - s * s / n) / n)), 9) AS std,
+         min_v, max_v
+  FROM st ORDER BY dim
+""")
 def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension embedding statistics [dim, mean, std, min_v,
     max_v] -- the feature-normalization fit (what a standardizing
@@ -158,6 +308,35 @@ def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("dim")
 
 
+@query("embedding_dim_correlation", oracle="""
+  WITH ex AS (
+    SELECT vec_id,
+           unnest(generate_series(1, len(embedding))) - 1 AS dim,
+           unnest(CAST(embedding AS DOUBLE[])) AS e
+    FROM embeddings),
+  f AS (SELECT * FROM ex WHERE dim < 8),
+  pr AS (
+    SELECT a.dim AS dim_i, b.dim AS dim_j, a.e AS xi, b.e AS xj
+    FROM f a JOIN f b ON a.vec_id = b.vec_id AND a.dim < b.dim),
+  st AS (
+    SELECT dim_i, dim_j, CAST(count(*) AS BIGINT) AS n,
+           CAST(CAST(sum(CAST(round(xi, 9) AS DECIMAL(20,9)))
+                AS VARCHAR) AS DOUBLE) AS sx,
+           CAST(CAST(sum(CAST(round(xj, 9) AS DECIMAL(20,9)))
+                AS VARCHAR) AS DOUBLE) AS sy,
+           CAST(CAST(sum(CAST(round(xi * xj, 9) AS DECIMAL(20,9)))
+                AS VARCHAR) AS DOUBLE) AS sxy,
+           CAST(CAST(sum(CAST(round(xi * xi, 9) AS DECIMAL(20,9)))
+                AS VARCHAR) AS DOUBLE) AS sxx,
+           CAST(CAST(sum(CAST(round(xj * xj, 9) AS DECIMAL(20,9)))
+                AS VARCHAR) AS DOUBLE) AS syy
+    FROM pr GROUP BY 1, 2)
+  SELECT dim_i, dim_j, n,
+         round((CAST(n AS DOUBLE) * sxy - sx * sy)
+               / sqrt((CAST(n AS DOUBLE) * sxx - sx * sx)
+                      * (CAST(n AS DOUBLE) * syy - sy * sy)), 9) AS r
+  FROM st ORDER BY 1, 2
+""")
 def q_embedding_dim_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson correlation matrix over the first 8 embedding
     dimensions: [dim_i, dim_j, n, r] for i < j (28 pairs) -- the
@@ -216,6 +395,18 @@ def q_embedding_dim_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("dim_i", "dim_j")
 
 
+@query("user_activity_streaks", oracle="""
+  WITH days AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
+  islands AS (
+    SELECT user_id, d,
+           d - CAST(row_number() OVER (PARTITION BY user_id ORDER BY d) AS INTEGER) AS anchor
+    FROM days),
+  runs AS (SELECT user_id, anchor, CAST(count(*) AS BIGINT) AS run_len
+           FROM islands GROUP BY 1, 2)
+  SELECT user_id, CAST(sum(run_len) AS BIGINT) AS n_active_days,
+         max(run_len) AS longest_streak
+  FROM runs GROUP BY 1
+""")
 def q_user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest consecutive-day activity streak per user: the
     day-grain gaps-and-islands (distinct active days; island anchor =
@@ -246,6 +437,25 @@ def q_user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("funnel_strict_sequence", oracle="""
+  WITH s AS (SELECT user_id, min(ts) AS t1 FROM events
+             WHERE event_type = 'signup' GROUP BY 1),
+  v AS (SELECT e.user_id, min(e.ts) AS t2, min(s.t1) AS t1
+        FROM events e JOIN s USING (user_id)
+        WHERE e.event_type = 'view' AND e.ts > s.t1 GROUP BY 1),
+  p AS (SELECT e.user_id, min(e.ts) AS t3
+        FROM events e JOIN v USING (user_id)
+        WHERE e.event_type = 'purchase' AND e.ts > v.t2
+          AND e.ts <= v.t1 + INTERVAL 7 DAY GROUP BY 1),
+  n AS (SELECT (SELECT count(*) FROM s) AS n1,
+               (SELECT count(*) FROM v) AS n2,
+               (SELECT count(*) FROM p) AS n3)
+  SELECT '1_signup' AS stage, n1 AS n_users, CAST(1.0 AS DOUBLE) AS rate FROM n
+  UNION ALL
+  SELECT '2_view_after_signup', n2, n2 / n1 FROM n
+  UNION ALL
+  SELECT '3_purchase_within_7d', n3, n3 / n2 FROM n
+""")
 def q_funnel_strict_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strict ORDERED funnel: signup -> first view strictly after ->
     first purchase strictly after that, with the purchase inside 7
@@ -292,6 +502,20 @@ def q_funnel_strict_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("event_transitions", oracle="""
+  WITH nxt AS (
+    SELECT event_type,
+           lead(event_type) OVER (PARTITION BY user_id
+                                  ORDER BY ts, event_id) AS next_type
+    FROM events),
+  c AS (SELECT event_type, next_type, CAST(count(*) AS BIGINT) AS n_transitions
+        FROM nxt WHERE next_type IS NOT NULL GROUP BY 1, 2),
+  tot AS (SELECT event_type, CAST(sum(n_transitions) AS BIGINT) AS t
+          FROM c GROUP BY 1)
+  SELECT c.event_type, next_type, n_transitions, n_transitions / t AS p
+  FROM c JOIN tot ON c.event_type = tot.event_type
+  ORDER BY 1, 2
+""")
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over per-user event
     sequences: [event_type, next_type, n_transitions, p] where p =
@@ -325,6 +549,29 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Transition entropy per state: p from exact-integer division, each
+# -p*ln(p) term 9dp-decimal-rounded (order-independent sum), summed
+# as DECIMAL and string-routed to double.
+@query("event_markov_entropy", oracle="""
+  WITH nxt AS (
+    SELECT event_type,
+           lead(event_type) OVER (PARTITION BY user_id
+                                  ORDER BY ts, event_id) AS next_type
+    FROM events),
+  c AS (SELECT event_type, next_type, CAST(count(*) AS BIGINT) AS nn
+        FROM nxt WHERE next_type IS NOT NULL GROUP BY 1, 2),
+  tot AS (SELECT event_type, CAST(sum(nn) AS BIGINT) AS t,
+                 CAST(count(*) AS BIGINT) AS n_next
+          FROM c GROUP BY 1)
+  SELECT c.event_type,
+         max(t) AS n_transitions,
+         max(n_next) AS n_next_types,
+         CAST(CAST(sum(CAST(round(-((nn / t) * ln(nn / t)), 9)
+                            AS DECIMAL(12,9))) AS VARCHAR) AS DOUBLE)
+           AS entropy_nats
+  FROM c JOIN tot ON c.event_type = tot.event_type
+  GROUP BY c.event_type ORDER BY 1
+""")
 def q_event_markov_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-state transition-entropy of the first-order Markov chain
     over per-user event sequences (the event_transitions matrix,
@@ -363,16 +610,6 @@ def q_event_markov_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_purchase_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hubs & authorities over the bipartite purchase graph
-    (operators/hits.py): 3 max-normalized rounds, decimal-summed
-    contributions (pagerank recipe), [node_type, node_key, score].
-    The oracle unrolls the 3 rounds as MATERIALIZED CTEs."""
-    from ..operators.hits import hits_scores
-
-    return hits_scores(spark, sf_dir, iters=3)
-
-
 def _hits_ctes(iters: int = 3) -> str:
     """Unrolled max-normalized HITS oracle (see operators/hits.py)."""
     parts = [
@@ -404,16 +641,15 @@ def _hits_ctes(iters: int = 3) -> str:
     return "".join(parts)
 
 
-def q_cosupply_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """8-core of the thresholded co-supply graph
-    (operators/graph_motifs.kcore): iterative peeling to fixpoint,
-    loud on non-convergence. EAGER (each round pins + counts). The
-    oracle unrolls 8 peeling rounds as CTEs — more than any tested
-    SF needs (4 at sf0.01); extra rounds are no-ops at fixpoint, so
-    the hash match proves the loop's stopping rule exact."""
-    from ..operators.graph_motifs import cosupply_kcore
+@query("purchase_hits", oracle=_hits_ctes(iters=3))
+def q_purchase_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HITS hubs & authorities over the bipartite purchase graph
+    (operators/hits.py): 3 max-normalized rounds, decimal-summed
+    contributions (pagerank recipe), [node_type, node_key, score].
+    The oracle unrolls the 3 rounds as MATERIALIZED CTEs."""
+    from ..operators.hits import hits_scores
 
-    return cosupply_kcore(spark, sf_dir, k=8)
+    return hits_scores(spark, sf_dir, iters=3)
 
 
 def _kcore_ctes(k: int = 8, rounds: int = 8) -> str:
@@ -448,31 +684,21 @@ def _kcore_ctes(k: int = 8, rounds: int = 8) -> str:
     return "".join(parts)
 
 
+@query("cosupply_kcore", oracle=_kcore_ctes(k=8, rounds=8))
+def q_cosupply_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """8-core of the thresholded co-supply graph
+    (operators/graph_motifs.kcore): iterative peeling to fixpoint,
+    loud on non-convergence. EAGER (each round pins + counts). The
+    oracle unrolls 8 peeling rounds as CTEs — more than any tested
+    SF needs (4 at sf0.01); extra rounds are no-ops at fixpoint, so
+    the hash match proves the loop's stopping rule exact."""
+    from ..operators.graph_motifs import cosupply_kcore
+
+    return cosupply_kcore(spark, sf_dir, k=8)
+
+
 REACH_NATION = "NATION_19"
 REACH_HOPS = 3
-
-
-def q_supplier_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blast-radius reachability: BFS hop distance over the co-supply
-    graph from every supplier in one nation (the risk-contagion
-    question: if NATION_19's suppliers fail, which suppliers are 1, 2,
-    3 co-supply hops away?). operators/graph_motifs.bfs_hops --
-    synchronous frontier BFS, node-sized joins, per-round
-    materialization. EAGER (each round pins). Oracle unrolls the 3
-    rounds as materialized CTEs."""
-    from ..operators.graph_motifs import bfs_hops, cosupply_edges
-
-    nat = load_table(spark, sf_dir, "nation").filter(
-        F.col("n_name") == REACH_NATION
-    )
-    sources = (
-        load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select(F.col("s_suppkey").alias("suppkey"))
-    )
-    return bfs_hops(
-        cosupply_edges(spark, sf_dir), sources, max_hops=REACH_HOPS
-    )
 
 
 def _bfs_ctes(rounds: int = REACH_HOPS) -> str:
@@ -511,14 +737,16 @@ def _bfs_ctes(rounds: int = REACH_HOPS) -> str:
     return "".join(parts) + "\n" + tail
 
 
-def q_supplier_cheapest_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted blast radius (graph_motifs.sssp_min_cost): cheapest
-    <= 3-hop Bellman-Ford path cost from NATION_19's suppliers over
-    the co-supply graph, edge cost = (max co-supply weight + 1) - c
-    (strongest tie = cheapest hop). All-integer min-plus -- exact;
-    the oracle unrolls the 3 relaxation rounds as MATERIALIZED
-    CTEs."""
-    from ..operators.graph_motifs import cosupply_cheapest_reach
+@query("supplier_reach", oracle=_bfs_ctes())
+def q_supplier_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Blast-radius reachability: BFS hop distance over the co-supply
+    graph from every supplier in one nation (the risk-contagion
+    question: if NATION_19's suppliers fail, which suppliers are 1, 2,
+    3 co-supply hops away?). operators/graph_motifs.bfs_hops --
+    synchronous frontier BFS, node-sized joins, per-round
+    materialization. EAGER (each round pins). Oracle unrolls the 3
+    rounds as materialized CTEs."""
+    from ..operators.graph_motifs import bfs_hops, cosupply_edges
 
     nat = load_table(spark, sf_dir, "nation").filter(
         F.col("n_name") == REACH_NATION
@@ -528,8 +756,8 @@ def q_supplier_cheapest_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
         .select(F.col("s_suppkey").alias("suppkey"))
     )
-    return cosupply_cheapest_reach(
-        spark, sf_dir, sources, rounds=REACH_HOPS
+    return bfs_hops(
+        cosupply_edges(spark, sf_dir), sources, max_hops=REACH_HOPS
     )
 
 
@@ -571,6 +799,47 @@ def _sssp_ctes(rounds: int = REACH_HOPS) -> str:
     return "".join(parts)
 
 
+@query("supplier_cheapest_reach", oracle=_sssp_ctes())
+def q_supplier_cheapest_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted blast radius (graph_motifs.sssp_min_cost): cheapest
+    <= 3-hop Bellman-Ford path cost from NATION_19's suppliers over
+    the co-supply graph, edge cost = (max co-supply weight + 1) - c
+    (strongest tie = cheapest hop). All-integer min-plus -- exact;
+    the oracle unrolls the 3 relaxation rounds as MATERIALIZED
+    CTEs."""
+    from ..operators.graph_motifs import cosupply_cheapest_reach
+
+    nat = load_table(spark, sf_dir, "nation").filter(
+        F.col("n_name") == REACH_NATION
+    )
+    sources = (
+        load_table(spark, sf_dir, "supplier")
+        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
+        .select(F.col("s_suppkey").alias("suppkey"))
+    )
+    return cosupply_cheapest_reach(
+        spark, sf_dir, sources, rounds=REACH_HOPS
+    )
+
+
+@query("market_basket_pairs", oracle="""
+  WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+  nn AS (SELECT count(DISTINCT o) AS n FROM b),
+  item AS (SELECT p, count(*) AS item_n FROM b GROUP BY 1),
+  pairs AS (SELECT a.p AS p1, c.p AS p2, count(*) AS pair_n
+            FROM b a JOIN b c ON a.o = c.o AND a.p < c.p
+            GROUP BY 1, 2 HAVING count(*) >= 2)
+  SELECT p1, p2, pair_n,
+         pair_n / n AS support,
+         pair_n / i1.item_n AS confidence,
+         (pair_n * n) / (i1.item_n * i2.item_n) AS lift
+  FROM pairs
+  JOIN item i1 ON i1.p = p1
+  JOIN item i2 ON i2.p = p2
+  CROSS JOIN nn
+  ORDER BY lift DESC, p1, p2
+  LIMIT 50
+""")
 def q_market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A-priori pair stage with association metrics
     (operators/basket.py): top part pairs by lift among pairs
@@ -582,6 +851,34 @@ def q_market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return market_basket_pairs(spark, sf_dir)
 
 
+# Directed association rules: both directions of each pruned pair,
+# classical support/confidence/lift/leverage/conviction; conviction
+# NULL for exact rules (integer-equality guard, not a float compare).
+@query("basket_rules", oracle="""
+  WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+  nn AS (SELECT count(DISTINCT o) AS n FROM b),
+  item AS (SELECT p, count(*) AS item_n FROM b GROUP BY 1),
+  pairs AS (SELECT a.p AS p1, c.p AS p2, count(*) AS pair_n
+            FROM b a JOIN b c ON a.o = c.o AND a.p < c.p
+            GROUP BY 1, 2 HAVING count(*) >= 2),
+  directed AS (SELECT p1 AS antecedent, p2 AS consequent, pair_n FROM pairs
+               UNION ALL
+               SELECT p2 AS antecedent, p1 AS consequent, pair_n FROM pairs)
+  SELECT antecedent, consequent, pair_n,
+         pair_n / n AS support,
+         pair_n / ia.item_n AS confidence,
+         (pair_n * n) / (ia.item_n * ic.item_n) AS lift,
+         pair_n / n - (ia.item_n / n) * (ic.item_n / n) AS leverage,
+         CASE WHEN pair_n = ia.item_n THEN NULL
+              ELSE (1.0 - ic.item_n / n) / (1.0 - pair_n / ia.item_n)
+         END AS conviction
+  FROM directed
+  JOIN item ia ON ia.p = antecedent
+  JOIN item ic ON ic.p = consequent
+  CROSS JOIN nn
+  ORDER BY lift DESC, antecedent, consequent
+  LIMIT 50
+""")
 def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed association rules (operators/basket.association_rules):
     top-50 part rules by lift with support/confidence/lift/leverage/
@@ -593,6 +890,39 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     return association_rules(spark, sf_dir)
 
 
+# Naive wedge enumeration + anti-join; deg_w >= 2 for any common
+# neighbor, so ln(deg) > 0 always. Adamic-Adar terms are rounded to
+# 9dp and summed as DECIMAL (order-independent), then string-routed
+# to double; jaccard is one int/int division, shipped unrounded.
+@query("cosupply_link_prediction", oracle="""
+  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
+  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
+        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
+  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+  e AS MATERIALIZED (SELECT s1, s2 FROM w, t WHERE c >= thr),
+  und AS MATERIALIZED (SELECT s1 AS w, s2 AS x FROM e
+                       UNION ALL SELECT s2, s1 FROM e),
+  deg AS MATERIALIZED (SELECT w, count(*) AS d FROM und GROUP BY 1),
+  wedge AS (
+    SELECT a.x AS x1, b.x AS x2,
+           CAST(round(1.0 / ln(CAST(deg.d AS DOUBLE)), 9)
+                AS DECIMAL(12,9)) AS term
+    FROM und a JOIN und b ON a.w = b.w AND a.x < b.x
+               JOIN deg ON deg.w = a.w),
+  pairs AS (
+    SELECT x1, x2, count(*) AS cn, sum(term) AS aa
+    FROM wedge GROUP BY 1, 2),
+  nonadj AS (
+    SELECT p.* FROM pairs p
+    WHERE NOT EXISTS (SELECT 1 FROM e
+                      WHERE e.s1 = p.x1 AND e.s2 = p.x2))
+  SELECT n.x1 AS s1, n.x2 AS s2, n.cn AS common_neighbors,
+         CAST(n.cn AS DOUBLE) / (d1.d + d2.d - n.cn) AS jaccard,
+         CAST(CAST(n.aa AS VARCHAR) AS DOUBLE) AS adamic_adar
+  FROM nonadj n JOIN deg d1 ON d1.w = n.x1 JOIN deg d2 ON d2.w = n.x2
+  ORDER BY adamic_adar DESC, common_neighbors DESC, s1, s2
+  LIMIT 20
+""")
 def q_cosupply_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link prediction (operators/linkpred.py): top-20 NON-adjacent
     supplier pairs of the thresholded co-supply graph by Adamic-Adar,
@@ -606,6 +936,39 @@ def q_cosupply_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosupply_link_prediction(spark, sf_dir, top_n=20)
 
 
+# Same wedge enumeration with centers capped at degree 256 (the scale
+# knob); endpoint degrees for Jaccard stay UNCAPPED -- the cap bounds
+# fan-out, not the denominator semantics.
+@query("cosupply_link_prediction_capped", oracle="""
+  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
+  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
+        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
+  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+  e AS MATERIALIZED (SELECT s1, s2 FROM w, t WHERE c >= thr),
+  und AS MATERIALIZED (SELECT s1 AS w, s2 AS x FROM e
+                       UNION ALL SELECT s2, s1 FROM e),
+  deg AS MATERIALIZED (SELECT w, count(*) AS d FROM und GROUP BY 1),
+  wedge AS (
+    SELECT a.x AS x1, b.x AS x2,
+           CAST(round(1.0 / ln(CAST(deg.d AS DOUBLE)), 9)
+                AS DECIMAL(12,9)) AS term
+    FROM und a JOIN und b ON a.w = b.w AND a.x < b.x
+               JOIN deg ON deg.w = a.w
+    WHERE deg.d <= 256),
+  pairs AS (
+    SELECT x1, x2, count(*) AS cn, sum(term) AS aa
+    FROM wedge GROUP BY 1, 2),
+  nonadj AS (
+    SELECT p.* FROM pairs p
+    WHERE NOT EXISTS (SELECT 1 FROM e
+                      WHERE e.s1 = p.x1 AND e.s2 = p.x2))
+  SELECT n.x1 AS s1, n.x2 AS s2, n.cn AS common_neighbors,
+         CAST(n.cn AS DOUBLE) / (d1.d + d2.d - n.cn) AS jaccard,
+         CAST(CAST(n.aa AS VARCHAR) AS DOUBLE) AS adamic_adar
+  FROM nonadj n JOIN deg d1 ON d1.w = n.x1 JOIN deg d2 ON d2.w = n.x2
+  ORDER BY adamic_adar DESC, common_neighbors DESC, s1, s2
+  LIMIT 20
+""")
 def q_cosupply_link_prediction_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB wiring of link prediction (VERDICT r6 #5): wedge
     CENTERS with degree > 256 are dropped before the self-join, so
@@ -625,6 +988,34 @@ def q_cosupply_link_prediction_capped(spark: SparkSession, sf_dir: str) -> DataF
     return cosupply_link_prediction(spark, sf_dir, top_n=20, max_degree=256)
 
 
+# Per-distinct-score aggregate Mann-Whitney with tie credit: the
+# native window's "negatives strictly below" vs the Spark side's
+# two-level bucketed cumulative sum; u2 integer arithmetic identical.
+@query("score_auc", oracle="""
+  WITH per AS (
+    SELECT n_chars AS s,
+           sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS pos,
+           sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS neg
+    FROM documents GROUP BY 1),
+  cum AS (
+    SELECT s, pos, neg,
+           coalesce(sum(neg) OVER (ORDER BY s
+             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+             AS neg_below
+    FROM per),
+  agg AS (
+    SELECT CAST(sum(pos) AS BIGINT) AS n_pos,
+           CAST(sum(neg) AS BIGINT) AS n_neg,
+           CAST(sum(CAST(pos AS DECIMAL(18,0))
+                    * CAST(2 * neg_below + neg AS DECIMAL(19,0)))
+                AS DECIMAL(38,0)) AS u2
+    FROM cum)
+  SELECT n_pos, n_neg,
+         CAST(CAST(u2 AS VARCHAR) AS DOUBLE) AS u2,
+         CAST(CAST(u2 AS VARCHAR) AS DOUBLE)
+           / (2.0 * CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)) AS auc
+  FROM agg
+""")
 def q_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact tie-corrected ROC AUC (operators/evalmetrics.py) of the
     document-length score n_chars predicting lang='en' -- the
@@ -642,6 +1033,23 @@ def q_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return auc_rank_sum(docs)
 
 
+@query("calibration_bins", oracle="""
+  WITH p AS (
+    SELECT CAST(n_chars AS DOUBLE) / CAST(n_chars + 300 AS DOUBLE) AS p,
+           CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
+    FROM documents),
+  b AS (
+    SELECT CAST(least(9, floor(p * 10)) AS BIGINT) AS bin, p, label FROM p)
+  SELECT bin, count(*) AS n,
+         CAST(sum(label) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS frac_pos,
+         CAST(CAST(sum(CAST(round(p, 9) AS DECIMAL(12,9))) AS VARCHAR)
+              AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_p,
+         abs(CAST(CAST(sum(CAST(round(p, 9) AS DECIMAL(12,9))) AS VARCHAR)
+                  AS DOUBLE) / CAST(count(*) AS DOUBLE)
+             - CAST(sum(label) AS DOUBLE) / CAST(count(*) AS DOUBLE))
+           AS abs_gap
+  FROM b GROUP BY 1 ORDER BY 1
+""")
 def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability-diagram bins (operators/evalmetrics.py) for the
     rational pseudo-probability p = n_chars / (n_chars + 300)
@@ -658,6 +1066,22 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     return calibration_bins(docs, p, (F.col("lang") == "en").cast("int"))
 
 
+# NAIVE all-pairs containment (the size pre-filter is implied by the
+# final predicate -- inter <= |B| and 10*inter >= 9*|A| force
+# 10*|B| >= 9*|A| -- so adding it changes nothing but the bill).
+@query("containment_pairs", oracle=f"""
+  WITH g AS (SELECT doc_id, shset AS st FROM ({_SQL_SHINGLES})
+             WHERE len(shset) > 0),
+  p AS (SELECT a.doc_id AS doc_small, b.doc_id AS doc_big,
+          CAST(len(list_intersect(a.st, b.st)) AS BIGINT) AS inter,
+          CAST(len(a.st) AS BIGINT) AS size_small
+        FROM g a JOIN g b ON a.doc_id <> b.doc_id
+        WHERE len(b.st) * 10 >= len(a.st) * 9)
+  SELECT doc_small, doc_big, inter, size_small,
+         round(CAST(inter AS DOUBLE) / size_small, 6) AS containment
+  FROM p WHERE 10 * inter >= 9 * size_small
+  ORDER BY doc_small, doc_big
+""")
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact directed set-containment join at C >= 9/10
     (operators/setjoin.containment_prefix_pairs): the asymmetric
@@ -670,6 +1094,21 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return containment_prefix_pairs(load_table(spark, sf_dir, "documents"))
 
 
+@query("lang_token_entropy", oracle=f"""
+  WITH t AS ({{TOKS}}),
+  tk AS (SELECT lang, unnest(toks) AS w FROM t),
+  cnt AS (SELECT lang, w, count(*) AS c FROM tk GROUP BY 1, 2),
+  tot AS (SELECT lang, CAST(sum(c) AS BIGINT) AS n_tokens,
+                 count(*) AS vocab
+          FROM cnt GROUP BY 1)
+  SELECT cnt.lang, n_tokens, vocab,
+         CAST(CAST(sum(CAST(round(
+             -((CAST(c AS DOUBLE) / CAST(n_tokens AS DOUBLE))
+               * log2(CAST(c AS DOUBLE) / CAST(n_tokens AS DOUBLE))), 9)
+           AS DECIMAL(12,9))) AS VARCHAR) AS DOUBLE) AS entropy_bits
+  FROM cnt JOIN tot USING (lang)
+  GROUP BY 1, 2, 3 ORDER BY 1
+""".replace("{TOKS}", _SQL_TOKS))
 def q_lang_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shannon entropy (bits) of each language's unigram
     distribution: [lang, n_tokens, vocab, entropy_bits]. The
@@ -699,6 +1138,20 @@ def q_lang_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("lang_lexical_richness", oracle=f"""
+  WITH t AS ({{TOKS}}),
+  tk AS (SELECT lang, unnest(toks) AS w FROM t),
+  cnt AS (SELECT lang, w, count(*) AS c FROM tk GROUP BY 1, 2)
+  SELECT lang,
+         CAST(sum(c) AS BIGINT) AS n_tokens,
+         CAST(count(*) AS BIGINT) AS n_types,
+         CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_hapax,
+         CAST(count(*) AS DOUBLE) / CAST(sum(c) AS DOUBLE) AS ttr,
+         CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE)
+           / CAST(count(*) AS DOUBLE) AS hapax_share
+  FROM cnt GROUP BY 1 ORDER BY 1
+""".replace("{TOKS}", _SQL_TOKS))
 def q_lang_lexical_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexical-richness profile per language: [lang, n_tokens,
     n_types, n_hapax, ttr, hapax_share] -- type-token ratio and the
@@ -743,6 +1196,21 @@ def q_lang_lexical_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
 K_ANON = 10
 
 
+@query("k_anonymity_report", oracle=f"""
+  WITH g AS (
+    SELECT c_nationkey, c_mktsegment,
+           CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS bal_k,
+           count(*) AS g
+    FROM customer GROUP BY 1, 2, 3)
+  SELECT {K_ANON} AS k,
+         count(*) AS n_groups,
+         CAST(sum(CASE WHEN g < {K_ANON} THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_violating_groups,
+         CAST(sum(CASE WHEN g < {K_ANON} THEN g ELSE 0 END) AS BIGINT)
+           AS rows_at_risk,
+         min(g) AS min_group_size
+  FROM g
+""")
 def q_k_anonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit of the customer table under the
     quasi-identifier (nation, market segment, balance rounded to
@@ -769,6 +1237,34 @@ def q_k_anonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Integer-micro revenue, native window cumsum, INTEGER 80/95
+# boundaries (5*cum <= 4*tot etc.) -- no division decides a class.
+@query("parts_abc_analysis", oracle="""
+  WITH pr AS (
+    SELECT l_partkey AS partkey,
+           CAST(sum(CAST(
+             (CAST(l_extendedprice AS DECIMAL(12,2))
+              * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4))))
+             * 1000000 AS BIGINT)) AS BIGINT) AS micros
+    FROM lineitem GROUP BY 1),
+  t AS (SELECT CAST(sum(micros) AS BIGINT) AS tot FROM pr),
+  cum AS (
+    SELECT partkey, micros,
+           sum(micros) OVER (ORDER BY micros DESC, partkey
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm
+    FROM pr),
+  cls AS (
+    SELECT CASE WHEN 5 * cm <= 4 * tot THEN 'A'
+                WHEN 20 * cm <= 19 * tot THEN 'B'
+                ELSE 'C' END AS abc_class,
+           micros, tot
+    FROM cum, t)
+  SELECT abc_class, count(*) AS n_parts,
+         CAST(CAST(sum(micros) AS BIGINT) AS DOUBLE) / 1000000.0 AS revenue,
+         CAST(CAST(sum(micros) AS BIGINT) AS DOUBLE)
+           / CAST(max(tot) AS DOUBLE) AS revenue_share
+  FROM cls GROUP BY 1 ORDER BY 1
+""")
 def q_parts_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC / Pareto inventory classification: rank parts by revenue
     desc, class A = parts up to 80% cumulative revenue share, B to
@@ -828,6 +1324,31 @@ def q_parts_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Exact-integer Gini: HUGEINT arithmetic on DuckDB's side, DECIMAL
+# on Spark's; both string-route the identical exact numbers.
+@query("customer_spend_gini", oracle="""
+  WITH spend AS (
+    SELECT o_custkey AS custkey,
+           CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                         AS BIGINT)) AS BIGINT) AS cents
+    FROM orders GROUP BY 1),
+  ranked AS (
+    SELECT cents,
+           row_number() OVER (ORDER BY cents, custkey) AS rn
+    FROM spend),
+  agg AS (
+    SELECT CAST(count(*) AS BIGINT) AS n_customers,
+           CAST(sum(cents) AS BIGINT) AS total_cents,
+           sum(CAST(2 * rn AS HUGEINT) * CAST(cents AS HUGEINT)) AS s2
+    FROM ranked)
+  SELECT n_customers, total_cents,
+         CAST(CAST(s2 - CAST(n_customers + 1 AS HUGEINT)
+                        * CAST(total_cents AS HUGEINT) AS VARCHAR) AS DOUBLE)
+           / CAST(CAST(CAST(n_customers AS HUGEINT)
+                        * CAST(total_cents AS HUGEINT) AS VARCHAR) AS DOUBLE)
+           AS gini
+  FROM agg
+""")
 def q_customer_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Gini coefficient of customer spend concentration: one
     row [n_customers, total_cents, gini], G = (2*S - (n+1)*T) /
@@ -882,6 +1403,28 @@ def q_customer_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Quantile normalization: rank r of m -> global order statistic at
+# ceil(r*N/m); all-integer, selection not interpolation.
+@query("doc_length_quantile_norm", oracle="""
+  WITH local AS (
+    SELECT doc_id, lang, n_chars,
+           row_number() OVER (PARTITION BY lang
+             ORDER BY n_chars, doc_id) AS r,
+           count(*) OVER (PARTITION BY lang) AS m
+    FROM documents),
+  gl AS (
+    SELECT n_chars AS norm_n_chars,
+           row_number() OVER (ORDER BY n_chars, doc_id) AS k,
+           count(*) OVER () AS total_n
+    FROM documents),
+  keyed AS (
+    SELECT doc_id, lang, n_chars,
+           (r * (SELECT max(total_n) FROM gl) + m - 1) // m AS k
+    FROM local)
+  SELECT keyed.doc_id, lang, n_chars, norm_n_chars
+  FROM keyed JOIN gl USING (k)
+  ORDER BY doc_id
+""")
 def q_doc_length_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile normalization of document length across languages:
     each doc's n_chars is replaced by the GLOBAL length at the same
@@ -927,6 +1470,29 @@ def q_doc_length_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Theil T: exact-long ratios, ln 9dp per row, 9dp-decimal term sum.
+@query("customer_spend_theil", oracle="""
+  WITH spend AS (
+    SELECT o_custkey AS custkey,
+           CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                         AS BIGINT)) AS BIGINT) AS cents
+    FROM orders GROUP BY 1),
+  t AS (
+    SELECT CAST(count(*) AS BIGINT) AS n_customers,
+           CAST(sum(cents) AS BIGINT) AS total_cents
+    FROM spend),
+  terms AS (
+    SELECT n_customers, total_cents,
+           CAST(round(
+             (CAST(cents AS DOUBLE) / CAST(total_cents AS DOUBLE))
+             * round(ln(CAST(cents AS DOUBLE) * CAST(n_customers AS DOUBLE)
+                        / CAST(total_cents AS DOUBLE)), 9),
+           9) AS DECIMAL(20,9)) AS term9
+    FROM spend, t WHERE cents > 0)
+  SELECT n_customers, total_cents,
+         CAST(CAST(sum(term9) AS VARCHAR) AS DOUBLE) AS theil
+  FROM terms GROUP BY 1, 2
+""")
 def q_customer_spend_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil T inequality index of customer spend: one row
     [n_customers, total_cents, theil], T = sum_i s_i * ln(s_i * n)
@@ -971,6 +1537,26 @@ def q_customer_spend_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Quadratic NOT-EXISTS dominance -- the oracle's simplicity is the
+# point: it proves the distributed grid-prune/staircase forms lossless.
+@query("customer_skyline", oracle="""
+  WITH agg AS (
+    SELECT o_custkey AS custkey,
+           CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                         AS BIGINT)) AS BIGINT) AS spend_cents,
+           count(*) AS n_orders,
+           CAST(date_diff('day', DATE '1970-01-01',
+                          CAST(max(o_orderdate) AS DATE)) AS BIGINT) AS last_day
+    FROM orders GROUP BY 1)
+  SELECT p.* FROM agg p
+  WHERE NOT EXISTS (
+    SELECT 1 FROM agg q
+    WHERE q.spend_cents >= p.spend_cents AND q.n_orders >= p.n_orders
+      AND q.last_day >= p.last_day
+      AND (q.spend_cents > p.spend_cents OR q.n_orders > p.n_orders
+           OR q.last_day > p.last_day))
+  ORDER BY spend_cents DESC, custkey
+""")
 def q_customer_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-D skyline (Pareto frontier) of customers over (total spend,
     order count, recency): no customer in the answer is beaten on all
@@ -1000,6 +1586,20 @@ def q_customer_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("part_sales_skyline", oracle="""
+  WITH agg AS (
+    SELECT l_partkey AS partkey,
+           CAST(sum(CAST(l_quantity AS DECIMAL(12,0))) AS BIGINT) AS total_qty,
+           CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
+                         AS BIGINT)) AS BIGINT) AS revenue_cents
+    FROM lineitem GROUP BY 1)
+  SELECT p.* FROM agg p
+  WHERE NOT EXISTS (
+    SELECT 1 FROM agg q
+    WHERE q.total_qty >= p.total_qty AND q.revenue_cents >= p.revenue_cents
+      AND (q.total_qty > p.total_qty OR q.revenue_cents > p.revenue_cents))
+  ORDER BY total_qty DESC, partkey
+""")
 def q_part_sales_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D skyline of parts over (units shipped, revenue): the
     sort/staircase form (operators/skyline.skyline_2d) -- two window
@@ -1026,6 +1626,31 @@ def q_part_sales_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Naive 3-way-join triangles + degree table; the coefficient is one
+# int/int division both engines compute on identical integers.
+@query("cosupply_clustering", oracle="""
+  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
+  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
+        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
+  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+  e AS MATERIALIZED (SELECT s1, s2 FROM w, t WHERE c >= thr),
+  und AS (SELECT s1 AS suppkey FROM e UNION ALL SELECT s2 FROM e),
+  deg AS (SELECT suppkey, count(*) AS degree FROM und GROUP BY 1),
+  tri AS (SELECT e1.s1 AS a, e1.s2 AS b, e2.s2 AS c
+          FROM e e1 JOIN e e2 ON e1.s2 = e2.s1
+                    JOIN e e3 ON e1.s1 = e3.s1 AND e2.s2 = e3.s2),
+  corners AS (SELECT a AS suppkey FROM tri
+              UNION ALL SELECT b FROM tri
+              UNION ALL SELECT c FROM tri),
+  tc AS (SELECT suppkey, count(*) AS n_triangles FROM corners GROUP BY 1)
+  SELECT deg.suppkey, deg.degree,
+         CAST(coalesce(tc.n_triangles, 0) AS BIGINT) AS n_triangles,
+         CAST(2 * coalesce(tc.n_triangles, 0) AS DOUBLE)
+           / CAST(deg.degree * (deg.degree - 1) AS DOUBLE) AS clustering_coeff
+  FROM deg LEFT JOIN tc USING (suppkey)
+  WHERE deg.degree >= 2
+  ORDER BY clustering_coeff DESC, suppkey
+""")
 def q_cosupply_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient per supplier in the co-supply
     graph (graph_motifs.clustering_coefficients): triangle side
@@ -1036,6 +1661,38 @@ def q_cosupply_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clustering_coefficients(cosupply_edges(spark, sf_dir))
 
 
+# HUGEINT mirror of the exact-integer OLS sufficient statistics; the
+# final divisions run on string-routed identical doubles.
+@query("nation_revenue_trend", oracle="""
+  WITH monthly AS (
+    SELECT n_name AS nation,
+           CAST((year(o_orderdate) * 12 + month(o_orderdate))
+                - (1992 * 12 + 1) AS BIGINT) AS x,
+           sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
+                    * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))
+                    * 1000000 AS HUGEINT)) AS y
+    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         JOIN nation ON c_nationkey = n_nationkey
+    GROUP BY 1, 2),
+  stats AS (
+    SELECT nation, count(*) AS n,
+           sum(CAST(x AS HUGEINT)) AS sx, sum(y) AS sy,
+           sum(CAST(x AS HUGEINT) * y) AS sxy,
+           sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
+           sum(y * y) AS syy
+    FROM monthly GROUP BY 1),
+  vals AS (
+    SELECT nation, CAST(n AS BIGINT) AS n_points,
+           CAST(CAST(n * sxy - sx * sy AS VARCHAR) AS DOUBLE) AS num,
+           CAST(CAST(n * sxx - sx * sx AS VARCHAR) AS DOUBLE) AS den,
+           CAST(CAST(sy * sxx - sx * sxy AS VARCHAR) AS DOUBLE) AS inum,
+           CAST(CAST(n * syy - sy * sy AS VARCHAR) AS DOUBLE) AS ydev
+    FROM stats)
+  SELECT nation, n_points, num / den AS slope, inum / den AS intercept,
+         CASE WHEN ydev <> 0 THEN num * num / (den * ydev) END AS r2
+  FROM vals WHERE den <> 0 ORDER BY nation
+""")
 def q_nation_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation monthly-revenue trend: closed-form OLS slope /
     intercept / r^2 over (month index, revenue micros) via
@@ -1075,6 +1732,29 @@ def q_nation_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("zipf_word_fit", oracle=f"""
+  WITH wc AS ({_SQL_WORDCOUNT}),
+  top AS (SELECT word, cnt FROM wc ORDER BY cnt DESC, word LIMIT 500),
+  pts AS (
+    SELECT CAST(round(ln(CAST(row_number() OVER (ORDER BY cnt DESC, word)
+                              AS DOUBLE)), 9) AS DECIMAL(12,9)) AS lx,
+           CAST(round(ln(CAST(cnt AS DOUBLE)), 9) AS DECIMAL(12,9)) AS ly
+    FROM top),
+  agg AS (
+    SELECT CAST(count(*) AS BIGINT) AS n_words,
+           CAST(CAST(sum(lx) AS VARCHAR) AS DOUBLE) AS sx,
+           CAST(CAST(sum(ly) AS VARCHAR) AS DOUBLE) AS sy,
+           CAST(CAST(sum(lx * ly) AS VARCHAR) AS DOUBLE) AS sxy,
+           CAST(CAST(sum(lx * lx) AS VARCHAR) AS DOUBLE) AS sxx,
+           CAST(CAST(sum(ly * ly) AS VARCHAR) AS DOUBLE) AS syy
+    FROM pts)
+  SELECT n_words,
+         (n_words * sxy - sx * sy) / (n_words * sxx - sx * sx) AS slope,
+         (sy * sxx - sx * sxy) / (n_words * sxx - sx * sx) AS intercept,
+         (n_words * sxy - sx * sy) * (n_words * sxy - sx * sy)
+           / ((n_words * sxx - sx * sx) * (n_words * syy - sy * sy)) AS r2
+  FROM agg
+""")
 def q_zipf_word_fit(spark: SparkSession, sf_dir: str, top_n: int = 500) -> DataFrame:
     """Zipf's-law fit of the corpus: OLS slope of ln(count) on
     ln(rank) over the top-N words -- the standard log-log diagnostic
@@ -1117,6 +1797,48 @@ def q_zipf_word_fit(spark: SparkSession, sf_dir: str, top_n: int = 500) -> DataF
     )
 
 
+# Heaps'-law vocabulary-growth fit: cumulative tokens/types in doc_id
+# order, 9dp-decimal log terms, the zipf OLS chain.
+@query("heaps_law_fit", oracle=r"""
+  WITH raw AS (
+    SELECT doc_id,
+           unnest(string_split_regex(trim(lower(
+             regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))), '\s+')) AS word
+    FROM documents),
+  tk AS (SELECT doc_id, word FROM raw WHERE word <> ''),
+  per_doc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS tok_n
+              FROM tk GROUP BY 1),
+  firsts AS (SELECT word, min(doc_id) AS doc_id FROM tk GROUP BY 1),
+  newt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS types_new
+           FROM firsts GROUP BY 1),
+  base AS (SELECT p.doc_id, p.tok_n, coalesce(n.types_new, 0) AS types_new
+           FROM per_doc p LEFT JOIN newt n USING (doc_id)),
+  cum AS (SELECT CAST(sum(tok_n) OVER w AS BIGINT) AS ct,
+                 CAST(sum(types_new) OVER w AS BIGINT) AS cv
+          FROM base
+          WINDOW w AS (ORDER BY doc_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+  pts AS (SELECT ct, cv,
+                 CAST(round(ln(CAST(ct AS DOUBLE)), 9) AS DECIMAL(12,9)) AS lx,
+                 CAST(round(ln(CAST(cv AS DOUBLE)), 9) AS DECIMAL(12,9)) AS ly
+          FROM cum),
+  agg AS (
+    SELECT CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(max(ct) AS BIGINT) AS total_tokens,
+           CAST(max(cv) AS BIGINT) AS total_types,
+           CAST(CAST(sum(lx) AS VARCHAR) AS DOUBLE) AS sx,
+           CAST(CAST(sum(ly) AS VARCHAR) AS DOUBLE) AS sy,
+           CAST(CAST(sum(lx * ly) AS VARCHAR) AS DOUBLE) AS sxy,
+           CAST(CAST(sum(lx * lx) AS VARCHAR) AS DOUBLE) AS sxx,
+           CAST(CAST(sum(ly * ly) AS VARCHAR) AS DOUBLE) AS syy
+    FROM pts)
+  SELECT n_docs, total_tokens, total_types,
+         (n_docs * sxy - sx * sy) / (n_docs * sxx - sx * sx) AS heaps_beta,
+         (sy * sxx - sx * sxy) / (n_docs * sxx - sx * sx) AS heaps_ln_k,
+         (n_docs * sxy - sx * sy) * (n_docs * sxy - sx * sy)
+           / ((n_docs * sxx - sx * sx) * (n_docs * syy - sy * sy)) AS r2
+  FROM agg
+""")
 def q_heaps_law_fit(spark: SparkSession, sf_dir: str, n_buckets: int = 256) -> DataFrame:
     """Heaps'-law fit of vocabulary growth: OLS of ln(cumulative
     distinct types) on ln(cumulative tokens) over the corpus in
@@ -1210,6 +1932,28 @@ def q_heaps_law_fit(spark: SparkSession, sf_dir: str, n_buckets: int = 256) -> D
     )
 
 
+# Per-doc distinct word-4-gram novelty vs all earlier docs.
+@query("ngram_novelty", oracle=r"""
+  WITH raw AS (
+    SELECT doc_id,
+           list_filter(string_split_regex(trim(lower(
+             regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))), '\s+'),
+             w -> w <> '') AS t
+    FROM documents),
+  g AS (SELECT DISTINCT doc_id,
+               unnest(list_transform(range(1, len(t) - 2),
+                 i -> array_to_string(list_slice(t, i, i + 3), ' '))) AS gram
+        FROM raw WHERE len(t) >= 4),
+  f AS (SELECT gram, min(doc_id) AS fd FROM g GROUP BY 1)
+  SELECT g.doc_id,
+         CAST(count(*) AS BIGINT) AS n_grams,
+         CAST(sum(CASE WHEN f.fd < g.doc_id THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_seen_before,
+         CAST(count(*) - sum(CASE WHEN f.fd < g.doc_id THEN 1 ELSE 0 END)
+              AS DOUBLE) / count(*) AS novelty
+  FROM g JOIN f USING (gram)
+  GROUP BY g.doc_id ORDER BY g.doc_id
+""")
 def q_ngram_novelty(spark: SparkSession, sf_dir: str, n: int = 4) -> DataFrame:
     """Per-document n-gram novelty: the fraction of a doc's DISTINCT
     word 4-grams never seen in any earlier document (doc_id order) --
@@ -1264,6 +2008,42 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str, n: int = 4) -> DataFrame:
     )
 
 
+# Mean-cleared integer ACF: z = n*y - S makes both sums exact
+# integers; the n^2 scale factor cancels in the ratio.
+@query("events_acf", oracle="""
+  WITH b AS (SELECT CAST(min(ts) AS DATE) AS d0, CAST(max(ts) AS DATE) AS d1
+             FROM events),
+  days AS (SELECT CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE)
+                    AS day, d0
+           FROM b),
+  types AS (SELECT DISTINCT event_type FROM events),
+  counts AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS y
+             FROM events GROUP BY 1, 2),
+  series AS (
+    SELECT t.event_type, date_diff('day', d.d0, d.day) AS tt,
+           coalesce(c.y, 0) AS y
+    FROM types t CROSS JOIN days d
+         LEFT JOIN counts c ON c.event_type = t.event_type AND c.day = d.day),
+  st AS (SELECT event_type, count(*) AS n, sum(y) AS s FROM series GROUP BY 1),
+  z AS (SELECT series.event_type, tt,
+               CAST(st.n * series.y - st.s AS HUGEINT) AS z, st.n
+        FROM series JOIN st USING (event_type)),
+  den AS (SELECT event_type, sum(z * z) AS den, max(n) AS n_points
+          FROM z GROUP BY 1),
+  lagged AS (SELECT event_type, tt, z, l.lag
+             FROM z CROSS JOIN
+                  (SELECT unnest(generate_series(1, 7)) AS lag) l),
+  num AS (SELECT a.event_type, a.lag, sum(a.z * b2.z) AS num
+          FROM lagged a JOIN z b2 ON b2.event_type = a.event_type
+                                 AND b2.tt = a.tt + a.lag
+          GROUP BY 1, 2)
+  SELECT n.event_type, CAST(n.lag AS BIGINT) AS lag,
+         CAST(d.n_points AS BIGINT) AS n_points,
+         CAST(CAST(n.num AS VARCHAR) AS DOUBLE)
+           / CAST(CAST(d.den AS VARCHAR) AS DOUBLE) AS acf
+  FROM num n JOIN den d USING (event_type)
+  WHERE d.den <> 0 ORDER BY event_type, lag
+""")
 def q_events_acf(spark: SparkSession, sf_dir: str, max_lag: int = 7) -> DataFrame:
     """Exact daily-count autocorrelogram per event type at lags 1..7
     (operators/acf.py): counts land on a dense zero-filled day spine
@@ -1296,6 +2076,48 @@ def q_events_acf(spark: SparkSession, sf_dir: str, max_lag: int = 7) -> DataFram
     return autocorrelation(series, "event_type", "t", "y", max_lag=max_lag)
 
 
+# Product-limit estimator at duration grain; ln factors rounded 9dp
+# and summed as DECIMAL, curve shipped in log form.
+@query("user_survival_km", oracle="""
+  WITH spans AS (SELECT user_id, CAST(min(ts) AS DATE) AS f,
+                        CAST(max(ts) AS DATE) AS l
+                 FROM events GROUP BY 1),
+  edge AS (SELECT CAST(max(ts) AS DATE) AS e FROM events),
+  subj AS (SELECT date_diff('day', f, l) AS duration,
+                  (date_diff('day', l, e) < 7) AS censored
+           FROM spans, edge),
+  grain AS (SELECT duration,
+                   CAST(sum(CASE WHEN censored THEN 0 ELSE 1 END) AS BIGINT)
+                     AS n_events,
+                   CAST(sum(CASE WHEN censored THEN 1 ELSE 0 END) AS BIGINT)
+                     AS n_censored,
+                   count(*) AS n_total
+            FROM subj GROUP BY 1),
+  km AS (
+    SELECT duration, n_events, n_censored,
+           sum(n_total) OVER (ORDER BY duration
+             ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS n_risk
+    FROM grain),
+  km2 AS (
+    SELECT duration, n_risk, n_events, n_censored,
+           CASE WHEN n_risk > n_events
+                THEN CAST(round(ln(CAST(n_risk - n_events AS DOUBLE)
+                                   / CAST(n_risk AS DOUBLE)), 9)
+                          AS DECIMAL(20,9)) END AS term,
+           max(CASE WHEN n_risk = n_events THEN 1 ELSE 0 END)
+             OVER (ORDER BY duration
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) > 0
+             AS survival_zero
+    FROM km)
+  SELECT CAST(duration AS BIGINT) AS duration,
+         CAST(n_risk AS BIGINT) AS n_risk, n_events, n_censored,
+         survival_zero,
+         CASE WHEN NOT survival_zero
+              THEN CAST(CAST(sum(term) OVER (ORDER BY duration
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   AS VARCHAR) AS DOUBLE) END AS log_survival
+  FROM km2 ORDER BY duration
+""")
 def q_user_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier user-churn survival table
     (operators/survival.py): lifetimes = first->last active day per
@@ -1307,6 +2129,41 @@ def q_user_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kaplan_meier(user_lifetimes(load_table(spark, sf_dir, "events")))
 
 
+# Nelson-Aalen: same lifetimes/grain CTEs as the KM oracle; each
+# increment is one long/long division rounded 12dp into the decimal
+# running sum (no transcendental anywhere).
+@query("user_hazard_na", oracle="""
+  WITH spans AS (SELECT user_id, CAST(min(ts) AS DATE) AS f,
+                        CAST(max(ts) AS DATE) AS l
+                 FROM events GROUP BY 1),
+  edge AS (SELECT CAST(max(ts) AS DATE) AS e FROM events),
+  subj AS (SELECT date_diff('day', f, l) AS duration,
+                  (date_diff('day', l, e) < 7) AS censored
+           FROM spans, edge),
+  grain AS (SELECT duration,
+                   CAST(sum(CASE WHEN censored THEN 0 ELSE 1 END) AS BIGINT)
+                     AS n_events,
+                   CAST(sum(CASE WHEN censored THEN 1 ELSE 0 END) AS BIGINT)
+                     AS n_censored,
+                   count(*) AS n_total
+            FROM subj GROUP BY 1),
+  na AS (
+    SELECT duration, n_events, n_censored,
+           sum(n_total) OVER (ORDER BY duration
+             ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS n_risk
+    FROM grain),
+  na2 AS (
+    SELECT duration, n_risk, n_events, n_censored,
+           CAST(round(CAST(n_events AS DOUBLE) / CAST(n_risk AS DOUBLE), 12)
+                AS DECIMAL(20,12)) AS term
+    FROM na)
+  SELECT CAST(duration AS BIGINT) AS duration,
+         CAST(n_risk AS BIGINT) AS n_risk, n_events, n_censored,
+         CAST(CAST(sum(term) OVER (ORDER BY duration
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+              AS VARCHAR) AS DOUBLE) AS cum_hazard
+  FROM na2 ORDER BY duration
+""")
 def q_user_hazard_na(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nelson-Aalen cumulative churn hazard
     (operators/survival.nelson_aalen) over the SAME right-censored
@@ -1319,6 +2176,32 @@ def q_user_hazard_na(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nelson_aalen(user_lifetimes(load_table(spark, sf_dir, "events")))
 
 
+# Tie-aware average precision by the block convention: descending
+# cumulatives INCLUDE the block; per-block term rounded 12dp into the
+# order-independent decimal sum.
+@query("score_average_precision", oracle="""
+  WITH per AS (
+    SELECT n_chars AS s, count(*) AS n,
+           sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS pos
+    FROM documents GROUP BY 1),
+  cum AS (
+    SELECT s, n, pos,
+           sum(n) OVER (ORDER BY s DESC
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cn,
+           sum(pos) OVER (ORDER BY s DESC
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cp
+    FROM per),
+  agg AS (
+    SELECT CAST(sum(pos) AS BIGINT) AS n_pos,
+           CAST(sum(n) AS BIGINT) AS n_total,
+           sum(CAST(round(CAST(pos AS DOUBLE)
+                          * (CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE)), 12)
+                    AS DECIMAL(27,12))) AS ts
+    FROM cum)
+  SELECT n_pos, n_total,
+         CAST(CAST(ts AS VARCHAR) AS DOUBLE) / CAST(n_pos AS DOUBLE) AS ap
+  FROM agg
+""")
 def q_score_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact tie-aware average precision
     (operators/evalmetrics.average_precision) of the document-length
@@ -1337,6 +2220,35 @@ def q_score_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     return average_precision(docs)
 
 
+# Block-assigned gain/lift deciles: decile = integer division of the
+# strictly-above count (ties never split); rates are fixed IEEE chains.
+@query("score_lift_deciles", oracle="""
+  WITH per AS (
+    SELECT n_chars AS s, count(*) AS n,
+           sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS pos
+    FROM documents GROUP BY 1),
+  cum AS (
+    SELECT s, n, pos,
+           coalesce(sum(n) OVER (ORDER BY s DESC
+             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS above
+    FROM per),
+  tot AS (SELECT sum(n) AS tn, sum(pos) AS tp FROM per),
+  dec AS (
+    SELECT CAST(least(9, (10 * above) // tn) AS BIGINT) AS decile, n, pos
+    FROM cum, tot),
+  per_dec AS (
+    SELECT decile, CAST(sum(n) AS BIGINT) AS n_rows,
+           CAST(sum(pos) AS BIGINT) AS n_pos
+    FROM dec GROUP BY 1)
+  SELECT decile, n_rows, n_pos,
+         CAST(n_pos AS DOUBLE) / CAST(n_rows AS DOUBLE) AS resp_rate,
+         (CAST(n_pos AS DOUBLE) / CAST(n_rows AS DOUBLE))
+           / (CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE)) AS lift,
+         CAST(sum(n_pos) OVER (ORDER BY decile
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
+           / CAST(tp AS DOUBLE) AS cum_capture
+  FROM per_dec, tot ORDER BY decile
+""")
 def q_score_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gain/lift deciles (operators/evalmetrics.lift_table) of the
     n_chars score predicting lang='en': [decile, n_rows, n_pos,
@@ -1354,6 +2266,37 @@ def q_score_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lift_table(docs)
 
 
+# Chi-square keyness: every input an exact integer count; the
+# statistic one fixed IEEE chain (same association order as Spark).
+@query("term_chi2_keywords", oracle="""
+  WITH t AS ({TOKS}),
+  tk AS (SELECT lang, unnest(toks) AS w FROM t),
+  cnt AS (SELECT lang, w, CAST(count(*) AS BIGINT) AS a
+          FROM tk GROUP BY 1, 2),
+  ltot AS (SELECT lang, CAST(sum(a) AS BIGINT) AS lt FROM cnt GROUP BY 1),
+  wtot AS (SELECT w, CAST(sum(a) AS BIGINT) AS wt FROM cnt GROUP BY 1),
+  ntot AS (SELECT CAST(sum(lt) AS BIGINT) AS nn FROM ltot),
+  j AS (
+    SELECT cnt.lang, cnt.w, a, lt, wt, nn,
+           CAST(a AS DOUBLE) * CAST(nn - lt - (wt - a) AS DOUBLE)
+             - CAST(wt - a AS DOUBLE) * CAST(lt - a AS DOUBLE) AS diff
+    FROM cnt JOIN ltot USING (lang) JOIN wtot USING (w), ntot
+    WHERE a >= 5),
+  scored AS (
+    SELECT lang, w, a,
+           CAST(nn AS DOUBLE) * (diff * diff)
+             / (CAST(wt AS DOUBLE) * CAST(nn - wt AS DOUBLE)
+                * CAST(lt AS DOUBLE) * CAST(nn - lt AS DOUBLE)) AS chi2
+    FROM j),
+  ranked AS (
+    SELECT lang, w, a, chi2,
+           row_number() OVER (PARTITION BY lang
+                              ORDER BY chi2 DESC, w ASC) AS rank
+    FROM scored)
+  SELECT lang, CAST(rank AS BIGINT) AS rank, w AS word,
+         a AS n_in_lang, chi2
+  FROM ranked WHERE rank <= 10 ORDER BY lang, rank
+""".replace("{TOKS}", _SQL_TOKS))
 def q_term_chi2_keywords(
     spark: SparkSession, sf_dir: str, top_k: int = 10, min_count: int = 5
 ) -> DataFrame:
@@ -1426,6 +2369,40 @@ def q_term_chi2_keywords(
     )
 
 
+# Jensen-Shannon: per-word contribution is one fixed IEEE chain
+# (0.5*p*ln(p/m) with the zero branch guarded), rounded 12dp into the
+# order-independent decimal sum.
+@query("lang_js_divergence", oracle="""
+  WITH t AS ({TOKS}),
+  tk AS (SELECT lang, unnest(toks) AS w FROM t),
+  cnt AS (SELECT lang, w, count(*) AS c FROM tk GROUP BY 1, 2),
+  tot AS (SELECT lang, CAST(sum(c) AS BIGINT) AS n FROM cnt GROUP BY 1),
+  p AS (SELECT cnt.lang, w, CAST(c AS DOUBLE) / CAST(n AS DOUBLE) AS p
+        FROM cnt JOIN tot USING (lang)),
+  langs AS (SELECT lang FROM tot),
+  pairs AS (SELECT a.lang AS la, b.lang AS lb
+            FROM langs a JOIN langs b ON a.lang < b.lang),
+  pa AS (SELECT la, lb, w, p AS pa FROM p JOIN pairs ON p.lang = pairs.la),
+  pb AS (SELECT la, lb, w, p AS pb FROM p JOIN pairs ON p.lang = pairs.lb),
+  j AS (
+    SELECT coalesce(pa.la, pb.la) AS la, coalesce(pa.lb, pb.lb) AS lb,
+           coalesce(pa.pa, 0.0) AS pa, coalesce(pb.pb, 0.0) AS pb
+    FROM pa FULL OUTER JOIN pb
+      ON pa.la = pb.la AND pa.lb = pb.lb AND pa.w = pb.w),
+  terms AS (
+    SELECT la, lb,
+           CAST(round(
+             CASE WHEN pa > 0.0
+                  THEN (0.5 * pa) * ln(pa / ((pa + pb) / 2.0))
+                  ELSE 0.0 END
+             + CASE WHEN pb > 0.0
+                    THEN (0.5 * pb) * ln(pb / ((pa + pb) / 2.0))
+                    ELSE 0.0 END, 12) AS DECIMAL(16,12)) AS term
+    FROM j)
+  SELECT la AS lang_a, lb AS lang_b, CAST(count(*) AS BIGINT) AS n_words,
+         CAST(CAST(sum(term) AS VARCHAR) AS DOUBLE) AS jsd_nats
+  FROM terms GROUP BY 1, 2 ORDER BY 1, 2
+""".replace("{TOKS}", _SQL_TOKS))
 def q_lang_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Jensen-Shannon divergence (nats) between the unigram
     distributions of every language pair: [lang_a, lang_b, n_words,

@@ -1,4 +1,7 @@
-"""registry part 06: multimodal_q (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""Registry queries over binary payloads (image meta/decode/resize,
+perceptual hashes, MP4 metadata and frames), each with its DuckDB
+oracle.
+"""
 
 from __future__ import annotations
 
@@ -6,20 +9,26 @@ from .shared import (
     DataFrame,
     F,
     SparkSession,
-    analytics,
     decode_features,
     load_table,
     resize_images,
     sample_frames,
     with_binary_payload,
 )
-
+from .declare import query
 
 
 # ---------------------------------------------------------------------------
 # multimodal
 # ---------------------------------------------------------------------------
 
+
+@query("multimodal_meta", oracle="""
+      SELECT doc_id, 'text' AS modality,
+             CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+             sha256(text) AS content_sha256
+      FROM documents
+    """)
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     payload = with_binary_payload(docs)
@@ -31,6 +40,26 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# multimodal: meta, plus the deterministic fake decode recomputed
+# from the UTF-8 bytes (hex -> per-byte ints) entirely in SQL
+@query("multimodal_decode", oracle="""
+      WITH h AS (
+        SELECT doc_id, octet_length(encode(text)) AS nb,
+               lower(hex(encode(text))) AS hx
+        FROM documents),
+      b AS (
+        SELECT doc_id, nb,
+               list_transform(range(1, nb + 1),
+                 i -> (strpos('0123456789abcdef', substr(hx, 2*i - 1, 1)) - 1) * 16
+                    + (strpos('0123456789abcdef', substr(hx, 2*i, 1)) - 1)) AS bytes
+        FROM h)
+      SELECT doc_id, 'text' AS modality, CAST(nb AS BIGINT) AS n_bytes,
+             CAST(nb AS DOUBLE) AS f_len,
+             CAST(CASE WHEN nb > 0 THEN bytes[1] ELSE 0 END AS DOUBLE) AS f_first,
+             CAST(CASE WHEN nb > 0 THEN bytes[nb] ELSE 0 END AS DOUBLE) AS f_last,
+             CAST(coalesce(list_sum(bytes), 0) % 997 AS DOUBLE) AS f_sum_mod
+      FROM b
+    """)
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched stub decode via mapInPandas, projected to scalar
     feature columns for the gate: the deterministic fake decode is
@@ -51,6 +80,33 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("multimodal_phash_dup", oracle="""
+      WITH h AS (
+        SELECT doc_id, octet_length(encode(text)) AS nb,
+               lower(hex(encode(text))) AS hx
+        FROM documents),
+      b AS (
+        SELECT doc_id, nb,
+               list_transform(range(1, nb + 1),
+                 i -> (strpos('0123456789abcdef', substr(hx, 2*i - 1, 1)) - 1) * 16
+                    + (strpos('0123456789abcdef', substr(hx, 2*i, 1)) - 1)) AS bytes
+        FROM h),
+      f AS (
+        SELECT doc_id, nb,
+               CASE WHEN nb > 0 THEN bytes[1] ELSE 0 END AS f_first,
+               CASE WHEN nb > 0 THEN bytes[nb] ELSE 0 END AS f_last,
+               coalesce(list_sum(bytes), 0) % 997 AS f_sum_mod
+        FROM b),
+      p AS (
+        SELECT doc_id,
+               CAST((CASE WHEN nb >= 300 THEN 1 ELSE 0 END)
+                  + (CASE WHEN f_first >= 128 THEN 2 ELSE 0 END)
+                  + (CASE WHEN f_last >= 128 THEN 4 ELSE 0 END)
+                  + (CASE WHEN f_sum_mod >= 498 THEN 8 ELSE 0 END) AS BIGINT) AS phash
+        FROM f)
+      SELECT phash, min(doc_id) AS keep_doc_id, count(*) AS n_docs
+      FROM p GROUP BY 1
+    """)
 def q_multimodal_phash_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash image dedup shape: quantize the decoded
     feature vector into fixed-threshold bits, pack a tiny pHash, and
@@ -76,6 +132,19 @@ def q_multimodal_phash_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("multimodal_frames", oracle="""
+      WITH h AS (
+        SELECT doc_id, octet_length(encode(text)) AS nb,
+               lower(hex(encode(text))) AS hx
+        FROM documents),
+      f AS (SELECT doc_id, nb, hx,
+                   unnest(range(0, ((nb + 15) // 16 + 3) // 4)) AS j
+            FROM h WHERE nb > 0)
+      SELECT doc_id, CAST(j AS BIGINT) AS frame_idx,
+             substr(hx, 2 * j * 64 + 1, 2 * least(16, nb - j * 64)) AS frame,
+             CAST(least(16, nb - j * 64) AS BIGINT) AS n_bytes
+      FROM f
+    """)
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling (every 4th 16-byte chunk) via mapInPandas --
     the video-frame-sampler shape with the deterministic stand-in
@@ -84,18 +153,24 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(with_binary_payload(docs))
 
 
+@query("multimodal_resize", oracle="""
+      WITH h AS (
+        SELECT doc_id, octet_length(encode(text)) AS nb,
+               lower(hex(encode(text))) AS hx
+        FROM documents),
+      s AS (SELECT doc_id, nb, hx, greatest(nb // 64, 1) AS step FROM h)
+      SELECT doc_id, CAST(8 AS BIGINT) AS width, CAST(8 AS BIGINT) AS height,
+             CASE WHEN nb = 0 THEN '' ELSE
+               array_to_string(list_transform(
+                 range(0, least(64, (nb + step - 1) // step)),
+                 k -> substr(hx, 2 * k * step + 1, 2)), '') END AS thumb
+      FROM s
+    """)
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-resize shape: stride the byte stream to an 8x8 'thumb'
     via mapInPandas; oracle recomputes the strided hex pairs."""
     docs = load_table(spark, sf_dir, "documents")
     return resize_images(with_binary_payload(docs))
-
-
-# ---------------------------------------------------------------------------
-# relational analytics / events
-# ---------------------------------------------------------------------------
-
-q_pricing_summary = analytics.pricing_summary
 
 
 # deterministic per-doc MP4 parameterization for the video-metadata
@@ -109,6 +184,27 @@ q_pricing_summary = analytics.pricing_summary
 VIDEO_FPS_CHOICES = (10, 16, 20, 25)
 
 
+# the oracle recomputes the expected metadata from the same doc_id
+# parameter arithmetic across the grid (both box versions, largesize,
+# audio)
+@query("multimodal_video_meta", oracle="""
+  WITH p AS (SELECT doc_id,
+                    4 + doc_id % 40 AS n_frames,
+                    [10, 16, 20, 25][CAST(doc_id % 4 AS INT) + 1] AS fps,
+                    doc_id % 3 = 0 AS has_audio
+             FROM documents)
+  SELECT doc_id,
+         'isom' AS brand,
+         round(CAST(n_frames AS DOUBLE) / fps, 6) AS duration_s,
+         CAST(1 + CASE WHEN has_audio THEN 1 ELSE 0 END AS BIGINT) AS n_tracks,
+         'avc1' AS video_codec,
+         CAST(16 + (doc_id % 32) * 2 AS DOUBLE) AS width,
+         CAST(9 + (doc_id % 16) * 3 AS DOUBLE) AS height,
+         CAST(n_frames AS BIGINT) AS n_video_samples,
+         CAST(512 * n_frames AS BIGINT) AS video_bytes,
+         CASE WHEN has_audio THEN 'mp4a' END AS audio_codec
+  FROM p
+""")
 def q_multimodal_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video-container triage over a deterministic MP4 corpus: one
     conformant stub MP4 per document (dimensions / frame count /

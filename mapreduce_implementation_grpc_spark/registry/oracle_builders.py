@@ -1,4 +1,6 @@
-"""registry part 08: oracle_builders (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""SQL helpers the registry's DuckDB oracles share: parameterized builders
+for the LSH, MinHash, k-means, PQ and data-selection twins.
+"""
 
 from __future__ import annotations
 
@@ -9,7 +11,6 @@ from .shared import (
     _sql_toks,
     lsh_planes,
 )
-
 
 
 # ---------------------------------------------------------------------------
@@ -706,7 +707,6 @@ def _curate_documents_sql(min_quality: float = 0.5) -> str:
       SELECT doc_id, text, lang, source, quality, n_bpe_tokens, fingerprint
       FROM q WHERE quality >= {min_quality}
     """
-
 
 
 def _dsir_sql(rel: str = "documents", target: str = "src0") -> str:

@@ -25,8 +25,6 @@ error-bound tests.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from ..materialize import materialize

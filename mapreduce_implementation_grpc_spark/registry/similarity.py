@@ -1,4 +1,6 @@
-"""registry part 05: similarity (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""Registry queries for vector similarity (kNN, LSH and IVF ANN, recall
+evaluation, quantization, classification), each with its DuckDB oracle.
+"""
 
 from __future__ import annotations
 
@@ -7,6 +9,7 @@ from .shared import (
     F,
     SparkSession,
     Window,
+    _SQL_TOKS,
     ann_ivf_topk,
     ann_lsh_topk,
     embedding_dup_pairs,
@@ -16,8 +19,28 @@ from .shared import (
     quantize_embeddings,
     with_token_array,
 )
-from .curation import BM25_QUERY, q_bm25_topk
-
+from .curation import (
+    BM25_QUERY,
+    _SQL_BM25_TOPK,
+    q_bm25_topk,
+)
+from .oracle_builders import (
+    _ann_ivf_kmeans_sql,
+    _ann_lsh_banded_sql,
+    _ann_lsh_multiprobe_sql,
+    _ann_lsh_sql,
+    _banded_bb_sql,
+    _banded_pairs_sql,
+    _dsir_sql,
+    _ivfpq_residual_sql,
+    _ivfpq_sql,
+    _kmeans_cells_sql,
+    _pq_codes_sql,
+    _pq_search_sql,
+    _semantic_dedup_sql,
+    _temperature_sql,
+)
+from .declare import query
 
 
 # ---------------------------------------------------------------------------
@@ -31,18 +54,40 @@ def _query_vectors(spark: SparkSession, sf_dir: str, n: int = 10) -> DataFrame:
     )
 
 
+_SQL_KNN_COSINE = """
+      WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qvec
+                 FROM embeddings WHERE vec_id < 10),
+      s AS (SELECT q.query_id, e.vec_id AS neighbor_id,
+                   round(list_cosine_similarity(q.qvec, CAST(e.embedding AS DOUBLE[])), 6) AS cosine
+            FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+      r AS (SELECT *, row_number() OVER (PARTITION BY query_id
+                      ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM s)
+      SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank
+      FROM r WHERE rank <= 5
+    """
+
+
+@query("knn_cosine", oracle=_SQL_KNN_COSINE)
 def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     knn = knn_brute_force(emb, _query_vectors(spark, sf_dir), k=5)
     return knn.withColumn("rank", F.col("rank").cast("long"))
 
 
+_SQL_ANN_LSH = _ann_lsh_sql()
+
+
+@query("ann_lsh", oracle=_SQL_ANN_LSH)
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     ann = ann_lsh_topk(emb, _query_vectors(spark, sf_dir), k=5)
     return ann.withColumn("rank", F.col("rank").cast("long"))
 
 
+_SQL_ANN_LSH_MULTIPROBE = _ann_lsh_multiprobe_sql()
+
+
+@query("ann_lsh_multiprobe", oracle=_SQL_ANN_LSH_MULTIPROBE)
 def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH ANN (round 8): the query's bucket plus all 8
     Hamming-1 buckets -- the standard recall lever when the sign-LSH
@@ -59,6 +104,7 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann.withColumn("rank", F.col("rank").cast("long"))
 
 
+@query("kmeans_cells", oracle=_kmeans_cells_sql())
 def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative Lloyd's k-means cell assignment. Oracle-checked:
     exact decimal-sum means make every round deterministic, and the
@@ -69,6 +115,25 @@ def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmeans_cells(load_table(spark, sf_dir, "embeddings"), k=8, n_iter=3)
 
 
+@query("cluster_topics", oracle=f"""
+      WITH km AS ({_kmeans_cells_sql()}),
+      t AS ({_SQL_TOKS}),
+      w AS (SELECT doc_id, unnest(toks) AS word FROM t),
+      j AS (SELECT km.cell, w.word FROM w JOIN km ON w.doc_id = km.vec_id),
+      cw AS (SELECT cell, word, count(*) AS cnt FROM j GROUP BY 1, 2),
+      ct AS (SELECT cell, sum(cnt) AS ctot FROM cw GROUP BY 1),
+      wt AS (SELECT word, sum(cnt) AS wtot FROM cw GROUP BY 1),
+      g AS (SELECT sum(cnt) AS gtot FROM cw),
+      s AS (SELECT cw.cell, cw.word, CAST(cw.cnt AS BIGINT) AS cnt,
+              round((CAST(cnt AS DOUBLE) / ctot) / (CAST(wtot AS DOUBLE) / gtot), 6)
+                AS lift
+            FROM cw JOIN ct USING (cell) JOIN wt USING (word) CROSS JOIN g
+            WHERE cnt >= 5),
+      r AS (SELECT *, row_number() OVER (PARTITION BY cell
+              ORDER BY lift DESC, word ASC) AS rn FROM s)
+      SELECT cell, word, cnt, lift, CAST(rn AS BIGINT) AS "rank"
+      FROM r WHERE rn <= 5
+    """)
 def q_cluster_topics(spark: SparkSession, sf_dir: str, topn: int = 5,
                      min_count: int = 5) -> DataFrame:
     """Topic labeling of embedding clusters: k-means cells (the
@@ -118,6 +183,35 @@ def q_cluster_topics(spark: SparkSession, sf_dir: str, topn: int = 5,
     )
 
 
+# IVF ANN: centroids are exact decimal-sum means, so the full
+# probe/serve plan is reproducible in SQL
+_SQL_ANN_IVF = """
+      WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS dvec FROM embeddings),
+      i AS (SELECT label, dvec, unnest(range(1, len(dvec) + 1)) AS idx FROM v),
+      m AS (SELECT label AS cell, idx,
+                   CAST(CAST(sum(CAST(dvec[idx] AS DECIMAL(27,12))) AS VARCHAR) AS DOUBLE)
+                   / count(*) AS c
+            FROM i GROUP BY label, idx),
+      cents AS (SELECT cell, list(c ORDER BY idx ASC) AS cvec FROM m GROUP BY cell),
+      q AS (SELECT vec_id AS query_id, dvec AS qvec FROM v WHERE vec_id < 10),
+      qc AS (SELECT q.query_id, q.qvec, c.cell,
+                    list_cosine_similarity(q.qvec, c.cvec) AS csim
+             FROM q CROSS JOIN cents c),
+      probes AS (SELECT query_id, qvec, cell FROM (
+          SELECT *, row_number() OVER (PARTITION BY query_id
+                    ORDER BY csim DESC, cell ASC) AS pr FROM qc) WHERE pr <= 2),
+      s AS (SELECT p.query_id, p.cell, e.vec_id AS neighbor_id,
+                   round(list_cosine_similarity(p.qvec, e.dvec), 6) AS cosine
+            FROM probes p JOIN v e ON e.label = p.cell
+            WHERE e.vec_id <> p.query_id),
+      r AS (SELECT *, row_number() OVER (PARTITION BY query_id
+                      ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM s)
+      SELECT query_id, cell, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank
+      FROM r WHERE rank <= 5
+    """
+
+
+@query("ann_ivf", oracle=_SQL_ANN_IVF)
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse-quantized ANN. Oracle-checked end-to-end: centroids
     are exact decimal-sum means, so DuckDB reproduces the identical
@@ -145,6 +239,18 @@ def _recall_df(spark, sf_dir, ann) -> DataFrame:
     )
 
 
+@query("bm25_snippets", oracle=f"""
+  WITH top AS (SELECT * FROM ({_SQL_BM25_TOPK})
+               ORDER BY bm25 DESC, doc_id ASC LIMIT 20),
+  j AS (SELECT top.doc_id, top.bm25, d.text,
+               least(CASE WHEN instr(text, 'spark') > 0 THEN instr(text, 'spark') ELSE 1000000000 END, CASE WHEN instr(text, 'join') > 0 THEN instr(text, 'join') ELSE 1000000000 END, CASE WHEN instr(text, 'fast') > 0 THEN instr(text, 'fast') ELSE 1000000000 END) AS first_pos
+        FROM top JOIN documents d ON top.doc_id = d.doc_id)
+  SELECT doc_id, bm25,
+         CASE WHEN first_pos < 1000000000
+              THEN substr(text, CAST(greatest(first_pos - 30, 1) AS BIGINT), 80)
+              ELSE substr(text, 1, 80) END AS snippet
+  FROM j ORDER BY bm25 DESC, doc_id ASC
+""")
 def q_bm25_snippets(spark: SparkSession, sf_dir: str, topn: int = 20,
                     ctx: int = 30, width: int = 80) -> DataFrame:
     """Search-result presentation: for each BM25 top-doc, an 80-char
@@ -176,6 +282,28 @@ def q_bm25_snippets(spark: SparkSession, sf_dir: str, topn: int = 20,
     )
 
 
+@query("hybrid_rrf_topk", oracle=f"""
+  WITH lexb AS (SELECT * FROM ({_SQL_BM25_TOPK})),
+  lex AS (SELECT doc_id,
+                 row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS r_lex
+          FROM lexb),
+  q0 AS (SELECT CAST(embedding AS DOUBLE[]) AS qvec FROM embeddings
+         WHERE vec_id = 0),
+  sden AS (SELECT e.vec_id AS doc_id,
+                  round(list_cosine_similarity(q0.qvec,
+                        CAST(e.embedding AS DOUBLE[])), 6) AS cosine
+           FROM q0, embeddings e WHERE e.vec_id <> 0),
+  denr AS (SELECT doc_id,
+                  row_number() OVER (ORDER BY cosine DESC, doc_id ASC) AS r_den
+           FROM sden),
+  den AS (SELECT doc_id, r_den FROM denr WHERE r_den <= 50)
+  SELECT doc_id,
+         round(coalesce(CAST(1 AS DOUBLE) / (CAST(60 AS DOUBLE) + CAST(r_lex AS DOUBLE)), CAST(0 AS DOUBLE))
+               + coalesce(CAST(1 AS DOUBLE) / (CAST(60 AS DOUBLE) + CAST(r_den AS DOUBLE)), CAST(0 AS DOUBLE)), 6)
+           AS rrf
+  FROM lex FULL OUTER JOIN den USING (doc_id)
+  ORDER BY rrf DESC, doc_id ASC LIMIT 20
+""")
 def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str, k_each: int = 50,
                       topn: int = 20, rrf_k: int = 60) -> DataFrame:
     """Hybrid retrieval: reciprocal-rank fusion of the BM25 lexical
@@ -212,6 +340,22 @@ def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str, k_each: int = 50,
     return fused.orderBy(F.desc("rrf"), F.asc("doc_id")).limit(topn)
 
 
+# composed evaluation: both sides reuse the existing deterministic oracles
+def _recall_block(ivf_sql: str) -> str:
+    return (
+        "WITH exact AS (" + _SQL_KNN_COSINE + "),\n"
+        "ann AS (" + ivf_sql + "),\n"
+        """h AS (SELECT e.query_id, count(*) AS n_hits
+             FROM exact e JOIN ann a ON a.query_id = e.query_id
+              AND a.neighbor_id = e.neighbor_id GROUP BY 1),
+      b AS (SELECT query_id, count(*) AS n_exact FROM exact GROUP BY 1)
+      SELECT b.query_id, coalesce(h.n_hits, 0) AS n_hits,
+             round(coalesce(h.n_hits, 0) / CAST(b.n_exact AS DOUBLE), 6) AS recall
+      FROM b LEFT JOIN h USING (query_id)"""
+    )
+
+
+@query("ann_recall", oracle=_recall_block(_SQL_ANN_IVF))
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity-search quality eval: recall of the IVF ANN probe
     against exact brute-force kNN, per query (|ann cap exact| /
@@ -222,6 +366,9 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_df(spark, sf_dir, ann)
 
 
+# LSH-family recall rows (round 8): same composed eval over the
+# single-bucket and multi-probe LSH blocks
+@query("ann_recall_lsh", oracle=_recall_block(_SQL_ANN_LSH))
 def q_ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of the SINGLE-BUCKET LSH ANN path vs exact kNN -- the
     honesty row the LSH family lacked (ann_recall covers IVF).
@@ -235,6 +382,7 @@ def q_ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_df(spark, sf_dir, ann)
 
 
+@query("ann_recall_lsh_multiprobe", oracle=_recall_block(_SQL_ANN_LSH_MULTIPROBE))
 def q_ann_recall_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of the multi-probe LSH ANN path vs exact kNN -- the
     same eval over the Hamming-1 probe set. Measured mean top-5
@@ -251,6 +399,11 @@ def q_ann_recall_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_df(spark, sf_dir, ann)
 
 
+_SQL_ANN_LSH_BANDED = _ann_lsh_banded_sql()
+
+
+# r9: the banded+re-ranked serving path and its measured-recall row
+@query("ann_lsh_banded", oracle=_SQL_ANN_LSH_BANDED)
 def q_ann_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded-LSH ANN with exact re-ranking (round 9, VERDICT r8 #1
     lead task): 64 bands x 7 sign bits generate candidates (collide
@@ -269,6 +422,15 @@ def q_ann_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 ANN_BANDED_SWEEP = (16, 32, 64)
 
 
+# the bands tuning curve: each config re-derives the banded block at
+# its own width (smaller configs' planes are a prefix of larger ones,
+# so the candidate sets nest and recall is monotone in bands)
+@query("ann_recall_lsh_banded_sweep", oracle="\nUNION ALL\n".join(
+    f"SELECT CAST({b} AS BIGINT) AS bands, r.* FROM ("
+    + _recall_block(_ann_lsh_banded_sql(bands=b))
+    + ") r"
+    for b in (16, 32, 64)
+))
 def q_ann_recall_lsh_banded_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The recall-vs-bands TUNING CURVE for the banded+re-ranked ANN
     path (mirror of ann_recall_sweep for IVF): per-query recall at
@@ -293,6 +455,31 @@ def q_ann_recall_lsh_banded_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     return out
 
 
+# r9: the cost half of the banded-ANN tuning table -- per-query
+# candidate volume at each sweep width (the recall half is
+# ann_recall_lsh_banded_sweep; same (bands, query_id) keys)
+def _banded_candidates_sql(bands: int, rows_per_band: int = 7,
+                           n_queries: int = 10) -> str:
+    return f"""
+      WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS dvec FROM embeddings),
+      bb AS ({_banded_bb_sql(bands, rows_per_band)}),
+      qb AS (SELECT vec_id AS query_id, band, bucket FROM bb WHERE vec_id < {n_queries}),
+      cand AS (SELECT DISTINCT q.query_id, e.vec_id
+               FROM qb q JOIN bb e USING (band, bucket)
+               WHERE e.vec_id <> q.query_id),
+      t AS (SELECT count(*) AS _n FROM embeddings)
+      SELECT CAST({bands} AS BIGINT) AS bands, query_id,
+             count(*) AS n_candidates,
+             round(count(*) / CAST(t._n - 1 AS DOUBLE), 6) AS cand_frac
+      FROM cand, t GROUP BY query_id, t._n
+    """
+
+
+# each arm's WITH must live inside a subquery for the top-level UNION
+@query("ann_banded_candidates_sweep", oracle="\nUNION ALL\n".join(
+    "SELECT * FROM (" + _banded_candidates_sql(b) + ") c" + str(b)
+    for b in (16, 32, 64)
+))
 def q_ann_banded_candidates_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COST half of the banded-ANN tuning table (recall half:
     ann_recall_lsh_banded_sweep, same (bands, query_id) keys): per
@@ -347,6 +534,7 @@ def q_ann_banded_candidates_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     return out
 
 
+@query("ann_recall_lsh_banded", oracle=_recall_block(_SQL_ANN_LSH_BANDED))
 def q_ann_recall_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of the banded+re-ranked LSH ANN path vs exact kNN: the
     measured proof that the r9 candidate widening reached a usable
@@ -365,6 +553,14 @@ def q_ann_recall_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 ANN_SWEEP_PROBES = (1, 2, 4)
 
 
+# the probe-count sweep re-parameterizes the IVF block's `pr <= N`
+# routing predicate; everything else is byte-identical
+@query("ann_recall_sweep", oracle="\nUNION ALL\n".join(
+    f"SELECT CAST({np} AS BIGINT) AS n_probe, r.* FROM ("
+    + _recall_block(_SQL_ANN_IVF.replace("pr <= 2", f"pr <= {np}"))
+    + ") r"
+    for np in (1, 2, 4)
+))
 def q_ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The recall-vs-n_probe TUNING CURVE: per-query IVF recall at
     n_probe in {1, 2, 4} in one result (recall must be monotone
@@ -382,6 +578,41 @@ def q_ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+# graded ranking quality: same two deterministic rankings, so nDCG's
+# per-term round(ln,9)/decimal-sum recipe keeps the eval hash-exact
+@query(
+    "ann_rank_quality",
+    oracle="WITH exact AS (" + _SQL_KNN_COSINE + "),\n"
+    "ann AS (" + _SQL_ANN_IVF + "),\n"
+    """j AS (SELECT a.query_id, a.rank AS ann_rank, e.rank AS exact_rank
+        FROM ann a LEFT JOIN exact e ON a.query_id = e.query_id
+         AND a.neighbor_id = e.neighbor_id),
+  terms AS (SELECT query_id, ann_rank,
+        CASE WHEN exact_rank IS NOT NULL THEN 6 - exact_rank ELSE 0 END AS rel
+      FROM j),
+  pq AS (SELECT query_id,
+        sum(CAST(round(CAST(rel AS DOUBLE)
+              / (round(ln(CAST(ann_rank AS DOUBLE) + CAST(1.0 AS DOUBLE)), 9)
+                 / round(ln(CAST(2.0 AS DOUBLE)), 9)), 9) AS DECIMAL(20,9))) AS dcg_d,
+        min(CASE WHEN rel > 0 THEN ann_rank END) AS first_hit,
+        sum(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS n_hits
+      FROM terms GROUP BY 1),
+  ideal AS (SELECT query_id,
+        sum(CAST(round(CAST(6 - rank AS DOUBLE)
+              / (round(ln(CAST(rank AS DOUBLE) + CAST(1.0 AS DOUBLE)), 9)
+                 / round(ln(CAST(2.0 AS DOUBLE)), 9)), 9) AS DECIMAL(20,9))) AS idcg_d,
+        count(*) AS n_exact
+      FROM exact GROUP BY 1)
+  SELECT i.query_id,
+         CAST(coalesce(p.n_hits, 0) AS BIGINT) AS n_hits,
+         round(coalesce(p.n_hits, 0) / CAST(i.n_exact AS DOUBLE), 6) AS recall,
+         coalesce(round(CAST(1.0 AS DOUBLE) / p.first_hit, 6),
+                  CAST(0.0 AS DOUBLE)) AS mrr,
+         round(coalesce(CAST(CAST(p.dcg_d AS VARCHAR) AS DOUBLE), CAST(0.0 AS DOUBLE))
+               / CAST(CAST(i.idcg_d AS VARCHAR) AS DOUBLE), 6) AS ndcg
+  FROM ideal i LEFT JOIN pq p USING (query_id)
+""",
+)
 def q_ann_rank_quality(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     """GRADED ranking-quality eval of the IVF ANN index: per query,
     recall@k, MRR (reciprocal rank of the first true neighbor in the
@@ -465,6 +696,10 @@ def _rank_quality_df(spark, sf_dir, ann: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
+_SQL_ANN_IVF_KMEANS = _ann_ivf_kmeans_sql()
+
+
+@query("ann_ivf_kmeans", oracle=_SQL_ANN_IVF_KMEANS)
 def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over LEARNED cells: Lloyd's k-means assigns the
     inverted lists, then the same probe/serve plan as ann_ivf -- the
@@ -475,30 +710,6 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = kmeans_cells(emb, k=8, n_iter=3).select("vec_id", "cell")
     emb_cells = emb.join(cells, "vec_id")
     return ann_ivf_topk(emb_cells, _query_vectors(spark, sf_dir), k=5, by="cell")
-
-
-def q_mmr_rerank(spark: SparkSession, sf_dir: str, n_cand: int = 20,
-                 k: int = 8, lam: float = 0.7) -> DataFrame:
-    """MMR diversified re-rank (operators/mmr.py): brute-force top-20
-    candidates per query, then greedy lam=0.7 relevance-vs-redundancy
-    selection of 8 via applyInPandas over query groups -- serving-time
-    dedup for a near-dup-heavy corpus. The oracle unrolls the 8 greedy
-    steps as materialized CTEs; literal lam/(1.0-lam) doubles and the
-    shared cosine fold keep every pick hash-exact."""
-    from ..operators.mmr import mmr_select
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cand = knn_brute_force(emb, _query_vectors(spark, sf_dir), k=n_cand)
-    cand = cand.join(
-        emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
-        "neighbor_id",
-    ).select(
-        "query_id",
-        F.col("neighbor_id").alias("doc_id"),
-        F.col("cosine").alias("sim_q"),
-        "embedding",
-    )
-    return mmr_select(cand, k=k, lam=lam)
 
 
 def _mmr_ctes(n_cand: int = 20, k: int = 8) -> str:
@@ -551,10 +762,51 @@ def _mmr_ctes(n_cand: int = 20, k: int = 8) -> str:
     return "".join(parts) + "\n" + tail
 
 
+@query("mmr_rerank", oracle=_mmr_ctes())
+def q_mmr_rerank(spark: SparkSession, sf_dir: str, n_cand: int = 20,
+                 k: int = 8, lam: float = 0.7) -> DataFrame:
+    """MMR diversified re-rank (operators/mmr.py): brute-force top-20
+    candidates per query, then greedy lam=0.7 relevance-vs-redundancy
+    selection of 8 via applyInPandas over query groups -- serving-time
+    dedup for a near-dup-heavy corpus. The oracle unrolls the 8 greedy
+    steps as materialized CTEs; literal lam/(1.0-lam) doubles and the
+    shared cosine fold keep every pick hash-exact."""
+    from ..operators.mmr import mmr_select
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cand = knn_brute_force(emb, _query_vectors(spark, sf_dir), k=n_cand)
+    cand = cand.join(
+        emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
+        "neighbor_id",
+    ).select(
+        "query_id",
+        F.col("neighbor_id").alias("doc_id"),
+        F.col("cosine").alias("sim_q"),
+        "embedding",
+    )
+    return mmr_select(cand, k=k, lam=lam)
+
+
+@query("embedding_dup_pairs", oracle="""
+      SELECT * FROM (
+        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+               round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                                            CAST(b.embedding AS DOUBLE[])), 6) AS cosine
+        FROM embeddings a, embeddings b WHERE a.vec_id < b.vec_id
+      ) WHERE cosine >= 0.35
+    """)
 def q_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_dup_pairs(load_table(spark, sf_dir, "embeddings"), min_cosine=0.35)
 
 
+# Banded-LSH dup pairs (round 8: OR-of-ANDs amplification; the
+# old AND-only single bucket recalled ~5% at cos 0.35): bands are
+# the deterministic splitmix64 planes (round 9 randomness fix), so
+# the recall<1 scale path is still exactly-checkable
+@query("embedding_dup_pairs_lsh", oracle=f"""
+      {_banded_pairs_sql()}
+      SELECT vec_a, vec_b, cosine FROM pairs
+    """)
 def q_embedding_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale path: pair search restricted to LSH buckets (recall<1,
     but deterministic -- the splitmix64 planes are embedded in the
@@ -564,6 +816,32 @@ def q_embedding_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("embedding_quantize", oracle="""
+      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      f AS (SELECT vec_id, unnest(v) AS x, unnest(range(1, len(v) + 1)) AS pos FROM e),
+      st AS (SELECT pos, min(x) AS mn, max(x) AS mx FROM f GROUP BY 1),
+      arr AS (SELECT list(mn ORDER BY pos) AS mins, list(mx ORDER BY pos) AS maxs FROM st),
+      c AS (SELECT vec_id, v, mins, maxs,
+              list_transform(range(1, len(v) + 1), i ->
+                CASE WHEN maxs[i] > mins[i]
+                     THEN CAST(floor(((v[i] - mins[i]) * 255.0) / (maxs[i] - mins[i])) AS INT)
+                     ELSE 0 END) AS codes
+            FROM e, arr),
+      er AS (SELECT vec_id, codes, len(v) AS nd,
+               list_transform(range(1, len(v) + 1), i ->
+                 CASE WHEN maxs[i] > mins[i]
+                      THEN (v[i] - (mins[i] + ((CAST(codes[i] AS DOUBLE) + 0.5)
+                             * (maxs[i] - mins[i])) / 255.0))
+                      ELSE 0.0 END) AS err
+             FROM c)
+      SELECT vec_id,
+             CAST(nd AS BIGINT) AS n_dims,
+             CAST(list_sum(codes) AS BIGINT) AS code_sum,
+             CAST(list_min(codes) AS BIGINT) AS code_min,
+             CAST(list_max(codes) AS BIGINT) AS code_max,
+             round(list_sum(list_transform(err, d -> d * d)) / nd, 6) AS mse
+      FROM er
+    """)
 def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int8 scalar quantization of the embedding corpus, projected to
     gate-hashable scalars: code checksum/extrema (exact integers) +
@@ -581,6 +859,7 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("pq_codes", oracle=_pq_codes_sql())
 def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization codes (4 subspaces x 4 codewords over the
     64-dim embeddings) + total reconstruction error, projected to
@@ -596,6 +875,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("pq_search", oracle=_pq_search_sql())
 def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC top-5 neighbors from the PQ codes alone (the compressed-
     domain ANN scan). EAGER: trains the codebooks first."""
@@ -605,6 +885,7 @@ def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_adc_topk(emb, _query_vectors(spark, sf_dir), topk=5)
 
 
+@query("ann_ivfpq", oracle=_ivfpq_sql())
 def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ: coarse k-means cells bound the scan, PQ codes
     compress it -- the standard billion-scale ANN layout, fully
@@ -615,6 +896,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivfpq_topk(emb, _query_vectors(spark, sf_dir), topk=5)
 
 
+@query("ann_ivfpq_residual", oracle=_ivfpq_residual_sql())
 def q_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC proper: PQ codebooks trained on coarse-cell residuals
     (tighter codes at the same bit budget). EAGER: trains coarse +
@@ -625,6 +907,43 @@ def q_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivfpq_residual_topk(emb, _query_vectors(spark, sf_dir), topk=5)
 
 
+_SQL_NB_LANG_SCORES = """
+      WITH t0 AS (SELECT doc_id, lang,
+                         list_filter(string_split_regex(trim(lower(
+                           regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g'))), '\\s+'),
+                           w -> w <> '') AS toks
+                  FROM documents),
+      tr AS (SELECT doc_id, lang, unnest(toks) AS w FROM t0),
+      tokm AS (SELECT doc_id, lang, w, count(*) AS m FROM tr GROUP BY 1, 2, 3),
+      tokc AS (SELECT lang, w, count(*) AS c FROM tr GROUP BY 1, 2),
+      cls AS (SELECT lang, count(*) AS nt FROM tr GROUP BY 1),
+      nd AS (SELECT lang, count(*) AS nd FROM documents GROUP BY 1),
+      ntot AS (SELECT count(*) AS n FROM documents),
+      voc AS (SELECT DISTINCT w FROM tr),
+      vv AS (SELECT count(*) AS v FROM voc),
+      model AS (SELECT c2.lang AS cand, voc.w,
+                       CAST(round(ln((coalesce(tc.c, 0) + 1.0)
+                              / CAST(c2.nt + vv.v AS DOUBLE)), 9) AS DECIMAL(12,9)) AS lp
+                FROM voc CROSS JOIN cls c2 CROSS JOIN vv
+                LEFT JOIN tokc tc ON tc.lang = c2.lang AND tc.w = voc.w),
+      priors AS (SELECT nd.lang AS cand,
+                        CAST(round(ln(CAST(nd.nd AS DOUBLE) / CAST(ntot.n AS DOUBLE)), 9)
+                             AS DECIMAL(12,9)) AS lp0
+                 FROM nd CROSS JOIN ntot),
+      sc AS (SELECT tm.doc_id, tm.lang, mo.cand,
+                    sum(CAST(tm.m AS DECIMAL(10,0)) * mo.lp) AS s
+             FROM tokm tm JOIN model mo ON mo.w = tm.w GROUP BY 1, 2, 3),
+      tot AS (SELECT sc.doc_id, sc.lang, sc.cand, sc.s + p.lp0 AS total
+              FROM sc JOIN priors p ON p.cand = sc.cand),
+      r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
+                      ORDER BY total DESC, cand ASC) AS rk FROM tot)
+      SELECT doc_id, lang, cand AS pred_lang,
+             round(CAST(CAST(total AS VARCHAR) AS DOUBLE), 6) AS nb_score
+      FROM r WHERE rk = 1
+    """
+
+
+@query("nb_lang_scores", oracle=_SQL_NB_LANG_SCORES)
 def q_nb_lang_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained multinomial Naive Bayes language classifier: two
     training aggregations, broadcast model table, decimal-exact
@@ -634,6 +953,7 @@ def q_nb_lang_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nb_lang_scores(load_table(spark, sf_dir, "documents"))
 
 
+@query("dsir_weights", oracle=_dsir_sql())
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weights: target-vs-raw unigram log-likelihood
     ratio per raw-pool doc (two vocab-sized training aggregations,
@@ -643,6 +963,26 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_weights(load_table(spark, sf_dir, "documents"))
 
 
+# composed data-selection pipeline: dedup keep-set, DSIR over the
+# deduped corpus, threshold, temperature membership over the selected
+# pool -- each stage re-using the standalone oracles' SQL generators
+@query("select_pretraining_corpus", oracle="""WITH dedup_keep AS (
+         SELECT min(doc_id) AS doc_id
+         FROM (SELECT doc_id,
+                      md5(trim(lower(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))) AS fp
+               FROM documents)
+         GROUP BY fp),
+       d1 AS (SELECT d.* FROM documents d JOIN dedup_keep USING (doc_id)),
+       dsirw AS ("""
+    + _dsir_sql("d1")
+    + """),
+       sel AS (SELECT doc_id, dsir_logw FROM dsirw WHERE dsir_logw >= 0.0),
+       d2 AS (SELECT d1.* FROM d1 JOIN sel USING (doc_id)),
+       kept AS ("""
+    + _temperature_sql("d2")
+    + """)
+       SELECT k.doc_id, k.lang, k.source, sel.dsir_logw
+       FROM kept k JOIN sel USING (doc_id)""")
 def q_select_pretraining_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed data-selection pipeline: exact dedup -> DSIR
     importance threshold (>= 0: at least as target-like as the raw
@@ -652,6 +992,12 @@ def q_select_pretraining_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return select_pretraining_corpus(spark, sf_dir)
 
 
+@query(
+    "nb_confusion",
+    oracle="SELECT lang, pred_lang, count(*) AS n_docs FROM ("
+    + _SQL_NB_LANG_SCORES
+    + ") GROUP BY 1, 2",
+)
 def q_nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier evaluation loop: confusion matrix of the NB
     prediction vs the labeled lang (count per (lang, pred_lang))."""
@@ -664,6 +1010,7 @@ def q_nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("semantic_dedup", oracle=_semantic_dedup_sql())
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup: k-means cells bound the pair
     scan; within a cell, a vector with a smaller-id neighbor at
@@ -708,6 +1055,56 @@ def _clustered_query_vecs(cv: DataFrame, n: int = 10) -> DataFrame:
     )
 
 
+def _dlit(x: float) -> str:
+    """Double literal for DuckDB: repr plus an explicit exponent so
+    the parser types it DOUBLE directly. A bare decimal literal
+    routes through DECIMAL and the DECIMAL->DOUBLE conversion can
+    land 1 ulp off the Python/Spark double (measured on the
+    clustered-center literals) -- the same class of drift the
+    decimal-vs-double string-routing convention exists to prevent."""
+    s = repr(float(x))
+    return s if "e" in s or "E" in s else s + "e0"
+
+
+def _clustered_v_ctes(n_clusters: int = 25, sigma: float = 0.5,
+                      dim: int = 64) -> str:
+    """CTE chain (cent, v): the deterministic clustered corpus --
+    exact twin of operators.similarity.synthetic_clustered_embeddings
+    (same splitmix64 center literals, same md5-prefix noise; every
+    arithmetic step exact in double except the one final add, so the
+    generated vectors are bit-identical cross-engine)."""
+    from ..operators.similarity import clustered_centers
+
+    cents = clustered_centers(n_clusters, dim)
+    vals = ",\n        ".join(
+        "({c}, [{w}])".format(
+            c=c, w=", ".join(_dlit(x) for x in cents[c])
+        )
+        for c in range(n_clusters)
+    )
+    return f"""
+      cent AS (SELECT * FROM (VALUES {vals}) AS t(cluster, cvec)),
+      v AS (SELECT e.vec_id, CAST(e.vec_id % {n_clusters} AS BIGINT) AS cluster,
+                   list_transform(range(0, {dim}),
+                     d -> c.cvec[CAST(d + 1 AS INT)]
+                          + {_dlit(sigma)} * (CAST(concat('0x', substr(md5(e.vec_id || ':' || d), 1, 8)) AS BIGINT)
+                                              / 4294967296.0 - 0.5)) AS dvec
+            FROM embeddings e JOIN cent c ON c.cluster = e.vec_id % {n_clusters})"""
+
+
+@query("clustered_corpus_structure", oracle=f"""
+  WITH {_clustered_v_ctes()},
+  q AS (SELECT vec_id AS query_id, cluster AS qcluster, dvec AS qvec
+        FROM v WHERE vec_id < 10),
+  s AS (SELECT CAST(e.cluster = q.qcluster AS BIGINT) AS same_cluster,
+               round(list_cosine_similarity(q.qvec, e.dvec), 6) AS cosine
+        FROM q, v e WHERE e.vec_id <> q.query_id)
+  SELECT same_cluster, count(*) AS n_pairs,
+         round(CAST(CAST(sum(CAST(cosine AS DECIMAL(16,6))) AS VARCHAR) AS DOUBLE)
+               / count(*), 6) AS mean_cos,
+         min(cosine) AS min_cos, max(cosine) AS max_cos
+  FROM s GROUP BY same_cluster
+""")
 def q_clustered_corpus_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The clustered fixture's measured geometry: cosine of the 10
     query vectors against the whole corpus, aggregated by whether the
@@ -752,6 +1149,52 @@ def q_clustered_corpus_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _clustered_selectivity_sql(bands: int, rows_per_band: int = 7,
+                               n_queries: int = 10, k: int = 5) -> str:
+    """One sweep arm of ann_clustered_selectivity: banded candidates
+    + exact re-rank + exact kNN + per-query recall and candidate
+    fraction, all over the clustered CTE (the banded block is the
+    verbatim _banded_bb_sql -- it only references `v`)."""
+    return f"""
+      WITH {_clustered_v_ctes()},
+      bb AS ({_banded_bb_sql(bands, rows_per_band)}),
+      qb AS (SELECT vec_id AS query_id, band, bucket FROM bb WHERE vec_id < {n_queries}),
+      cand AS (SELECT DISTINCT q.query_id, e.vec_id AS neighbor_id
+               FROM qb q JOIN bb e USING (band, bucket)
+               WHERE e.vec_id <> q.query_id),
+      q AS (SELECT vec_id AS query_id, dvec AS qvec FROM v WHERE vec_id < {n_queries}),
+      xs AS (SELECT q.query_id, e.vec_id AS neighbor_id,
+                    round(list_cosine_similarity(q.qvec, e.dvec), 6) AS cosine
+             FROM q, v e WHERE e.vec_id <> q.query_id),
+      xr AS (SELECT *, row_number() OVER (PARTITION BY query_id
+                       ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM xs),
+      exact AS (SELECT query_id, neighbor_id FROM xr WHERE rank <= {k}),
+      asq AS (SELECT c.query_id, c.neighbor_id,
+                     round(list_cosine_similarity(qv.qvec, ev.dvec), 6) AS cosine
+              FROM cand c JOIN q qv ON qv.query_id = c.query_id
+                          JOIN v ev ON ev.vec_id = c.neighbor_id),
+      ar AS (SELECT *, row_number() OVER (PARTITION BY query_id
+                       ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM asq),
+      ann AS (SELECT query_id, neighbor_id FROM ar WHERE rank <= {k}),
+      h AS (SELECT e.query_id, count(*) AS n_hits FROM exact e
+            JOIN ann a ON a.query_id = e.query_id
+             AND a.neighbor_id = e.neighbor_id GROUP BY 1),
+      nc AS (SELECT query_id, count(*) AS n_candidates FROM cand GROUP BY 1),
+      base AS (SELECT query_id, count(*) AS n_exact FROM exact GROUP BY 1),
+      t AS (SELECT count(*) AS _n FROM v)
+      SELECT CAST({bands} AS BIGINT) AS bands, base.query_id,
+             coalesce(h.n_hits, 0) AS n_hits,
+             round(coalesce(h.n_hits, 0) / CAST(base.n_exact AS DOUBLE), 6) AS recall,
+             CAST(coalesce(nc.n_candidates, 0) AS BIGINT) AS n_candidates,
+             round(coalesce(nc.n_candidates, 0) / CAST(t._n - 1 AS DOUBLE), 6) AS cand_frac
+      FROM base LEFT JOIN h USING (query_id) LEFT JOIN nc USING (query_id), t
+    """
+
+
+@query("ann_clustered_selectivity", oracle="\nUNION ALL\n".join(
+    "SELECT * FROM (" + _clustered_selectivity_sql(b) + ") s" + str(b)
+    for b in (4, 8, 16, 64)
+))
 def q_ann_clustered_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE recall-vs-candidate-fraction curve on data with real
     neighborhood structure (VERDICT r9 #1): for bands in {4, 8, 16,
@@ -822,6 +1265,55 @@ def q_ann_clustered_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+def _clustered_ivf_kmeans_sql(k_cells: int = 25, n_iter: int = 3,
+                              n_probe: int = 2, n_queries: int = 10,
+                              topk: int = 5) -> str:
+    """ann_clustered_ivf_kmeans_recall twin: the unrolled Lloyd fit
+    (oracle_builders._kmeans_ctes) over the clustered CTE, the
+    standard probe/serve plan, then recall vs exact kNN plus the
+    candidate count (rows in probed cells, self excluded)."""
+    from .oracle_builders import _kmeans_ctes, _kmeans_means_cte
+
+    return f"""
+      WITH {_clustered_v_ctes()},{_kmeans_ctes(k_cells, n_iter)},{_kmeans_means_cte("sc", "fin")},
+      q AS (SELECT vec_id AS query_id, dvec AS qvec FROM v WHERE vec_id < {n_queries}),
+      qc AS (SELECT q.query_id, q.qvec, c.cell,
+                    list_cosine_similarity(q.qvec, c.cvec) AS csim
+             FROM q CROSS JOIN sc c),
+      probes AS (SELECT query_id, qvec, cell FROM (
+          SELECT *, row_number() OVER (PARTITION BY query_id
+                    ORDER BY csim DESC, cell ASC) AS pr FROM qc) WHERE pr <= {n_probe}),
+      s AS (SELECT p.query_id, e.vec_id AS neighbor_id,
+                   round(list_cosine_similarity(p.qvec, e.dvec), 6) AS cosine
+            FROM probes p JOIN fin e ON e.cell = p.cell
+            WHERE e.vec_id <> p.query_id),
+      r AS (SELECT *, row_number() OVER (PARTITION BY query_id
+                      ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM s),
+      ann AS (SELECT query_id, neighbor_id FROM r WHERE rank <= {topk}),
+      nc AS (SELECT p.query_id, count(*) AS n_candidates
+             FROM probes p JOIN fin e ON e.cell = p.cell
+             WHERE e.vec_id <> p.query_id GROUP BY 1),
+      xs AS (SELECT q.query_id, e.vec_id AS neighbor_id,
+                    round(list_cosine_similarity(q.qvec, e.dvec), 6) AS cosine
+             FROM q, v e WHERE e.vec_id <> q.query_id),
+      xr AS (SELECT *, row_number() OVER (PARTITION BY query_id
+                       ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM xs),
+      exact AS (SELECT query_id, neighbor_id FROM xr WHERE rank <= {topk}),
+      h AS (SELECT e.query_id, count(*) AS n_hits FROM exact e
+            JOIN ann a ON a.query_id = e.query_id
+             AND a.neighbor_id = e.neighbor_id GROUP BY 1),
+      base AS (SELECT query_id, count(*) AS n_exact FROM exact GROUP BY 1),
+      t AS (SELECT count(*) AS _n FROM v)
+      SELECT base.query_id,
+             coalesce(h.n_hits, 0) AS n_hits,
+             round(coalesce(h.n_hits, 0) / CAST(base.n_exact AS DOUBLE), 6) AS recall,
+             CAST(coalesce(nc.n_candidates, 0) AS BIGINT) AS n_candidates,
+             round(coalesce(nc.n_candidates, 0) / CAST(t._n - 1 AS DOUBLE), 6) AS cand_frac
+      FROM base LEFT JOIN h USING (query_id) LEFT JOIN nc USING (query_id), t
+    """
+
+
+@query("ann_clustered_ivf_kmeans_recall", oracle=_clustered_ivf_kmeans_sql())
 def q_ann_clustered_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall AND cost of the LEARNED-cell IVF path on the clustered
     corpus (VERDICT r9 #3: the one IVF variant that could be
@@ -876,6 +1368,7 @@ def q_ann_clustered_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
+@query("ann_recall_ivf_kmeans", oracle=_recall_block(_SQL_ANN_IVF_KMEANS))
 def q_ann_recall_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of the learned-cell (k-means) IVF path vs exact kNN on
     the standard corpus -- the missing rung of the recall ladder

@@ -1,4 +1,6 @@
-"""registry part 02: text_shaping (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""Registry queries for text analysis and training-data shaping (tokens,
+BPE, chunking, packing, vocabularies), each with its DuckDB oracle.
+"""
 
 from __future__ import annotations
 
@@ -7,6 +9,11 @@ from .shared import (
     F,
     SparkSession,
     Window,
+    _SQL_SHINGLES,
+    _SQL_TOKS,
+    _SQL_WORDCOUNT,
+    _bpe_ctes,
+    _bpe_encode_sql,
     bpe_like_token_count_col,
     corpus_from_documents,
     doc_fingerprint_cols,
@@ -17,18 +24,41 @@ from .shared import (
     with_token_array,
     word_count,
 )
-
+from .oracle_builders import _lang_hits_sql
+from .declare import query
 
 
 # ---------------------------------------------------------------------------
 # text analysis (extension surface, SURVEY.md section 2b)
 # ---------------------------------------------------------------------------
 
+
+@query("text_stats", oracle=f"""
+      SELECT doc_id,
+        CAST(len(toks) AS BIGINT) AS n_tokens,
+        CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct_tokens,
+        round(len(list_distinct(toks)) / greatest(len(toks), 1), 6) AS distinct_ratio,
+        round(coalesce(list_sum(list_transform(toks, t -> length(t))), 0)
+              / greatest(len(toks), 1), 6) AS avg_token_len,
+        round((length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))
+              / greatest(length(text), 1), 6) AS punct_ratio
+      FROM ({_SQL_TOKS})
+    """)
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = with_token_array(load_table(spark, sf_dir, "documents"))
     return docs.select("doc_id", *text_stats_cols("text", toks=F.col("toks")))
 
 
+@query("quality_score", oracle=f"""
+      SELECT doc_id, round(
+        least(len(toks) / 50.0, 1.0) * 0.35
+        + (1.0 - (length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))
+                 / greatest(length(text), 1)) * 0.25
+        + (len(list_distinct(toks)) / greatest(len(toks), 1)) * 0.2
+        + least(len(list_filter(toks, t -> t IN ('the','a','and','of','is'))) / 5.0, 1.0) * 0.2
+      , 6) AS quality
+      FROM ({_SQL_TOKS})
+    """)
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = with_token_array(load_table(spark, sf_dir, "documents"))
     return docs.select(
@@ -36,11 +66,19 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("lang_id", oracle=_lang_hits_sql())
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = with_token_array(load_table(spark, sf_dir, "documents"))
     return docs.select("doc_id", "lang", *lang_score_cols("text", toks=F.col("toks")))
 
 
+@query("token_counts", oracle=f"""
+      SELECT doc_id,
+        CAST(len(toks) AS BIGINT) AS n_ws_tokens,
+        CAST(coalesce(list_sum(list_transform(toks,
+              t -> CAST(floor((length(t) + 3) / 4.0) AS BIGINT))), 0) AS BIGINT) AS n_bpe_tokens
+      FROM ({_SQL_TOKS})
+    """)
 def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = with_token_array(load_table(spark, sf_dir, "documents"))
     return docs.select(
@@ -50,6 +88,15 @@ def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("doc_fingerprint", oracle=f"""
+      SELECT doc_id,
+        md5(trim(lower(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))) AS fp_md5,
+        sha256(trim(lower(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))) AS fp_sha256,
+        list_reduce(list_prepend(CAST(0 AS BIGINT),
+            list_transform(toks, t -> CAST(ascii(t) * length(t) AS BIGINT))),
+          (acc, v) -> (acc * 31 + v) % 1000000007) AS fp_rolling
+      FROM ({_SQL_TOKS})
+    """)
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select("doc_id", *doc_fingerprint_cols("text"))
@@ -59,6 +106,14 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # training-data shaping (chunking / packing / vocab)
 # ---------------------------------------------------------------------------
 
+
+@query("inverted_index", oracle=f"""
+      WITH s AS ({_SQL_SHINGLES}),
+      p AS (SELECT DISTINCT doc_id, unnest(shset) AS phrase FROM s)
+      SELECT phrase, count(*) AS df,
+             array_to_string(list_sort(list(doc_id)), ',') AS postings
+      FROM p GROUP BY phrase HAVING count(*) BETWEEN 2 AND 20
+    """)
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Phrase inverted index (3-token shingles, df in [2, 20]): the
     search-side generalization of word count -- phrase -> document
@@ -70,6 +125,24 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return inverted_index(load_table(spark, sf_dir, "documents"))
 
 
+@query("bigram_pmi", oracle=f"""
+      WITH t AS ({_SQL_TOKS}),
+      u AS (SELECT w, count(*) AS c
+            FROM (SELECT unnest(toks) AS w FROM t) GROUP BY w),
+      b AS (SELECT pr[1] AS w1, pr[2] AS w2, count(*) AS cnt
+            FROM (SELECT unnest(list_transform(range(1, len(toks)),
+                        i -> [toks[i], toks[i + 1]])) AS pr FROM t)
+            GROUP BY 1, 2 HAVING count(*) >= 5),
+      tot AS (SELECT CAST(sum(c) AS DOUBLE) AS n_tok_total FROM u),
+      nbt AS (SELECT CAST(sum(greatest(len(toks) - 1, 0)) AS DOUBLE) AS n_big_total
+              FROM t)
+      SELECT w1 || ' ' || w2 AS gram, CAST(cnt AS BIGINT) AS cnt,
+             round(ln((CAST(cnt AS DOUBLE) * n_tok_total * n_tok_total)
+                  / (n_big_total * CAST(c1 AS DOUBLE) * CAST(c2 AS DOUBLE))), 6) AS pmi
+      FROM b
+      JOIN (SELECT w AS w1, c AS c1 FROM u) USING (w1)
+      JOIN (SELECT w AS w2, c AS c2 FROM u) USING (w2), tot, nbt
+    """)
 def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PMI collocations over adjacent-token bigrams (count >= 5):
     phrase mining for corpus analysis. Vocab-sized joins only; the
@@ -79,6 +152,16 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigram_pmi(load_table(spark, sf_dir, "documents"))
 
 
+@query("top_terms_per_lang", oracle=f"""
+      WITH t AS ({_SQL_TOKS}),
+      cc AS (SELECT lang, word, count(*) AS cnt
+             FROM (SELECT lang, unnest(toks) AS word FROM t) GROUP BY 1, 2)
+      SELECT lang, word, cnt, rn FROM (
+        SELECT lang, word, cnt,
+               CAST(row_number() OVER (PARTITION BY lang
+                    ORDER BY cnt DESC, word ASC) AS BIGINT) AS rn
+        FROM cc) WHERE rn <= 5
+    """)
 def q_top_terms_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 most frequent terms per language: per-group top-k over
     the post-aggregation (lang, word) table with deterministic
@@ -88,6 +171,21 @@ def q_top_terms_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_terms_per_group(load_table(spark, sf_dir, "documents"))
 
 
+@query("doc_chunks", oracle=f"""
+      WITH t AS ({_SQL_TOKS}),
+      nz AS (SELECT doc_id, toks FROM t WHERE len(toks) > 0),
+      s AS (SELECT doc_id, toks,
+                   unnest(range(1, greatest(len(toks) - 1, 0) + 2, 24)) AS start1
+            FROM nz),
+      c AS (SELECT doc_id,
+                   CAST((start1 - 1) // 24 AS BIGINT) AS chunk_id,
+                   list_slice(toks, start1, start1 + 31) AS chunk
+            FROM s)
+      SELECT doc_id, chunk_id,
+             CAST(len(chunk) AS BIGINT) AS n_tokens,
+             array_to_string(chunk, ' ') AS chunk_text
+      FROM c
+    """)
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding token-window chunking (32-token windows, stride 24)."""
     from ..operators.chunking import doc_chunks
@@ -95,6 +193,26 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_chunks(load_table(spark, sf_dir, "documents"))
 
 
+@query("pack_sequences", oracle="""
+      WITH n AS (
+        SELECT doc_id, source,
+               CAST(coalesce(list_sum(list_transform(
+                 list_filter(string_split_regex(trim(lower(
+                   regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g'))), '\\s+'),
+                   w -> w <> ''),
+                 t -> CAST(floor((length(t) + 3) / 4.0) AS BIGINT))), 0) AS BIGINT) AS n_tokens
+        FROM documents),
+      p AS (
+        SELECT doc_id, source, n_tokens,
+               CAST(coalesce(sum(n_tokens) OVER (PARTITION BY source
+                    ORDER BY doc_id ASC
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prefix
+        FROM n)
+      SELECT doc_id, source, n_tokens,
+             CAST(prefix // 256 AS BIGINT) AS bin_id,
+             CAST(prefix % 256 AS BIGINT) AS offset
+      FROM p
+    """)
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-shard sequential sequence packing into 256-token blocks."""
     from ..operators.chunking import pack_sequences
@@ -102,6 +220,14 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_sequences(load_table(spark, sf_dir, "documents"))
 
 
+@query("ngram_counts", oracle=f"""
+      WITH t AS ({_SQL_TOKS}),
+      g AS (SELECT unnest(list_transform(range(1, len(toks)),
+                   i -> toks[i] || ' ' || toks[i + 1])) AS gram
+            FROM t)
+      SELECT gram, count(*) AS cnt FROM g GROUP BY gram
+      ORDER BY cnt DESC, gram ASC LIMIT 100
+    """)
 def q_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-100 corpus bigrams (all occurrences, not per-doc distinct):
     the n-gram LM statistics pass. Uses the shuffle-free flat shingle
@@ -118,6 +244,14 @@ def q_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SQL_VOCAB_IDS = f"""
+      SELECT word, cnt,
+             CAST(row_number() OVER (ORDER BY cnt DESC, word ASC) AS BIGINT) AS vocab_id
+      FROM ({_SQL_WORDCOUNT}) WHERE cnt >= 5
+    """
+
+
+@query("vocab_ids", oracle=_SQL_VOCAB_IDS)
 def q_vocab_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary construction: words with count >= 5, ranked into
     contiguous ids by (cnt desc, word asc). The global window runs
@@ -133,6 +267,10 @@ def q_vocab_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the *_scalable variants are plan-level rewrites (distributed exact
+# ranking) of the same queries -- sharing the oracle is the point:
+# the hash match proves the rewrite exact
+@query("vocab_ids_scalable", oracle=_SQL_VOCAB_IDS)
 def q_vocab_ids_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """vocab_ids without the unpartitioned rank window: exact ids
     from operators/ranking.with_global_row_number (two-level bucketed
@@ -148,6 +286,16 @@ def q_vocab_ids_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.select("word", "cnt", F.col("vocab_id").cast("long").alias("vocab_id"))
 
 
+@query("training_shuffle_order", oracle="""
+  WITH h AS (
+    SELECT doc_id,
+           CAST(concat('0x', substr(md5(concat('shuf1:',
+                CAST(doc_id AS VARCHAR))), 1, 8)) AS BIGINT) AS hk
+    FROM documents)
+  SELECT doc_id, hk,
+         row_number() OVER (ORDER BY hk ASC, doc_id ASC) AS position
+  FROM h
+""")
 def q_training_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded deterministic global shuffle of the training corpus --
     the epoch-ordering primitive of every pretraining run: each doc's
@@ -179,6 +327,11 @@ def q_training_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_MERGES = 4
 
 
+@query("bpe_pair_counts", oracle=f"""
+      WITH {_bpe_ctes(1)}
+      SELECT l AS "left", r AS "right", cnt AS pair_freq
+      FROM p0 ORDER BY pair_freq DESC, "left", "right" LIMIT 50
+    """)
 def q_bpe_pair_counts(spark: SparkSession, sf_dir: str, topn: int = 50) -> DataFrame:
     """The BPE-trainer kernel: adjacent-symbol pair frequencies over
     the word-frequency table (corpus scanned once; the pair stage runs
@@ -195,6 +348,15 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str, topn: int = 50) -> DataF
     )
 
 
+@query("bpe_merges", oracle=f"""
+      WITH {_bpe_ctes(BPE_MERGES)}
+      SELECT * FROM (
+        {" UNION ALL ".join(
+            f'SELECT CAST({i + 1} AS BIGINT) AS "rank", l AS "left", r AS "right", '
+            f'l || r AS merged, cnt AS pair_freq FROM b{i}'
+            for i in range(BPE_MERGES))}
+      ) ORDER BY "rank"
+    """)
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative BPE training (Sennrich et al. 2016): BPE_MERGES
     greedy merge rounds; each round re-counts pairs over the merged
@@ -208,6 +370,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("rank")
 
 
+@query("bpe_encode", oracle=_bpe_encode_sql(BPE_MERGES))
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply the trained merges to every document: per-doc real BPE
     token count next to the whitespace count. The k learned merges are

@@ -311,9 +311,11 @@ def test_registry_has_no_shadowed_bindings():
     SHADOWS the first binding (it happened: a new def
     q_stratified_sample replaced the pre-existing alias to
     analytics.stratified_sample, changing a registered query's
-    semantics without any error), and a duplicate literal key in the
-    QUERIES dict silently drops an entry. Both are structural
-    mistakes the language won't flag -- so the contract does."""
+    semantics without any error), and a query name declared twice --
+    in two @query registrations or twice in the QUERY_ORDER tuple --
+    would drop or replace an entry. Both are structural mistakes the
+    language won't flag -- so the contract does (the registry also
+    raises on them at import)."""
     import ast
     import collections
     import glob
@@ -330,7 +332,7 @@ def test_registry_has_no_shadowed_bindings():
     )
     assert part_paths, "registry package parts not found"
     names = []
-    dict_nodes = []
+    declared = {"@query registrations": [], "QUERY_ORDER": []}
     for path in part_paths:
         if path.endswith("__init__.py"):
             continue  # pure re-exports of the parts' own bindings
@@ -342,29 +344,35 @@ def test_registry_has_no_shadowed_bindings():
                 for t in node.targets:
                     if isinstance(t, ast.Name):
                         names.append(t.id)
+                        if t.id == "QUERY_ORDER" and isinstance(
+                            node.value, ast.Tuple
+                        ):
+                            declared["QUERY_ORDER"] += [
+                                e.value for e in node.value.elts
+                            ]
             elif isinstance(node, ast.AnnAssign) and isinstance(
                 node.target, ast.Name
             ):
                 names.append(node.target.id)
-                if node.target.id in ("QUERIES", "ORACLES") and isinstance(
-                    node.value, ast.Dict
-                ):
-                    dict_nodes.append(node)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "query"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+            ):
+                declared["@query registrations"].append(node.args[0].value)
     dups = sorted(
         n for n, c in collections.Counter(names).items() if c > 1
     )
     assert dups == [], f"registry package binds these names twice: {dups}"
-    assert dict_nodes, "QUERIES/ORACLES dict literals not found"
-    for node in dict_nodes:
-        keys = [
-            k.value for k in node.value.keys if isinstance(k, ast.Constant)
-        ]
+    for label, keys in declared.items():
+        assert keys, f"{label} not found"
         dup_keys = sorted(
             k for k, c in collections.Counter(keys).items() if c > 1
         )
-        assert dup_keys == [], (
-            f"{node.target.id} literal repeats keys: {dup_keys}"
-        )
+        assert dup_keys == [], f"{label} repeat names: {dup_keys}"
 
 
 def test_canary_set_is_pinned_append_only():

@@ -109,6 +109,25 @@ def test_dq_audit_fires_on_known_defects(spark, sf_smoke):
     assert rows["orders_fk_customer"].n_checked == n_orders
 
 
+def test_dq_audit_on_empty_tables_reports_zeros(spark, sf_smoke, tmp_path):
+    """Every check of an audit over empty tables checks 0 rows and
+    finds 0 violations (an ungrouped sum over no rows is NULL, not 0),
+    as the DuckDB oracle says."""
+    import pyarrow.parquet as pq
+
+    from mapreduce_implementation_grpc_spark.sources.catalog import TABLES
+    from tests.oracle_utils import assert_matches_oracle
+
+    for t in TABLES:
+        table = pq.read_table(f"{sf_smoke}/{t}.parquet")
+        pq.write_table(table.slice(0, 0), str(tmp_path / f"{t}.parquet"))
+    out = registry.QUERIES["dq_audit"](spark, str(tmp_path))
+    rows = out.collect()
+    assert len(rows) == 17
+    assert [r.check_name for r in rows if (r.n_checked, r.n_violations) != (0, 0)] == []
+    assert_matches_oracle(out, registry.ORACLES["dq_audit"], str(tmp_path))
+
+
 def test_dq_monitor_sink_totals_and_replay(spark, tmp_path):
     """Streaming DQ monitor: totals equal the batch predicates over
     everything streamed, and a crashed-batch replay (same batch_id)
